@@ -12,12 +12,54 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
+import random
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+PROVINCES = {
+    "Jiangsu": ("Nanjing", "Suzhou"),
+    "Hubei": ("Wuhan", "Jingzhou"),
+    "Hunan": ("Changsha", "Xiangtan"),
+    "Henan": ("Zhengzhou", "Luoyang"),
+    "Hebei": ("Shijiazhuang", "Tangshan"),
+}
+#: Event time starts one simulated minute before midnight so a run spans two
+#: date partitions; simulated time runs SIM_SPEED times faster than wall time.
+SIM_START_MS = 1543708740000  # 2018-12-01 23:59:00 UTC
+SIM_SPEED = 20
+HEAVY_USERS = 20  # users 0..19 click often enough to be blacklisted
+N_USERS = 100_000
+LATE_SHARE = 0.05  # records whose event time is up to two simulated minutes old
 
-from inputs import ad_click_lines, write_atomic  # noqa: E402
+
+def ad_click_lines(seed: int, file_no: int, records: int, interval_s: float) -> list[str]:
+    """FIXTURES §6 records of file ``file_no``: 'ts province city userid
+    adid', event time advancing with the file schedule, a few out of order,
+    2% of clicks from the heavy users. The same seed gives the same lines."""
+    rng = random.Random(seed * 1_000_003 + file_no)
+    base = SIM_START_MS + int(file_no * interval_s * 1000 * SIM_SPEED)
+    step = interval_s * 1000 * SIM_SPEED / records
+    provinces = sorted(PROVINCES)
+    lines = []
+    for i in range(records):
+        ts = base + int(i * step)
+        if rng.random() < LATE_SHARE:
+            ts -= rng.randint(0, 120_000)
+        province = rng.choice(provinces)
+        city = rng.choice(PROVINCES[province])
+        user = (
+            rng.randrange(HEAVY_USERS) if rng.random() < 0.02 else rng.randrange(N_USERS)
+        )
+        lines.append(f"{ts} {province} {city} {user} {rng.randrange(10)}")
+    return lines
+
+
+def write_atomic(path: str, lines: list[str]) -> None:
+    """Write then rename, so the file source never lists a partial file
+    (it skips names starting with '.')."""
+    tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path) + ".tmp")
+    with open(tmp, "w") as fh:
+        fh.write("\n".join(lines) + "\n")
+    os.rename(tmp, path)
 
 
 def main() -> None:

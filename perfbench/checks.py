@@ -3,6 +3,8 @@ code with the engine:
 
 - registry queries: their DuckDB ``ORACLES`` entry, compared by the canon and
   value hash of ``scripts/driver_sim.py``;
+- runner tasks: DuckDB SQL over the same native parquet, written for the
+  task's own parameters, compared row by row with what the sink wrote;
 - the ad stream: a pure-Python replay of the checkpoint's per-batch file
   lists, compared with the final state tables.
 """
@@ -10,6 +12,7 @@ code with the engine:
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 from collections import Counter
@@ -45,6 +48,96 @@ def sf_connection(sf_dir: str, tables: list[str]) -> duckdb.DuckDBPyConnection:
     for t in tables:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
+
+
+# ------------------------------------------------------------ runner tasks --
+
+def canon(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, float):
+        return "NaN" if math.isnan(v) else repr(v)
+    return str(v)
+
+
+def native_connection(native_dir: str) -> duckdb.DuckDBPyConnection:
+    con = duckdb.connect()
+    for t in os.listdir(native_dir):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{native_dir}/{t}/*.parquet'")
+    return con
+
+
+def page_task_sql(start: str, end: str, flow: list[int]) -> str:
+    """Job 2: the chained one-step conversion rates of ``flow``."""
+    targets = [f"{a}_{b}" for a, b in zip(flow, flow[1:])]
+    values = ", ".join(f"('{t}', {i})" for i, t in enumerate(targets))
+    return f"""
+WITH scanned AS (
+    SELECT *, strptime(action_time, '%Y-%m-%d %H:%M:%S') AS ts
+    FROM user_visit_action WHERE date BETWEEN '{start}' AND '{end}'
+),
+splits AS (
+    SELECT CAST(lag(page_id) OVER w AS VARCHAR) || '_' || CAST(page_id AS VARCHAR) AS split
+    FROM scanned
+    WINDOW w AS (PARTITION BY session_id ORDER BY ts, page_id)
+),
+counts AS (
+    SELECT split, count(*) AS split_pv FROM splits
+    WHERE split IN ({", ".join(f"'{t}'" for t in targets)}) GROUP BY split
+),
+start_pv AS (SELECT count(*) AS pv FROM scanned WHERE page_id = {flow[0]}),
+targets(split, ord) AS (VALUES {values}),
+chained AS (
+    SELECT t.split, COALESCE(c.split_pv, 0) AS split_pv,
+           lag(COALESCE(c.split_pv, 0)) OVER (ORDER BY t.ord) AS prev_pv
+    FROM targets t LEFT JOIN counts c USING (split)
+)
+SELECT ch.split, ch.split_pv, round(ch.split_pv / COALESCE(ch.prev_pv, s.pv), 2) AS convert_rate
+FROM chained ch CROSS JOIN start_pv s
+"""
+
+
+def area_task_sql(start: str, end: str) -> str:
+    """Job 3: per area, the three most clicked products."""
+    return f"""
+WITH grouped AS (
+    SELECT ci.area, v.click_product_id AS product_id, count(*) AS click_count,
+           string_agg(DISTINCT CAST(v.city_id AS VARCHAR) || ':' || ci.city_name, ','
+                      ORDER BY CAST(v.city_id AS VARCHAR) || ':' || ci.city_name) AS city_infos
+    FROM user_visit_action v JOIN city_info ci ON v.city_id = ci.city_id
+    WHERE v.date BETWEEN '{start}' AND '{end}' AND v.click_product_id IS NOT NULL
+    GROUP BY ci.area, v.click_product_id
+),
+ranked AS (
+    SELECT *, row_number() OVER (PARTITION BY area ORDER BY click_count DESC, product_id) AS rnk
+    FROM grouped
+)
+SELECT r.area,
+       CASE WHEN r.area IN ('East', 'North') THEN 'A Level'
+            WHEN r.area IN ('South', 'Central') THEN 'B Level'
+            WHEN r.area IN ('Northwest', 'Southwest') THEN 'C Level'
+            ELSE 'D Level' END AS area_level,
+       r.product_id, r.click_count, r.city_infos, p.product_name,
+       CASE WHEN CAST(json_extract_string(p.extend_info, '$.product_status') AS INTEGER) = 0
+            THEN 'Self' ELSE 'Third Party' END AS product_status,
+       r.rnk
+FROM ranked r JOIN product_info p USING (product_id)
+WHERE r.rnk <= 3
+"""
+
+
+def sorted_rows(tbl) -> tuple[list[str], list[tuple]]:
+    cols = sorted(tbl.column_names)
+    pyd = tbl.to_pydict()
+    return cols, sorted(tuple(canon(pyd[c][i]) for c in cols) for i in range(tbl.num_rows))
+
+
+def task_matches(con: duckdb.DuckDBPyConnection, written: str, sql: str) -> bool:
+    """Whether the parquet dataset the sink wrote at ``written`` holds
+    exactly the rows of ``sql``, and at least one."""
+    actual = sorted_rows(con.execute(f"SELECT * FROM '{written}/*.parquet'").fetch_arrow_table())
+    expected = sorted_rows(con.execute(sql).fetch_arrow_table())
+    return actual == expected and len(actual[1]) > 0
 
 
 # --------------------------------------------------------------- ad stream --

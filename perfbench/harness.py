@@ -68,17 +68,24 @@ def rss_bytes(pid: int) -> int:
     return int(st[21]) * PAGE if st else 0
 
 
-def pyworker_cpu_s(root: int) -> float:
-    """User+system CPU of the PySpark worker processes under ``root``,
+def pyworker_cpu(root: int) -> dict[int, float]:
+    """User+system CPU seconds of each PySpark worker process under ``root``,
     including workers that already exited into their daemon (cutime)."""
-    total = 0
+    out = {}
     for pid in descendants(root):
-        if "pyspark.daemon" not in _cmdline(pid) and "pyspark.worker" not in _cmdline(pid):
+        cmd = _cmdline(pid)
+        if "pyspark.daemon" not in cmd and "pyspark.worker" not in cmd:
             continue
         st = _stat(pid)
         if st:
-            total += sum(int(x) for x in st[11:15])
-    return total / CLK_TCK
+            out[pid] = sum(int(x) for x in st[11:15]) / CLK_TCK
+    return out
+
+
+def cpu_delta(before: dict[int, float], after: dict[int, float]) -> float:
+    """CPU the workers alive at ``after`` used since ``before``; a worker
+    that exited in between is not counted."""
+    return sum(v - before.get(pid, 0.0) for pid, v in after.items())
 
 
 class RssSampler:
@@ -123,11 +130,11 @@ class RssSampler:
 def tail(values: list[float]) -> tuple[float, float, int]:
     """The highest percentile with at least ten samples beyond it: the
     11th-largest value, at percentile 100 * (n - 10) / n. Returns (value,
-    percentile, sample count). With ten or fewer samples no percentile
-    qualifies and the maximum is returned (percentile 100)."""
+    percentile, sample count). With 20 or fewer samples that percentile is
+    not above the median, so the maximum is returned (percentile 100)."""
     n = len(values)
     ordered = sorted(values)
-    if n <= 10:
+    if n <= 20:
         return ordered[-1], 100.0, n
     return ordered[n - 11], 100.0 * (n - 10) / n, n
 

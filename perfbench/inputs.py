@@ -4,14 +4,15 @@
   ``events`` and ``customer`` follow the sf0.1 profile; every other table is
   written empty with its schema, because the session workload reads only
   these two and ``Engine`` registers all ten.
-- ``ad_click_lines``: the FIXTURES §6 ad-click records of one file of the
-  open-loop stream; ``adgen.py`` writes the files on a schedule.
+- ``write_native_tables``: the reference's native clickstream tables from
+  ``sources.mockdata.mock_user_visit_data``, as parquet, for the runner tasks.
+
+The ad-click stream's records are generated by ``adgen.py``.
 """
 
 from __future__ import annotations
 
 import os
-import random
 
 import numpy as np
 import pyarrow as pa
@@ -86,50 +87,41 @@ def write_sf_tables(
     return out
 
 
-# ---------------------------------------------------------- ad-click stream --
-
-PROVINCES = {
-    "Jiangsu": ("Nanjing", "Suzhou"),
-    "Hubei": ("Wuhan", "Jingzhou"),
-    "Hunan": ("Changsha", "Xiangtan"),
-    "Henan": ("Zhengzhou", "Luoyang"),
-    "Hebei": ("Shijiazhuang", "Tangshan"),
-}
-#: Event time starts one simulated minute before midnight so a run spans two
-#: date partitions; simulated time runs SIM_SPEED times faster than wall time.
-SIM_START_MS = 1543708740000  # 2018-12-01 23:59:00 UTC
-SIM_SPEED = 20
-HEAVY_USERS = 20  # users 0..19 click often enough to be blacklisted
-N_USERS = 100_000
-LATE_SHARE = 0.05  # records whose event time is up to two simulated minutes old
+def parquet_size(path: str) -> tuple[int, int]:
+    """(rows, bytes) of the parquet files under ``path``, from their footers."""
+    rows = size = 0
+    for d, _, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                rows += pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+                size += os.path.getsize(os.path.join(d, f))
+    return rows, size
 
 
-def ad_click_lines(seed: int, file_no: int, records: int, interval_s: float) -> list[str]:
-    """Records of file ``file_no``: 'ts province city userid adid', event
-    time advancing with the file schedule, a few out of order, 2% of clicks
-    from the heavy users."""
-    rng = random.Random(seed * 1_000_003 + file_no)
-    base = SIM_START_MS + int(file_no * interval_s * 1000 * SIM_SPEED)
-    step = interval_s * 1000 * SIM_SPEED / records
-    provinces = sorted(PROVINCES)
-    lines = []
-    for i in range(records):
-        ts = base + int(i * step)
-        if rng.random() < LATE_SHARE:
-            ts -= rng.randint(0, 120_000)
-        province = rng.choice(provinces)
-        city = rng.choice(PROVINCES[province])
-        user = (
-            rng.randrange(HEAVY_USERS) if rng.random() < 0.02 else rng.randrange(N_USERS)
+class _TableRecorder:
+    """Takes the place of the SparkSession ``mock_user_visit_data`` is given:
+    its ``createDataFrame`` keeps the rows and schema, which are then written
+    with pyarrow. The rows are the generator's own; no Spark job runs."""
+
+    TYPES = {"StringType": pa.string(), "LongType": pa.int64(), "IntegerType": pa.int32()}
+
+    def createDataFrame(self, rows: list[tuple], schema) -> pa.Table:  # noqa: N802
+        cols = list(zip(*rows))
+        return pa.table(
+            {f.name: pa.array(col, self.TYPES[type(f.dataType).__name__]) for f, col in zip(schema.fields, cols)}
         )
-        lines.append(f"{ts} {province} {city} {user} {rng.randrange(10)}")
-    return lines
 
 
-def write_atomic(path: str, lines: list[str]) -> None:
-    """Write then rename, so the file source never lists a partial file
-    (it skips names starting with '.')."""
-    tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path) + ".tmp")
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.rename(tmp, path)
+def write_native_tables(out_dir: str, seed: int, n_users: int) -> dict[str, tuple[int, int]]:
+    """Write ``mock_user_visit_data(seed=seed)`` (user_visit_action,
+    user_info, product_info, city_info) as one parquet dataset per table;
+    returns {table: (rows, bytes)}."""
+    from log_analysis_system_spark.sources.mockdata import mock_user_visit_data
+
+    out = {}
+    for name, table in mock_user_visit_data(_TableRecorder(), n_users=n_users, seed=seed).items():
+        path = os.path.join(out_dir, name)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-0.parquet"))
+        out[name] = parquet_size(path)
+    return out

@@ -22,6 +22,7 @@ import time
 T0 = time.time()  # set-up is timed from here: interpreter start to this line is ~30 ms
 
 import argparse  # noqa: E402
+import datetime  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
@@ -33,6 +34,7 @@ sys.dont_write_bytecode = True
 sys.path[:0] = [ROOT, os.path.join(ROOT, "scripts")]
 
 import harness  # noqa: E402
+from inputs import parquet_size  # noqa: E402
 
 E2E_UNITS = {
     "setup_s": "s",
@@ -62,8 +64,13 @@ LAYER_UNITS = {
     "shuffle.read_bytes": "bytes",
     "exec.spill_bytes": "bytes",
     "exec.result_bytes": "bytes",
+    "spark.busy_s": "s",
+    "runner.submit_s": "s",
     "sinks.write_s": "s",
+    "sinks.rows": "count",
+    "sinks.bytes": "bytes",
     "streaming.batch_s": "s",
+    "streaming.wait_s": "s",
     **{
         f"streaming.trigger.{p}_ms": "ms"
         for p in ("latestOffset", "getBatch", "queryPlanning", "addBatch", "walCommit", "triggerExecution")
@@ -85,6 +92,8 @@ def start_spark(work: str, trace: bool):
     from log_analysis_system_spark.session import get_spark
 
     conf = {
+        # Below the engine's 8g default: with 8g the heap grows by a different
+        # amount in each run, and peak_rss_mb spread by a third between seeds.
         "spark.driver.memory": "2g",
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
@@ -139,55 +148,123 @@ def e2e(ops: list, ad: bool) -> tuple[dict[str, float], tuple[float, int]]:
     )
 
 
+ACTION_SPANS = ("spark.execute", "sinks.write")
+TRIGGER_PHASES = ("latestOffset", "getBatch", "queryPlanning", "addBatch", "walCommit", "triggerExecution")
+
+
+def split_jobs(span, log) -> tuple[float, float]:
+    """(busy, gap): the part of ``span`` during which a Spark job submitted
+    in it was running (event-log clock), and the rest."""
+    jobs = log.submitted(span.start - 0.005, span.end)
+    busy = harness.covered([(j.start, j.end or span.end) for j in jobs], span.start, span.end)
+    return busy, span.dur - busy
+
+
+def epoch_s(iso: str) -> float:
+    return datetime.datetime.fromisoformat(iso.replace("Z", "+00:00")).timestamp()
+
+
 def layer_metrics(ctx, wl, traced_ops: list, untraced_ops: list, ad: bool) -> tuple[dict, list, list]:
-    """Per-layer numbers of the traced window, and the ops (closed loop) or
-    micro-batches (open loop) whose layers do not sum to their wall time."""
-    tr = ctx.tracer
+    """Per-layer numbers of the traced window, and the ops, micro-batches and
+    files whose reported layer figures do not add up to their wall time."""
     m = {k: 0.0 for k in LAYER_UNITS}
     m.update({k: ctx.phases.get(k, 0.0) for k in ("session.start_s", "sources.generate_s", "engine.init_s", "warmup_s")})
     m["inputs.rows"] = float(sum(r for r, _ in ctx.inputs.values()))
     m["inputs.bytes"] = float(sum(b for _, b in ctx.inputs.values()))
-    n_ops = max(1, len(traced_ops))
-    by_op = tr.by_op()
-    unit_name = "streaming.batch" if ad else "op"
-    units = [s for s in tr.spans if s.name == unit_name]
-    n_units = max(1, len(units))
-
-    for spans in by_op.values():
-        st = harness.self_times(spans)
-        m["queries.build_s"] += st.get("queries.build", 0.0) / n_ops
-        for s in spans:
-            if s.name == "catalyst.plan":
-                m["catalyst.plan_s"] += s.dur / n_ops
-            elif s.name == "sinks.write":
-                m["sinks.write_s"] += s.dur / n_units
-            elif s.name == "streaming.batch":
-                m["streaming.batch_s"] += s.dur / n_units
-    m["pyworker.cpu_s"] = ctx.pyworker_s / n_ops
-
     log = harness.EventLog.read(os.path.join(ctx.work, "eventlog"))
-    per_unit = []
-    for u in units:
-        jobs = log.submitted(u.start - 0.005, u.end)
-        busy = harness.covered([(j.start, j.end or u.end) for j in jobs], u.start, u.end)
-        m["driver.gap_s"] += (u.dur - busy) / n_units
-        for k, v in log.totals(jobs).items():
-            m[k] += v / n_units
-        per_unit.append({"unit": u.op, "wall_s": u.dur, "jobs_busy_s": busy, "jobs": len(jobs)})
+    by_op = ctx.tracer.by_op()
+    per_unit, unreconciled = [], []
 
-    unreconciled = []
-    if ad:
-        traced_batches = {int(u.op.removeprefix("batch")) for u in units}
-        prog = [p for p in wl.progress if p["batchId"] in traced_batches]
-        for p in prog:
-            d = p["durationMs"]
-            for phase in ("latestOffset", "getBatch", "queryPlanning", "addBatch", "walCommit", "triggerExecution"):
-                m[f"streaming.trigger.{phase}_ms"] += d.get(phase, 0) / max(1, len(prog))
-            m["streaming.rows_per_batch"] += p["numInputRows"] / max(1, len(prog))
-            parts = sum(v for k, v in d.items() if k != "triggerExecution")
-            if abs(d["triggerExecution"] - parts) > RECONCILE_TOLERANCE * d["triggerExecution"]:
-                unreconciled.append(f"batch{p['batchId']}: trigger {d['triggerExecution']} ms, phases {parts} ms")
-        m["streaming.batches"] = float(len(prog))
+    def mean(key: str, values: list[float]) -> None:
+        m[key] = sum(values) / len(values) if values else 0.0
+
+    if not ad:
+        # Each op's wall time splits into the reported layer figures: the
+        # self time of the build, plan and submit spans, and each action
+        # span (the noop write, the sink write) as Spark-job busy time plus
+        # driver gap. Time outside every span is unattributed.
+        rows = []
+        for op in traced_ops:
+            spans = by_op.get(op.op_id, [])
+            st = harness.self_times(spans)
+            row = {
+                "queries.build_s": st.get("queries.build", 0.0),
+                "catalyst.plan_s": st.get("catalyst.plan", 0.0),
+                "runner.submit_s": st.get("runner.submit", 0.0),
+                "spark.busy_s": 0.0,
+                "driver.gap_s": 0.0,
+            }
+            for s in spans:
+                if s.name in ACTION_SPANS:
+                    busy, gap = split_jobs(s, log)
+                    row["spark.busy_s"] += busy
+                    row["driver.gap_s"] += gap
+            wall = op.end - op.start
+            layers = sum(row.values())
+            if abs(wall - layers) > RECONCILE_TOLERANCE * wall:
+                unreconciled.append(f"{op.op_id} {op.kind}: wall {wall:.3f} s, layers {layers:.3f} s")
+            row.update(log.totals(log.submitted(op.start - 0.005, op.end)))
+            row["sinks.write_s"] = st.get("sinks.write", 0.0)
+            if op.op_id in wl.tasks:
+                row["sinks.rows"], row["sinks.bytes"] = map(float, parquet_size(wl.tasks[op.op_id][2]))
+            rows.append(row)
+            per_unit.append({"unit": op.op_id, "kind": op.kind, "wall_s": wall, **row})
+        tasks = [r for r, op in zip(rows, traced_ops) if op.op_id in wl.tasks]
+        queries = [r for r, op in zip(rows, traced_ops) if op.op_id not in wl.tasks]
+        for key in ("runner.submit_s", "sinks.write_s", "sinks.rows", "sinks.bytes"):
+            mean(key, [r[key] for r in tasks])
+        mean("queries.build_s", [r["queries.build_s"] for r in queries])
+        for key in ("catalyst.plan_s", "spark.busy_s", "driver.gap_s", *harness.TASK_FIELDS,
+                    "spark.jobs", "spark.stages", "spark.tasks"):
+            mean(key, [r[key] for r in rows])
+        m["pyworker.cpu_s"] = ctx.pyworker_s / max(1, len(traced_ops))
+    else:
+        # A micro-batch's triggerExecution (Spark's clock) splits into the
+        # foreachBatch call (streaming.batch, this process's clock) and the
+        # trigger's other phases; a file's latency into its wait for the
+        # trigger that read it and that trigger's triggerExecution.
+        progress = {p["batchId"]: p for p in wl.progress}
+        batches = [s for s in ctx.tracer.spans if s.name == "streaming.batch"]
+        rows = []
+        for b in batches:
+            bid = int(b.op.removeprefix("batch"))
+            busy, gap = split_jobs(b, log)
+            row = {"streaming.batch_s": b.dur, "spark.busy_s": busy, "driver.gap_s": gap}
+            row["sinks.write_s"] = sum(s.dur for s in by_op.get(b.op, []) if s.name == "sinks.write")
+            row.update(log.totals(log.submitted(b.start - 0.005, b.end)))
+            p = progress.get(bid)
+            if p is not None:
+                d = p["durationMs"]
+                row.update({f"streaming.trigger.{k}_ms": float(d.get(k, 0)) for k in TRIGGER_PHASES})
+                row["streaming.rows_per_batch"] = float(p["numInputRows"])
+                other = sum(v for k, v in d.items() if k not in ("addBatch", "triggerExecution"))
+                layers = b.dur * 1e3 + other
+                if abs(d["triggerExecution"] - layers) > RECONCILE_TOLERANCE * d["triggerExecution"]:
+                    unreconciled.append(
+                        f"batch{bid}: triggerExecution {d['triggerExecution']} ms, layers {layers:.0f} ms"
+                    )
+            else:
+                unreconciled.append(f"batch{bid}: no progress report")
+            rows.append(row)
+            per_unit.append({"unit": b.op, "wall_s": b.dur, **row})
+        for key in ("streaming.batch_s", "spark.busy_s", "driver.gap_s", "sinks.write_s",
+                    *harness.TASK_FIELDS, "spark.jobs", "spark.stages", "spark.tasks",
+                    *(f"streaming.trigger.{k}_ms" for k in TRIGGER_PHASES), "streaming.rows_per_batch"):
+            mean(key, [r.get(key, 0.0) for r in rows])
+        m["streaming.batches"] = float(len(batches))
+        m["pyworker.cpu_s"] = ctx.pyworker_s / max(1, len(batches))
+        batch_of = {os.path.basename(path): bid for path, bid in wl.batch_of.items()}
+        waits = []
+        for op in traced_ops:
+            p = progress.get(batch_of.get(op.op_id, -1))
+            if not op.ok or p is None:
+                continue
+            wait = epoch_s(p["timestamp"]) - op.start
+            waits.append(wait)
+            lat, layers = op.end - op.start, wait + p["durationMs"]["triggerExecution"] / 1e3
+            if abs(lat - layers) > RECONCILE_TOLERANCE * lat:
+                unreconciled.append(f"{op.op_id}: latency {lat:.3f} s, wait + trigger {layers:.3f} s")
+        mean("streaming.wait_s", waits)
         files = [os.path.join(d, f) for d, _, fs in os.walk(wl.state_dir) for f in fs]
         m["streaming.state_files"] = float(len(files))
         m["streaming.state_bytes"] = float(sum(os.path.getsize(f) for f in files))
@@ -197,17 +274,6 @@ def layer_metrics(ctx, wl, traced_ops: list, untraced_ops: list, ad: bool) -> tu
         traced_files = {op.op_id for op in traced_ops}
         late = [e["done"] - e["due"] for e in wl.gen_log if os.path.basename(e["file"]) in traced_files]
         m["gen.late_s"] = max(late) if late else 0.0
-    else:
-        # An op's own self time is the part of its wall time no layer span
-        # covers: the benchmark's bookkeeping between layer calls.
-        for op in traced_ops:
-            spans = by_op.get(op.op_id, [])
-            wall = sum(s.dur for s in spans if s.name == "op")
-            unaccounted = harness.self_times(spans).get("op", 0.0)
-            if unaccounted > RECONCILE_TOLERANCE * wall:
-                unreconciled.append(
-                    f"{op.op_id} {op.kind}: wall {wall:.3f} s, layers {wall - unaccounted:.3f} s"
-                )
     p50_traced = e2e(traced_ops, ad)[0]["latency_p50_s"]
     p50_plain = e2e(untraced_ops, ad)[0]["latency_p50_s"]
     m["trace.overhead_ratio"] = p50_traced / p50_plain - 1.0
@@ -255,21 +321,20 @@ def main() -> int:
         ctx.phases["session.start_s"] = time.time() - t
         wl = workloads.WORKLOADS[args.workload](ctx)
         wl.setup()
-        setup_s = time.time() - T0
         windows = [(args.seconds, False)] + ([(args.seconds, True)] if trace else [])
         results = wl.run(windows)
-        wl.finish()
-        stop_spark(spark)
-        spark = None
         sampler.stop()
         host["load_end"] = harness.loadavg()
-
         ops = [op for window in results for op in window]
         good = wl.check(ops)  # untimed
+        wl.finish()
+        stop_spark(spark)  # flushes the event log
+        spark = None
+
         ad = args.workload == "ad_realtime"
         failed = [op for op in ops if not op.ok or not good[op.op_id]]
         e2e_m, (pct, n) = e2e(results[0], ad)
-        e2e_m["setup_s"] = setup_s
+        e2e_m["setup_s"] = min(op.start for op in results[0]) - T0
         e2e_m["peak_rss_mb"] = sampler.peak / 2**20
 
         print(f"host nproc={host['nproc']} loadavg_start={host['load_start']:.2f} loadavg_end={host['load_end']:.2f}")
