@@ -131,12 +131,13 @@ def tail(values: list[float]) -> tuple[float, float, int]:
     """The highest percentile with at least ten samples beyond it: the
     11th-largest value, at percentile 100 * (n - 10) / n. Returns (value,
     percentile, sample count). With 20 or fewer samples that percentile is
-    not above the median, so the maximum is returned (percentile 100)."""
+    not above the median, so the highest percentile with one sample beyond
+    it is returned instead: the second-largest value, which one slow op
+    cannot move."""
     n = len(values)
     ordered = sorted(values)
-    if n <= 20:
-        return ordered[-1], 100.0, n
-    return ordered[n - 11], 100.0 * (n - 10) / n, n
+    beyond = min(10 if n > 20 else 1, n - 1)
+    return ordered[n - 1 - beyond], 100.0 * (n - beyond) / n, n
 
 
 def median(values: list[float]) -> float:

@@ -342,6 +342,9 @@ def main() -> int:
             print(f"phase {name} = {value:.3f} s")
         for name, (rows, size) in sorted(ctx.inputs.items()):
             print(f"input {name} rows={rows} bytes={size}")
+        for i, window in enumerate(results):
+            for op in window:
+                print(f"op window={i} {op.op_id} {op.kind} {op.end - op.start:.3f} s")
         for op in failed:
             print(f"failed {op.op_id} {op.kind} {op.error or 'wrong result'}")
         print(f"failed_ratio = {len(failed) / len(ops):.4f} ratio ({len(failed)}/{len(ops)} ops)")

@@ -80,9 +80,11 @@ class SessionQueries:
     returns. An op is a registry query (``Engine.query`` through a ``noop``
     write) or a runner task (``run_page_task`` / ``run_area_task`` with its
     sink write). A window is a fixed number of whole rounds, each op kind once
-    per round in a seeded order: round(seconds / ROUND_S), where ROUND_S is a
-    round's length on a 4-core host, so a window lasts about ``seconds``.
-    Fixed work keeps the op mix and count the same in every run."""
+    per round in the order of ``kinds``: round(seconds / ROUND_S), where
+    ROUND_S is a round's length on a 4-core host, so a window lasts about
+    ``seconds``. Fixed work in a fixed order keeps the op mix, count and
+    sequence the same in every run; the seed draws the data and the task
+    parameters."""
 
     kinds = SESSION_QUERIES + TASKS
     ROUND_S = 15.0
@@ -122,9 +124,7 @@ class SessionQueries:
     def window(self, seconds: float) -> list[Op]:
         ops: list[Op] = []
         for _ in range(max(1, round(seconds / self.ROUND_S))):
-            order = list(self.kinds)
-            self.rng.shuffle(order)
-            ops.extend(self.timed(kind) for kind in order)
+            ops.extend(self.timed(kind) for kind in self.kinds)
         return ops
 
     def run(self, windows: list[tuple[float, bool]]) -> list[list[Op]]:
@@ -170,8 +170,15 @@ class SessionQueries:
                 return kind, None
 
         calls = [(k, self.draw_params(k) if k in TASKS else None) for k in self.kinds]
-        with ctx.phase("warmup_s"), ThreadPoolExecutor(max_workers=min(nproc(), len(calls))) as pool:
-            self.results = dict(pool.map(lambda call: warm(*call), calls))
+        with ctx.phase("warmup_s"):
+            with ThreadPoolExecutor(max_workers=min(nproc(), len(calls))) as pool:
+                self.results = dict(pool.map(lambda call: warm(*call), calls))
+            # Then one untimed round, run as the timed rounds are. The first
+            # round after the cold pass alone ran about 40% slower than the
+            # steady state, by however far JIT compilation had got; after
+            # this round the next round's length spread about a third less
+            # between runs (4-core host).
+            self.window(self.ROUND_S)
 
     def op(self, op_id: str, kind: str, params: dict | None) -> None:
         if kind in TASKS:
