@@ -34,7 +34,8 @@ Semantics notes (deliberate divergences, SURVEY §7 item 3):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 REGISTERED = (
@@ -74,6 +75,13 @@ def register_reference_udfs(spark: SparkSession) -> tuple[str, ...]:
     spark.udf.register("random_prefix", random_prefix.asNondeterministic())
     spark.udf.register("remove_random_prefix", remove_random_prefix)
     return REGISTERED
+
+
+def group_concat_distinct(col: Column | str) -> Column:
+    """Built-in form of the reference's ``group_concat_distinct``: the
+    distinct non-null values, sorted, comma-joined. The Column twin of the
+    SQL text ``rewrite_reference_sql`` emits."""
+    return F.concat_ws(",", F.array_sort(F.collect_set(col)))
 
 
 def rewrite_reference_sql(text: str) -> str:

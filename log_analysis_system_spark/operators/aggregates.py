@@ -35,6 +35,35 @@ def bin_ratio_aggregate(
     return df.agg(*aggs)
 
 
+# The reference's A3 bins (UserVisitSessionAnalyzeSpark.java:607-664) as SQL
+# conditions, so the Spark queries and their DuckDB oracles read one table.
+SESSION_BINS = {
+    "visit_1s_3s": "visit_length BETWEEN 1 AND 3",
+    "visit_4s_6s": "visit_length BETWEEN 4 AND 6",
+    "visit_7s_9s": "visit_length BETWEEN 7 AND 9",
+    "visit_10s_30s": "visit_length BETWEEN 10 AND 30",
+    "visit_30s_60s": "visit_length > 30 AND visit_length <= 60",
+    "visit_1m_3m": "visit_length > 60 AND visit_length <= 180",
+    "visit_3m_10m": "visit_length > 180 AND visit_length <= 600",
+    "visit_10m_30m": "visit_length > 600 AND visit_length <= 1800",
+    "visit_30m": "visit_length > 1800",
+    "step_1_3": "step_length BETWEEN 1 AND 3",
+    "step_4_6": "step_length BETWEEN 4 AND 6",
+    "step_7_9": "step_length BETWEEN 7 AND 9",
+    "step_10_30": "step_length BETWEEN 10 AND 30",
+    "step_30_60": "step_length > 30 AND step_length <= 60",
+    "step_60": "step_length > 60",
+}
+
+
+def session_bin_ratios(sessions: DataFrame) -> DataFrame:
+    """A3: ``bin_ratio_aggregate`` of per-session rows (``visit_length``
+    seconds, ``step_length`` actions) over ``SESSION_BINS``."""
+    return bin_ratio_aggregate(
+        sessions, {k: F.expr(v) for k, v in SESSION_BINS.items()}
+    )
+
+
 def salted_aggregate(
     df: DataFrame,
     keys: list[str],

@@ -8,8 +8,9 @@ rates on the driver (:270-308).
 Spark-first shape: a ``lag`` window over (session, time) produces the adjacent
 pairs declaratively — the per-group sort the reference does in Java is the
 window's ORDER BY, executed as one shuffle + in-partition sort, no
-driver involvement. The rate chain runs on the tiny collected result (the
-reference does the same; the result is one row per funnel step).
+driver involvement. The rate chain stays in the plan too: the per-split
+counts are one row per funnel step, so chaining them is a tiny self-join
+and a one-row cross join, and nothing is collected to the driver.
 """
 
 from __future__ import annotations
@@ -64,27 +65,44 @@ def funnel_counts(
 
 
 def conversion_rates(
-    spark_counts: dict[str, int], start_pv: int, target_flow: list[str], scale: int = 2
-) -> list[tuple[str, float]]:
-    """Chained rates (X2): rate(split_1)=pv_1/start_pv; rate(split_i)=pv_i/pv_{i-1}.
-    Driver-side over the collected (tiny) counts — matches the reference
-    (:287-305), HALF_UP rounding to ``scale`` dp (util/NumberUtils.java:17-20)."""
-    from decimal import ROUND_HALF_UP, Decimal
+    splits_df: DataFrame,
+    start_rows: DataFrame,
+    target_flow: list[str],
+    scale: int,
+) -> DataFrame:
+    """Chained rates (X2): rate(split_1) = pv_1 / start_pv, rate(split_i) =
+    pv_i / pv_{i-1}, rounded HALF_UP to ``scale`` dp (util/NumberUtils.java:
+    17-20). ``start_rows`` are the rows on the flow's first page; their
+    count is start_pv. Output: one row per target split (split, split_pv,
+    convert_rate); a split with no traffic has split_pv 0.
 
+    A zero denominator (no start-page rows, or a zero-count split followed
+    by another) gives a NULL rate — ``try_divide``, because ANSI mode makes
+    ``/`` raise, and NULL is what SQL's division gives the oracles."""
     targets = [f"{a}_{b}" for a, b in zip(target_flow, target_flow[1:])]
-    out: list[tuple[str, float]] = []
-    last = start_pv
-    for t in targets:
-        pv = spark_counts.get(t, 0)
-        rate = (
-            float(
-                (Decimal(pv) / Decimal(last)).quantize(
-                    Decimal(10) ** -scale, rounding=ROUND_HALF_UP
-                )
-            )
-            if last
-            else 0.0
-        )
-        out.append((t, rate))
-        last = pv if pv else last
-    return out
+    order = splits_df.sparkSession.createDataFrame(
+        [(t, i + 1) for i, t in enumerate(targets)], "split string, ord int"
+    )
+    start_pv = start_rows.agg(F.count(F.lit(1)).alias("pv"))
+    # prev-step lookup as a tiny self-join on ord-1 rather than lag() over an
+    # unpartitioned window: same per-step result, but no single-partition
+    # window in any plan (keeps that warning reserved for real regressions).
+    filled = order.join(
+        funnel_counts(splits_df, target_flow), "split", "left"
+    ).withColumn("split_pv", F.coalesce(F.col("split_pv"), F.lit(0)))
+    prev = filled.select(
+        F.col("ord").alias("prev_ord"), F.col("split_pv").alias("prev_pv")
+    )
+    chained = filled.join(
+        F.broadcast(prev), F.col("ord") - 1 == F.col("prev_ord"), "left"
+    ).drop("prev_ord")
+    return chained.crossJoin(start_pv).select(
+        "split",
+        "split_pv",
+        F.round(
+            F.try_divide(
+                F.col("split_pv"), F.coalesce(F.col("prev_pv"), F.col("pv"))
+            ),
+            scale,
+        ).alias("convert_rate"),
+    )

@@ -6,14 +6,16 @@ driver and broadcasting them (UserVisitSessionAnalyzeSpark.java:701-1013).
 That design is driver-bound and unseeded (order-dependent).
 
 Engine form: fully distributed and deterministic —
-1. per-stratum counts (one small aggregate, the A2 histogram),
+1. per-stratum and per-parent counts (two small aggregates),
 2. per-stratum quota from the same proportional formula,
 3. rank rows inside each stratum by a *deterministic pseudo-random key*
    (md5 of the row id — stable across engines and runs, unlike rand(seed)
    which is engine-specific), keep rank <= quota.
 
-At 100 TB: one shuffle for the window; the quota table is tiny and broadcast.
-No driver-side index draws, no collect of data rows.
+At 100 TB: the rank is ``grouped_prefix_sum``'s slice path — one hash
+exchange on (md5 slice, stratum), so no task holds a whole stratum; the
+quota table is tiny and broadcast. No driver-side index draws, no collect
+of data rows.
 """
 
 from __future__ import annotations
@@ -24,37 +26,47 @@ from pyspark.sql import functions as F
 
 def stratified_sample_exact(
     df: DataFrame,
-    stratum_cols: list[str],
+    parent_cols: list[str],
+    child_cols: list[str],
     id_col: str,
-    quota: Column,
-    rank_col: str = "sample_rank",
+    per_parent: int,
 ) -> DataFrame:
-    """Keep exactly ``quota`` rows per stratum (quota is a Column evaluated
-    against the per-stratum count as ``stratum_n``), chosen by md5-rank.
-
-    ``quota`` example — the reference's per-day/per-hour proportional split
-    (UserVisitSessionAnalyzeSpark.java:803-807):
-        F.least(F.col("stratum_n"), F.round(F.col("stratum_n") / F.col("day_n") * 100))
-    """
-    counts = df.groupBy(*stratum_cols).agg(F.count(F.lit(1)).alias("stratum_n"))
-    quotas = counts.withColumn("stratum_quota", quota.cast("long"))
+    """Keep ~``per_parent`` rows per parent group (a day), split across its
+    strata (parent + child columns, e.g. day + hour) in proportion to each
+    stratum's share: quota = least(n_h, floor(n_h * per_parent / n_d)) —
+    the reference's formula incl. its floor truncation
+    (UserVisitSessionAnalyzeSpark.java:803-807). Rows are chosen by rank on
+    (md5(cast(id as string)), id). Returns ``df``'s rows and columns; the
+    names ``rnk`` and ``quota`` are used internally."""
+    strata = [*parent_cols, *child_cols]
+    stratum_counts = df.groupBy(*strata).agg(F.count(F.lit(1)).alias("n_h"))
+    parent_counts = df.groupBy(*parent_cols).agg(F.count(F.lit(1)).alias("n_d"))
+    quotas = stratum_counts.join(parent_counts, parent_cols).select(
+        *strata,
+        F.least(
+            F.col("n_h"),
+            F.floor(F.col("n_h") * float(per_parent) / F.col("n_d")).cast("long"),
+        ).alias("quota"),
+    )
     # Slice-bounded rank (grouped_prefix_sum of 1s == row_number over the
     # same order): a bare-stratum window would funnel each stratum into one
     # task — a straggler once any stratum outgrows a partition. The md5
-    # key's leading byte is the deterministic slice id (fast path).
-    md5_key = F.md5(F.col(id_col).cast("string").cast("binary"))
+    # key's leading hex digit is the slice id: deterministic, monotone in
+    # the order and uniform by construction, so the rank costs ONE hash
+    # exchange and needs no checkpoint.
+    md5_key = F.md5(F.col(id_col).cast("string"))
     ranked = grouped_prefix_sum(
         df,
-        stratum_cols,
+        strata,
         [F.asc(md5_key), F.asc(id_col)],
         F.lit(1).cast("long"),
-        out_col=rank_col,
+        out_col="rnk",
         slice_col=F.conv(F.substring(md5_key, 1, 1), 16, 10),
     )
     return (
-        ranked.join(F.broadcast(quotas), stratum_cols)
-        .where(F.col(rank_col) <= F.col("stratum_quota"))
-        .drop("stratum_n", "stratum_quota")
+        ranked.join(F.broadcast(quotas), strata)
+        .where(F.col("rnk") <= F.col("quota"))
+        .drop("rnk", "quota")
     )
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.compat import group_concat_distinct
 from ..functions.scalar import epoch_us
 
 
@@ -81,9 +82,7 @@ def session_aggregate(
         .agg(
             F.count(F.lit(1)).alias("step_length"),
             visit_len.alias("visit_length"),
-            F.concat_ws(",", F.array_sort(F.collect_set(payload_col))).alias(
-                "payloads"
-            ),
+            group_concat_distinct(payload_col).alias("payloads"),
             F.min(ts_col).alias("start_time"),
         )
         .select(

@@ -41,3 +41,20 @@ def global_topn(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     to TakeOrderedAndProject — the reference's full sortByKey + take(10)
     (UserVisitSessionAnalyzeSpark.java:1239-1272) never materializes here."""
     return df.orderBy(*order_cols).limit(k)
+
+
+def top10_categories_by_counts(counts: DataFrame) -> DataFrame:
+    """T1/T2: the reference's top-10 categories of a (category_id,
+    click_count, order_count, pay_count) table under its composite key
+    (CategorySortKey.java:21-137) — click, order, pay descending, then
+    category id ascending as the deterministic tie-break."""
+    return global_topn(
+        counts,
+        [
+            F.desc("click_count"),
+            F.desc("order_count"),
+            F.desc("pay_count"),
+            F.asc("category_id"),
+        ],
+        10,
+    )

@@ -5,8 +5,9 @@ Target flow: view → click → purchase. The reference sorts each session's
 actions inside a flatMap and emits adjacent page pairs; here a ``lag`` window
 produces the pairs declaratively (one shuffle, in-partition sort) and the rate
 chain — rate(split_1) = pv_1 / start_pv, rate(split_i) = pv_i / pv_{i-1} — is
-computed fully in-plan via a window over the (tiny) per-split counts, so the
-whole query stays one DataFrame expression with a SQL oracle.
+``operators.funnel.conversion_rates``, computed fully in-plan over the (tiny)
+per-split counts, so the whole query stays one DataFrame expression with a
+SQL oracle.
 """
 
 from __future__ import annotations
@@ -16,13 +17,12 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import read_events
 
-from ..operators.funnel import page_splits
+from ..operators.funnel import conversion_rates, page_splits
 from ..operators.sessionize import sessionize
 from . import query
 from .session_analysis import GAP_MINUTES, SESS_CTE
 
 TARGET_FLOW = ["view", "click", "purchase"]
-_TARGETS = [f"{a}_{b}" for a, b in zip(TARGET_FLOW, TARGET_FLOW[1:])]
 
 
 @query(
@@ -57,8 +57,8 @@ FROM chained ch CROSS JOIN start_pv s
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 + X2: adjacent-pair generation via lag, target-split counts, chained
     conversion rates. Reference pair-gen: PageOneStepConvertRateSpark.java:
-    122-217; rate chain :270-308 (driver loop → here an in-plan window over
-    the 2-row count table)."""
+    122-217; rate chain :270-308 (driver loop → here an in-plan self-join
+    over the 2-row count table)."""
     ev = read_events(spark, sf_dir)
     sess = sessionize(
         ev, user_col="user_id", ts_col="ts", gap_minutes=GAP_MINUTES,
@@ -68,36 +68,9 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         sess, session_col="session_id", ts_col="ts", page_col="event_type",
         tiebreak_col="event_id", copartition_col="user_id",
     )
-    counts = (
-        splits.where(F.col("split").isin(_TARGETS))
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("split_pv"))
-    )
     # start_pv needs no session column — count from the RAW scan so this
     # branch is a pushed-filter count, not a second sessionize window pass
     # over the full corpus (same count either way).
-    start_pv = ev.where(F.col("event_type") == TARGET_FLOW[0]).agg(
-        F.count(F.lit(1)).alias("pv")
-    )
-    targets = spark.createDataFrame(
-        [(t, i + 1) for i, t in enumerate(_TARGETS)], "split string, ord int"
-    )
-    # prev-step lookup as a tiny self-join on ord-1 rather than lag() over an
-    # unpartitioned window: same 4-row result, but no single-partition window
-    # in any plan (keeps that warning reserved for real regressions).
-    filled = targets.join(counts, "split", "left").withColumn(
-        "split_pv", F.coalesce(F.col("split_pv"), F.lit(0))
-    )
-    prev = filled.select(
-        F.col("ord").alias("prev_ord"), F.col("split_pv").alias("prev_pv")
-    )
-    chained = filled.join(
-        F.broadcast(prev), F.col("ord") - 1 == F.col("prev_ord"), "left"
-    ).drop("prev_ord")
-    return chained.crossJoin(start_pv).select(
-        "split",
-        "split_pv",
-        F.round(
-            F.col("split_pv") / F.coalesce(F.col("prev_pv"), F.col("pv")), 4
-        ).alias("convert_rate"),
+    return conversion_rates(
+        splits, ev.where(F.col("event_type") == TARGET_FLOW[0]), TARGET_FLOW, 4
     )

@@ -15,12 +15,14 @@ DuckDB on seeded mock data of the native schema.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.aggregates import bin_ratio_aggregate, explode_count
-from ..operators.funnel import page_splits
-from ..operators.topn import global_topn, grouped_topn
+from ..functions.compat import group_concat_distinct
+from ..operators.aggregates import explode_count, session_bin_ratios
+from ..operators.funnel import conversion_rates, page_splits
+from ..operators.sampling import stratified_sample_exact
+from ..operators.topn import grouped_topn, top10_categories_by_counts
 from ..params import TaskParams
 
 _TS_FMT = "yyyy-MM-dd H:mm:ss"  # H (1-2 digits): the reference's
@@ -53,19 +55,9 @@ def aggregate_sessions(actions: DataFrame) -> DataFrame:
     a recorded divergence)."""
     return actions.groupBy("session_id").agg(
         F.first("user_id").alias("user_id"),
-        F.concat_ws(
-            ",",
-            F.array_sort(
-                F.array_compact(F.collect_set("search_keyword"))
-            ),
-        ).alias("search_keywords"),
-        F.concat_ws(
-            ",",
-            F.array_sort(
-                F.array_compact(
-                    F.collect_set(F.col("click_category_id").cast("string"))
-                )
-            ),
+        group_concat_distinct("search_keyword").alias("search_keywords"),
+        group_concat_distinct(
+            F.col("click_category_id").cast("string")
         ).alias("click_category_ids"),
         F.count(F.lit(1)).alias("step_length"),
         (
@@ -110,32 +102,10 @@ def filter_sessions(session_agg: DataFrame, user_df: DataFrame, params: TaskPara
     return out
 
 
-# Reference bin boundaries (UserVisitSessionAnalyzeSpark.java:607-664).
-SESSION_BINS = {
-    "visit_1s_3s": "visit_length >= 1 AND visit_length <= 3",
-    "visit_4s_6s": "visit_length >= 4 AND visit_length <= 6",
-    "visit_7s_9s": "visit_length >= 7 AND visit_length <= 9",
-    "visit_10s_30s": "visit_length >= 10 AND visit_length <= 30",
-    "visit_30s_60s": "visit_length > 30 AND visit_length <= 60",
-    "visit_1m_3m": "visit_length > 60 AND visit_length <= 180",
-    "visit_3m_10m": "visit_length > 180 AND visit_length <= 600",
-    "visit_10m_30m": "visit_length > 600 AND visit_length <= 1800",
-    "visit_30m": "visit_length > 1800",
-    "step_1_3": "step_length >= 1 AND step_length <= 3",
-    "step_4_6": "step_length >= 4 AND step_length <= 6",
-    "step_7_9": "step_length >= 7 AND step_length <= 9",
-    "step_10_30": "step_length >= 10 AND step_length <= 30",
-    "step_30_60": "step_length > 30 AND step_length <= 60",
-    "step_60": "step_length > 60",
-}
-
-
 def session_aggr_stat(filtered: DataFrame) -> DataFrame:
     """A3: the 16-counter histogram as ONE conditional-aggregation pass
     (replaces SessionAggrStatAccumulator); ratios HALF_UP 2dp (F5)."""
-    return bin_ratio_aggregate(
-        filtered, {k: F.expr(v) for k, v in SESSION_BINS.items()}
-    )
+    return session_bin_ratios(filtered)
 
 
 def session_detail(actions: DataFrame, filtered: DataFrame) -> DataFrame:
@@ -154,27 +124,9 @@ def extract_sessions(
     keyed = filtered.withColumn(
         "hour_key", F.hour(_ts("start_time")).cast("long")
     )
-    hour_counts = keyed.groupBy("date", "hour_key").agg(
-        F.count(F.lit(1)).alias("n_h")
-    )
-    day_counts = keyed.groupBy("date").agg(F.count(F.lit(1)).alias("n_d"))
-    quotas = hour_counts.join(day_counts, "date").select(
-        "date",
-        "hour_key",
-        F.least(
-            F.col("n_h"),
-            F.floor(F.col("n_h") * float(per_day) / F.col("n_d")).cast("long"),
-        ).alias("quota"),
-    )
-    w = Window.partitionBy("date", "hour_key").orderBy(
-        F.md5(F.col("session_id").cast("binary")), F.col("session_id")
-    )
-    ranked = keyed.withColumn("rnk", F.row_number().over(w))
-    return (
-        ranked.join(F.broadcast(quotas), ["date", "hour_key"])
-        .where(F.col("rnk") <= F.col("quota"))
-        .drop("rnk", "quota", "hour_key")
-    )
+    return stratified_sample_exact(
+        keyed, ["date"], ["hour_key"], "session_id", per_day
+    ).drop("hour_key")
 
 
 def top10_categories(details: DataFrame) -> DataFrame:
@@ -204,16 +156,7 @@ def top10_categories(details: DataFrame) -> DataFrame:
             F.coalesce("pay_count", F.lit(0)).alias("pay_count"),
         )
     )
-    return global_topn(
-        counts,
-        [
-            F.desc("click_count"),
-            F.desc("order_count"),
-            F.desc("pay_count"),
-            F.asc("category_id"),
-        ],
-        10,
-    )
+    return top10_categories_by_counts(counts)
 
 
 def top10_sessions_per_category(details: DataFrame, top10_cats: DataFrame) -> DataFrame:
@@ -270,7 +213,6 @@ def page_convert_rate(
     per split with its rate (the reference packs '3_5=0.8|...' into one
     varchar, page_split_convert_rate sql.txt:83-89 — real columns here)."""
     flow = [str(p) for p in params.target_page_flow]
-    targets = [f"{a}_{b}" for a, b in zip(flow, flow[1:])]
     actions = scan_actions(action_df, params)
     splits = page_splits(
         actions.withColumn("ts", _ts("action_time")),
@@ -279,46 +221,12 @@ def page_convert_rate(
         page_col="page_id",
         tiebreak_col="page_id",
     )
-    counts = (
-        splits.where(F.col("split").isin(targets))
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("split_pv"))
-    )
-    start_pv = actions.where(F.col("page_id") == int(flow[0])).agg(
-        F.count(F.lit(1)).alias("pv")
-    )
-    spark = action_df.sparkSession
-    order = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(targets)], "split string, ord int"
-    )
-    # prev-step via tiny self-join on ord-1, not lag() over an unpartitioned
-    # window — keeps the single-partition warning reserved for regressions.
-    filled = order.join(counts, "split", "left").withColumn(
-        "split_pv", F.coalesce("split_pv", F.lit(0))
-    )
-    prev = filled.select(
-        F.col("ord").alias("prev_ord"), F.col("split_pv").alias("prev_pv")
-    )
-    chained = filled.join(
-        F.broadcast(prev), F.col("ord") - 1 == F.col("prev_ord"), "left"
-    ).drop("prev_ord")
-    return chained.crossJoin(start_pv).select(
-        "split",
-        "split_pv",
-        F.round(
-            F.col("split_pv") / F.coalesce(F.col("prev_pv"), F.col("pv")), scale
-        ).alias("convert_rate"),
+    return conversion_rates(
+        splits, actions.where(F.col("page_id") == int(flow[0])), flow, scale
     )
 
 
 # --------------------------------------------------------------- job 3 ------
-
-AREA_LEVELS = {
-    ("East", "North"): "A Level",
-    ("South", "Central"): "B Level",
-    ("Northwest", "Southwest"): "C Level",
-}
-
 
 def area_top3_products(
     action_df: DataFrame,
@@ -337,13 +245,8 @@ def area_top3_products(
     joined = clicks.join(F.broadcast(city_df), "city_id")
     grouped = joined.groupBy("area", "product_id").agg(
         F.count(F.lit(1)).alias("click_count"),
-        F.concat_ws(
-            ",",
-            F.array_sort(
-                F.collect_set(
-                    F.concat_ws(":", F.col("city_id").cast("string"), "city_name")
-                )
-            ),
+        group_concat_distinct(
+            F.concat_ws(":", F.col("city_id").cast("string"), "city_name")
         ).alias("city_infos"),
     )
     top3 = grouped_topn(

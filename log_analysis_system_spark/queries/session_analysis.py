@@ -12,13 +12,14 @@ md5-based pseudo-randomness instead of engine-specific rand().
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import read_events
 
 from ..operators.sessionize import session_aggregate, sessionize
-from ..operators.aggregates import bin_ratio_aggregate
+from ..operators.aggregates import SESSION_BINS, session_bin_ratios
+from ..operators.sampling import stratified_sample_exact
 from . import query
 
 GAP_MINUTES = 30
@@ -80,36 +81,12 @@ def q_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _session_agg(spark, sf_dir)
 
 
-# Reference bin boundaries: UserVisitSessionAnalyzeSpark.java:607-664.
-_VISIT_BINS = {
-    "1s_3s": "visit_length BETWEEN 1 AND 3",
-    "4s_6s": "visit_length BETWEEN 4 AND 6",
-    "7s_9s": "visit_length BETWEEN 7 AND 9",
-    "10s_30s": "visit_length BETWEEN 10 AND 30",
-    "30s_60s": "visit_length > 30 AND visit_length <= 60",
-    "1m_3m": "visit_length > 60 AND visit_length <= 180",
-    "3m_10m": "visit_length > 180 AND visit_length <= 600",
-    "10m_30m": "visit_length > 600 AND visit_length <= 1800",
-    "30m": "visit_length > 1800",
-}
-_STEP_BINS = {
-    "1_3": "step_length BETWEEN 1 AND 3",
-    "4_6": "step_length BETWEEN 4 AND 6",
-    "7_9": "step_length BETWEEN 7 AND 9",
-    "10_30": "step_length BETWEEN 10 AND 30",
-    "30_60": "step_length > 30 AND step_length <= 60",
-    "60": "step_length > 60",
-}
-_ALL_BINS = {f"visit_{k}": v for k, v in _VISIT_BINS.items()} | {
-    f"step_{k}": v for k, v in _STEP_BINS.items()
-}
-
 _STATS_ORACLE = (
     f"WITH {SESS_CTE} SELECT count(*) AS session_count, "
     + ", ".join(
         f"round(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) / count(*), 2)"
         f" AS {name}_ratio"
-        for name, cond in _ALL_BINS.items()
+        for name, cond in SESSION_BINS.items()
     )
     + " FROM sess_agg"
 )
@@ -120,8 +97,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: one-pass visit-length / step-length histogram with HALF_UP 2dp
     ratios. Replaces the reference's custom string accumulator
     (SessionAggrStatAccumulator.java:18-90) with conditional aggregation."""
-    agg = _session_agg(spark, sf_dir)
-    return bin_ratio_aggregate(agg, {k: F.expr(v) for k, v in _ALL_BINS.items()})
+    return session_bin_ratios(_session_agg(spark, sf_dir))
 
 
 # P2 demographic filter params, mapped onto the customer dimension
@@ -271,40 +247,9 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", "yyyy-MM-dd").alias("date_key"),
         F.hour("ts").cast("long").alias("hour_key"),
     )
-    hour_counts = keyed.groupBy("date_key", "hour_key").agg(
-        F.count(F.lit(1)).alias("n_h")
-    )
-    day_counts = keyed.groupBy("date_key").agg(F.count(F.lit(1)).alias("n_d"))
-    quotas = hour_counts.join(day_counts, "date_key").select(
-        "date_key",
-        "hour_key",
-        F.least(
-            F.col("n_h"), F.floor(F.col("n_h") * 100.0 / F.col("n_d")).cast("long")
-        ).alias("quota"),
-    )
-    # Rank inside each stratum WITHOUT a bare-stratum window: one busy hour
-    # at 100 TB would otherwise become a single straggler task. The
-    # grouped_prefix_sum of 1s over the same (md5, id) order is the
-    # identical row_number, computed in slice-bounded tasks; the slice id
-    # is the md5 key's leading hex byte — deterministic, monotone in the
-    # order, uniform by construction — so the whole rank costs ONE hash
-    # exchange and needs no checkpoint.
-    from ..operators.sampling import grouped_prefix_sum
-
-    md5_key = F.md5(F.col("event_id").cast("string"))
-    ranked = grouped_prefix_sum(
-        keyed,
-        ["date_key", "hour_key"],
-        [F.asc(md5_key), F.asc("event_id")],
-        F.lit(1).cast("long"),
-        out_col="rnk",
-        slice_col=F.conv(F.substring(md5_key, 1, 1), 16, 10),
-    )
-    return (
-        ranked.join(F.broadcast(quotas), ["date_key", "hour_key"])
-        .where(F.col("rnk") <= F.col("quota"))
-        .select("event_id", "user_id", "event_type", "date_key", "hour_key")
-    )
+    return stratified_sample_exact(
+        keyed, ["date_key"], ["hour_key"], "event_id", per_parent=100
+    ).select("event_id", "user_id", "event_type", "date_key", "hour_key")
 
 
 @query(

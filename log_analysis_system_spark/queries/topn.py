@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import read_events
 
-from ..operators.topn import global_topn, grouped_topn
+from ..functions.compat import group_concat_distinct
+from ..operators.topn import grouped_topn, top10_categories_by_counts
 from . import query
 
 
@@ -68,16 +69,7 @@ LIMIT 10
 def q_top10_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4-A6 + T1 + T2: top-10 categories under the composite (click, order,
     pay) descending order. Compiles to TakeOrderedAndProject — no full sort."""
-    return global_topn(
-        _cat_counts(spark, sf_dir),
-        [
-            F.desc("click_count"),
-            F.desc("order_count"),
-            F.desc("pay_count"),
-            F.asc("category_id"),
-        ],
-        10,
-    )
+    return top10_categories_by_counts(_cat_counts(spark, sf_dir))
 
 
 @query(
@@ -110,16 +102,7 @@ def q_top10_session_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver, :1637-1638); the per-group top-10 is a window, not an insertion
     sort (:1713-1787)."""
     ev = read_events(spark, sf_dir)
-    top10 = global_topn(
-        _cat_counts(spark, sf_dir),
-        [
-            F.desc("click_count"),
-            F.desc("order_count"),
-            F.desc("pay_count"),
-            F.asc("category_id"),
-        ],
-        10,
-    ).select("category_id")
+    top10 = q_top10_category(spark, sf_dir).select("category_id")
     per_user = (
         ev.where(F.col("event_type") == "click")
         .select(
@@ -182,7 +165,7 @@ def q_area_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Snowflake join lineitem→orders→customer→nation→region (J6/J7; all dims
     broadcast), per-(area, product) count with sorted group_concat_distinct
-    (A8/U2 — `array_sort(collect_set(...))` replaces the reference's
+    (A8/U2 — a sorted `collect_set`, `compat.group_concat_distinct`, replaces the reference's
     substring-dedup UDAF, whose arrival-order output is nondeterministic and
     whose substring containment check is a latent bug, GroupConcatDistinctUDAF.
     java:71-91), window top-3 per area (W1), CASE banding (P7), product-status
@@ -218,9 +201,7 @@ def q_area_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grouped = clicks.groupBy("area", "product_id").agg(
         F.count(F.lit(1)).alias("click_count"),
-        F.concat_ws(",", F.array_sort(F.collect_set("city_info"))).alias(
-            "city_infos"
-        ),
+        group_concat_distinct("city_info").alias("city_infos"),
     )
     top3 = grouped_topn(
         grouped,

@@ -1,10 +1,19 @@
-"""Regenerate PLANS.md: the executed physical plans of the heaviest headline
-queries with the scale-critical properties called out. Run from the repo
-root: python scripts/dump_plans.py
+"""Dump physical plans of registry queries. Run from the repo root:
+
+    python scripts/dump_plans.py                      # regenerate PLANS.md
+    python scripts/dump_plans.py <out_dir> <query>... # explain("formatted")
+
+With no arguments it rewrites PLANS.md: the executed plans of the headline
+queries with their scale-critical properties called out. With arguments it
+writes each named query's formatted plan to ``<out_dir>/<query>.txt`` —
+run it in two checkouts and diff the directories to compare plans.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -154,10 +163,24 @@ fails CI before any benchmark notices.
 """
 
 
-def main() -> None:
-    load_all()
-    spark = get_spark(app_name="dump-plans")
-    spark.sparkContext.setLogLevel("ERROR")
+def formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def dump_formatted(spark, out_dir: str, names: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        spark.catalog.clearCache()
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(formatted_plan(QUERIES[name](spark, SF_DIR)))
+        print(f"wrote {path}")
+
+
+def write_plans_md(spark) -> None:
     out = [HEADER]
     for name, prop in SHOWCASE.items():
         plan = (
@@ -171,6 +194,18 @@ def main() -> None:
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    if len(sys.argv) == 2:
+        sys.exit(__doc__)
+    load_all()
+    spark = get_spark(app_name="dump-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 2:
+        dump_formatted(spark, sys.argv[1], sys.argv[2:])
+    else:
+        write_plans_md(spark)
     spark.stop()
 
 

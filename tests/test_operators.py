@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from log_analysis_system_spark.operators import (
     bin_ratio_aggregate,
+    conversion_rates,
     explode_count,
     funnel_counts,
     global_topn,
@@ -17,7 +18,6 @@ from log_analysis_system_spark.operators import (
     session_aggregate,
     sessionize,
 )
-from log_analysis_system_spark.operators.funnel import conversion_rates
 from tests.conftest import SF_DIR
 
 
@@ -109,12 +109,22 @@ def test_page_splits_and_funnel(spark):
         for r in funnel_counts(splits, ["view", "click", "purchase"]).collect()
     }
     assert counts == {"view_click": 1, "click_purchase": 1}
-    rates = conversion_rates(counts, start_pv=2, target_flow=["view", "click", "purchase"])
-    assert rates == [("view_click", 0.5), ("click_purchase", 1.0)]
+    rates = conversion_rates(
+        splits, df.where(F.col("page_id") == "view"), ["view", "click", "purchase"], 2
+    )
+    got = {r["split"]: r["convert_rate"] for r in rates.collect()}
+    assert got == {"view_click": 0.5, "click_purchase": 1.0}
 
 
-def test_funnel_rate_zero_start():
-    assert conversion_rates({}, 0, ["a", "b"]) == [("a_b", 0.0)]
+def test_funnel_rate_zero_start(spark):
+    """No start-page traffic: the rate is NULL (SQL division by zero), not
+    an ANSI DIVIDE_BY_ZERO error."""
+    df = spark.createDataFrame(
+        [], "event_id long, session_id string, ts timestamp, page_id string"
+    )
+    splits = page_splits(df, page_col="page_id", tiebreak_col="event_id")
+    rates = conversion_rates(splits, df.where(F.col("page_id") == "a"), ["a", "b"], 2)
+    assert [tuple(r) for r in rates.collect()] == [("a_b", 0, None)]
 
 
 def test_resize_images_pads_and_crops(spark):

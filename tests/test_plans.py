@@ -502,6 +502,38 @@ def test_no_bare_global_windows_registry_wide(spark):
     )
 
 
+def test_reference_extract_ranks_in_slice_windows(spark):
+    """Job 1's session extraction (R1 on the native schema) ranks inside
+    grouped_prefix_sum's slice-keyed windows: a rank window keyed on just
+    the (date, hour_key) stratum is one task per hour at scale. The one
+    stratum-keyed window allowed is the slice-offset prefix, ordered by the
+    slice id over the O(slices x strata) totals table, never data rows."""
+    import re
+
+    from log_analysis_system_spark.params import TaskParams
+    from log_analysis_system_spark.queries.reference_jobs import session_analyze
+    from log_analysis_system_spark.sources.mockdata import mock_user_visit_data
+
+    dfs = mock_user_visit_data(spark, n_users=10, sessions_per_user=2)
+    spark.catalog.clearCache()
+    extract = session_analyze(
+        dfs["user_visit_action"], dfs["user_info"], TaskParams()
+    )["session_random_extract"]
+    plan = extract._jdf.queryExecution().executedPlan().toString()
+    spark.catalog.clearCache()
+
+    def strip_ids(spec: str) -> str:
+        return re.sub(r"#\d+L?", "", spec)
+
+    windows = [
+        (line, strip_ids(part or "")) for line, part in _window_partition_specs(plan)
+    ]
+    assert any(part == "[__pid, date, hour_key]" for _, part in windows), windows
+    for line, part in windows:
+        if part == "[date, hour_key]":
+            assert strip_ids(line).endswith("[__pid ASC NULLS FIRST]"), line
+
+
 def test_bounded_frame_window_allowlist_is_current(spark):
     """The allowlist must not rot: every allowlisted query still exists and
     still has the order-only window it is excused for (drop stale rows)."""

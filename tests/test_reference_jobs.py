@@ -4,6 +4,7 @@ DuckDB SQL over the same parquet."""
 
 from __future__ import annotations
 
+import dataclasses
 import math
 
 import duckdb
@@ -13,6 +14,7 @@ from log_analysis_system_spark.params import TaskParams
 from log_analysis_system_spark.queries.reference_jobs import (
     aggregate_sessions,
     area_top3_products,
+    extract_sessions,
     page_convert_rate,
     session_analyze,
 )
@@ -184,14 +186,11 @@ LIMIT 10
     )
 
 
-def test_page_convert_rate_match(native):
-    sdf = page_convert_rate(native["dfs"]["user_visit_action"], PARAMS)
-    targets = [f"{a}_{b}" for a, b in zip(range(1, 7), range(2, 8))]
+def _page_rate_sql(flow: list[int]) -> str:
+    """DuckDB spelling of job 2 over the PARAMS date range for ``flow``."""
+    targets = [f"{a}_{b}" for a, b in zip(flow, flow[1:])]
     values = ", ".join(f"('{t}', {i})" for i, t in enumerate(targets))
-    _compare(
-        sdf,
-        native["duck"],
-        f"""
+    return f"""
 WITH scanned AS (
     SELECT *, strptime(action_time, '%Y-%m-%d %H:%M:%S') AS ts
     FROM user_visit_action
@@ -207,7 +206,7 @@ counts AS (
     WHERE split IN ({", ".join(f"'{t}'" for t in targets)})
     GROUP BY split
 ),
-start_pv AS (SELECT count(*) AS pv FROM scanned WHERE page_id = 1),
+start_pv AS (SELECT count(*) AS pv FROM scanned WHERE page_id = {flow[0]}),
 targets(split, ord) AS (VALUES {values}),
 chained AS (
     SELECT t.split, t.ord, COALESCE(c.split_pv, 0) AS split_pv,
@@ -217,8 +216,27 @@ chained AS (
 SELECT ch.split, ch.split_pv,
        round(ch.split_pv / COALESCE(ch.prev_pv, s.pv), 2) AS convert_rate
 FROM chained ch CROSS JOIN start_pv s
-""",
-    )
+"""
+
+
+def test_page_convert_rate_match(native):
+    sdf = page_convert_rate(native["dfs"]["user_visit_action"], PARAMS)
+    _compare(sdf, native["duck"], _page_rate_sql(PARAMS.target_page_flow))
+
+
+@pytest.mark.parametrize(
+    "flow",
+    [[42, 1], [1, 2, 42, 3]],
+    ids=["zero_start", "zero_middle_step"],
+)
+def test_page_convert_rate_zero_traffic_step(native, flow):
+    """A step with no traffic (page 42 never occurs in the mock) makes a
+    denominator zero: the rate is NULL, as SQL division gives, instead of
+    an ANSI DIVIDE_BY_ZERO error."""
+    params = dataclasses.replace(PARAMS, target_page_flow=flow)
+    sdf = page_convert_rate(native["dfs"]["user_visit_action"], params)
+    assert any(r["convert_rate"] is None for r in sdf.collect())
+    _compare(sdf, native["duck"], _page_rate_sql(flow))
 
 
 def test_area_top3_products_match(native):
@@ -285,6 +303,53 @@ def test_stratified_extract_respects_quota(native):
     a = sorted(r["session_id"] for r in extracted.collect())
     b = sorted(r["session_id"] for r in again.collect())
     assert a == b
+
+
+@pytest.mark.parametrize("per_day", [100, 7])
+def test_stratified_extract_matches_duckdb(native, per_day):
+    """R1 exact parity: the hour-stratified md5-rank extraction of the
+    filtered sessions, spelled like the ``stratified_sample`` oracle. At
+    100/day every session of the mock fits its quota; 7/day makes the
+    quota floor and the md5 rank decide."""
+    out = session_analyze(
+        native["dfs"]["user_visit_action"], native["dfs"]["user_info"], PARAMS
+    )
+    extracted = (
+        out["session_random_extract"]
+        if per_day == 100
+        else extract_sessions(out["filtered_sessions"], per_day=per_day)
+    )
+    cols = ["session_id", "user_id", "step_length", "visit_length", "date", "start_time"]
+    _compare(
+        extracted.select(*cols),
+        native["duck"],
+        f"""
+WITH {SESS_AGG_SQL},
+keyed AS (
+    SELECT {", ".join(cols)},
+           CAST(hour(strptime(start_time, '%Y-%m-%d %H:%M:%S')) AS BIGINT) AS hour_key
+    FROM filtered
+),
+hour_counts AS (
+    SELECT date, hour_key, count(*) AS n_h FROM keyed GROUP BY 1, 2
+),
+day_counts AS (SELECT date, count(*) AS n_d FROM keyed GROUP BY 1),
+quotas AS (
+    SELECT h.date, h.hour_key,
+           least(h.n_h, CAST(floor(h.n_h * {per_day}.0 / d.n_d) AS BIGINT)) AS quota
+    FROM hour_counts h JOIN day_counts d USING (date)
+),
+ranked AS (
+    SELECT k.*, row_number() OVER (
+               PARTITION BY k.date, k.hour_key
+               ORDER BY md5(k.session_id), k.session_id) AS rnk
+    FROM keyed k
+)
+SELECT {", ".join(cols)}
+FROM ranked r JOIN quotas q USING (date, hour_key)
+WHERE r.rnk <= q.quota
+""",
+    )
 
 
 def test_top10_sessions_rank_bounds(native):
