@@ -24,8 +24,14 @@ exact in any partitioning.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .partials import partial_dirs, write_partial
 
 #: measure columns every rollup table carries, and how they merge.
 _MERGES = {
@@ -74,6 +80,10 @@ def merge_rollups(*rollups: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------- persisted incremental store
+#
+# Layout (operators/partials.py): ingest partials under ``batches/``, the
+# compacted base under ``base/batch=<high-water mark>``, and
+# ``_base_pointer.json`` naming the committed base and its mark.
 
 def append_rollup_batch(
     events_batch: DataFrame,
@@ -84,19 +94,29 @@ def append_rollup_batch(
     ts_col: str = "ts",
     value_col: str = "value",
 ) -> None:
-    """Incremental-maintenance write path: roll up ONE ingest batch and
-    persist its partial aggregates under ``batches/batch=<id>`` —
-    append-only and NATURALLY idempotent: a replayed batch overwrites its
-    own directory with byte-identical deterministic content, so no marker
-    file or read-modify-write of history is needed (the failure mode a
-    merge-into-place refresh has: replay after a crash between data write
-    and marker double-merges the delta). History is never rewritten;
-    serving merges partials (`serve_rollup`); `compact_rollup` bounds the
-    batch-dir count."""
-    rollup_events(
-        events_batch, bucket=bucket, keys=keys, ts_col=ts_col,
-        value_col=value_col,
-    ).write.mode("overwrite").parquet(f"{store_dir}/batches/batch={batch_id}")
+    """Incremental-maintenance write path: roll up ONE ingest batch into
+    its replay-idempotent partial. History is never rewritten (a
+    merge-into-place refresh double-merges a delta replayed after a crash
+    between data write and marker); serving merges partials
+    (`serve_rollup`); `compact_rollup` bounds the batch-dir count."""
+    write_partial(
+        rollup_events(
+            events_batch, bucket=bucket, keys=keys, ts_col=ts_col,
+            value_col=value_col,
+        ),
+        store_dir,
+        batch_id,
+    )
+
+
+def _pointer(store_dir: str) -> tuple[str | None, int]:
+    """(committed base dir or None, compaction high-water mark)."""
+    ptr = os.path.join(store_dir, "_base_pointer.json")
+    if not os.path.exists(ptr):
+        return None, -1
+    with open(ptr) as f:
+        meta = json.load(f)
+    return os.path.join(store_dir, meta["base"]), meta["upto"]
 
 
 def _live_dirs(store_dir: str, as_of_batch: int | None = None) -> list[str]:
@@ -107,15 +127,7 @@ def _live_dirs(store_dir: str, as_of_batch: int | None = None) -> list[str]:
     no longer exist (their batch dirs were folded into the base), which is
     the standard retention contract of a compacting store: raise a clear
     error instead of silently serving the wrong snapshot."""
-    import json
-    import os
-
-    ptr = os.path.join(store_dir, "_base_pointer.json")
-    base, upto = None, -1
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            meta = json.load(f)
-        base, upto = meta["base"], meta["upto"]
+    base, upto = _pointer(store_dir)
     if as_of_batch is not None and as_of_batch < upto:
         raise ValueError(
             f"snapshot batch={as_of_batch} predates the compaction "
@@ -123,27 +135,20 @@ def _live_dirs(store_dir: str, as_of_batch: int | None = None) -> list[str]:
             f"retained — raise the compaction cadence or archive batch "
             f"dirs to keep deeper time travel"
         )
-    dirs = []
-    if base:
-        dirs.append(os.path.join(store_dir, base))
-    broot = os.path.join(store_dir, "batches")
-    if os.path.isdir(broot):
-        for d in sorted(os.listdir(broot)):
-            if not d.startswith("batch="):
-                continue
-            bid = int(d.split("=")[1])
-            if bid > upto and (as_of_batch is None or bid <= as_of_batch):
-                dirs.append(os.path.join(broot, d))
-    return dirs
+    return ([base] if base else []) + [
+        d
+        for bid, d in partial_dirs(store_dir)
+        if bid > upto and (as_of_batch is None or bid <= as_of_batch)
+    ]
 
 
 def serve_rollup(
     spark, store_dir: str, as_of_batch: int | None = None
 ) -> DataFrame:
     """Serving path: merge the persisted partials (compacted base + live
-    batch dirs) into the current continuous-aggregate view — identical to
-    rolling up all raw history (the merge-algebra invariant, tested), but
-    reading only O(buckets) partial rows.
+    batch dirs, one scan) into the current continuous-aggregate view —
+    identical to rolling up all raw history (the merge-algebra invariant,
+    tested), but reading only O(buckets) partial rows.
 
     ``as_of_batch`` gives a TIME-TRAVEL read: the view as of that ingest
     batch (inclusive). Because history is append-only partials, a snapshot
@@ -154,7 +159,7 @@ def serve_rollup(
     dirs = _live_dirs(store_dir, as_of_batch)
     if not dirs:
         raise FileNotFoundError(f"no rollup partials under {store_dir}")
-    return merge_rollups(*[spark.read.parquet(d) for d in dirs])
+    return merge_rollups(spark.read.parquet(*dirs))
 
 
 def compact_rollup(spark, store_dir: str) -> None:
@@ -162,35 +167,34 @@ def compact_rollup(spark, store_dir: str) -> None:
     commit it with an ATOMIC pointer-file swap (write `_base_pointer.json`
     aside, `os.replace` into place) — a crash before the swap leaves the
     old pointer and the old read path fully intact; batch dirs at or below
-    the new high-water mark become dead and are removed only AFTER the
-    commit (best-effort; leftovers are ignored by `_live_dirs`)."""
-    import json
-    import os
-    import shutil
+    the new high-water mark and superseded bases become dead and are
+    removed only AFTER the commit (best-effort; leftovers are ignored by
+    `_live_dirs`).
 
-    broot = os.path.join(store_dir, "batches")
-    live = _live_dirs(store_dir)
-    if not live:
-        raise FileNotFoundError(f"nothing to compact under {store_dir}")
-    upto = max(
-        (
-            int(d.split("=")[1])
-            for d in os.listdir(broot)
-            if d.startswith("batch=")
-        ),
-        default=-1,
+    The new mark is the newest live batch id, so it never moves back. With
+    no batch above the mark the base is already current and compaction is
+    a no-op (rewriting it would overwrite the dir being read)."""
+    base, upto = _pointer(store_dir)
+    fresh = [(bid, d) for bid, d in partial_dirs(store_dir) if bid > upto]
+    if not fresh:
+        if base is None:
+            raise FileNotFoundError(f"nothing to compact under {store_dir}")
+        return
+    upto = fresh[-1][0]
+    dirs = ([base] if base else []) + [d for _, d in fresh]
+    write_partial(
+        merge_rollups(spark.read.parquet(*dirs)),
+        store_dir,
+        upto,
+        sub="base",
     )
-    base_name = f"base_upto_{upto}"
-    merged = merge_rollups(*[spark.read.parquet(d) for d in live])
-    merged.write.mode("overwrite").parquet(os.path.join(store_dir, base_name))
+    bases = dict(partial_dirs(store_dir, "base"))
     tmp = os.path.join(store_dir, "_base_pointer.json.tmp")
     with open(tmp, "w") as f:
-        json.dump({"base": base_name, "upto": upto}, f)
+        json.dump({"base": os.path.relpath(bases[upto], store_dir), "upto": upto}, f)
     os.replace(tmp, os.path.join(store_dir, "_base_pointer.json"))  # commit
     # post-commit cleanup: dead batch dirs and superseded bases
-    for d in os.listdir(broot):
-        if d.startswith("batch=") and int(d.split("=")[1]) <= upto:
-            shutil.rmtree(os.path.join(broot, d), ignore_errors=True)
-    for d in os.listdir(store_dir):
-        if d.startswith("base_upto_") and d != base_name:
-            shutil.rmtree(os.path.join(store_dir, d), ignore_errors=True)
+    dead = [d for bid, d in partial_dirs(store_dir) if bid <= upto]
+    dead += [d for bid, d in bases.items() if bid != upto]
+    for d in dead:
+        shutil.rmtree(d, ignore_errors=True)

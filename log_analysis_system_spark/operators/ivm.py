@@ -15,15 +15,15 @@ groups whose multiplicity reached zero.
 
 All measures are additive integer cents, so partials merge exactly under
 any partitioning and any batch order (addition is commutative — late or
-out-of-order deltas need no special casing). Store mechanics reuse the
-hypertable contract: per-batch overwrite-idempotent partial dirs."""
+out-of-order deltas need no special casing). The store is
+`operators/partials.py`."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .partials import read_partials, write_partial
 
 
 def revenue_view_delta(
@@ -51,9 +51,8 @@ def revenue_view_delta(
 
 
 def append_view_delta(delta: DataFrame, store_dir: str, batch_id: int) -> None:
-    """Persist one batch's partial under ``batches/batch=<id>`` —
-    overwrite-idempotent under replay, like the rollup store."""
-    delta.write.mode("overwrite").parquet(f"{store_dir}/batches/batch={batch_id}")
+    """Persist one batch's partial (replay-idempotent)."""
+    write_partial(delta, store_dir, batch_id)
 
 
 def serve_view(spark, store_dir: str) -> DataFrame:
@@ -65,19 +64,9 @@ def serve_view(spark, store_dir: str) -> DataFrame:
     malformed (deletes that don't mirror prior inserts), and silently
     discarding nonzero revenue would hide the corruption, so such rows
     are kept visible for the caller/monitor to flag."""
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no view partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
     return (
-        parts.groupBy("n_name")
+        read_partials(spark, store_dir)
+        .groupBy("n_name")
         .agg(
             F.sum("revenue_c").alias("revenue_c"),
             F.sum("n_items").alias("n_items"),

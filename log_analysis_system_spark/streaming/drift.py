@@ -9,22 +9,17 @@ model was trained on? This module watches the SAME features through the
 shared `drift_labels` helper, so batch and streaming monitors can never
 disagree about what they measure (the equivalence test pins it).
 
-Design = the incremental rollup store's contract applied to counts:
-counts are mergeable partials, each micro-batch writes its own
-``batches/batch=<id>`` dir (a replayed batch overwrites itself with
-byte-identical content — exactly-once without marker files), and serving
-merges partials + joins the reference. State per batch is O(buckets),
-never O(rows); nothing about the stream's length accumulates anywhere
-except the bounded bucket table.
+Every monitor here stores mergeable count partials in the partial store
+(`operators/partials.py`) and serves by merging them into the batch
+query's scoring body. State per batch is O(buckets), never O(rows).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partials import attach_foreach_batch, read_partials, write_partial
 from ..queries.data_quality import drift_labels, psi_report
 
 
@@ -36,40 +31,24 @@ def bucket_counts(ev: DataFrame) -> DataFrame:
 
 
 def append_drift_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
-    """foreachBatch body: persist ONE micro-batch's bucket counts.
-    Deterministic content + per-batch dir = idempotent under replay."""
-    bucket_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
-    )
+    """foreachBatch body: persist ONE micro-batch's bucket counts."""
+    write_partial(bucket_counts(batch_df), store_dir, batch_id)
 
 
 def serve_drift(spark, store_dir: str, reference: DataFrame) -> DataFrame:
     """Merge the streamed partials into the observed distribution and emit
     per-bucket PSI contributions vs the reference counts (feature, label,
     n). Reads O(batches x buckets) partial rows — never the stream."""
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no drift partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
-    observed = parts.groupBy("feature", "label").agg(F.sum("n").alias("n"))
+    observed = read_partials(spark, store_dir).groupBy("feature", "label").agg(
+        F.sum("n").alias("n")
+    )
     return psi_report(reference, observed)
 
 
 def drift_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
     """Attach the monitor to a streaming events DataFrame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_drift_batch(b, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df, lambda b, i: append_drift_batch(b, store_dir, i), checkpoint_dir
     )
 
 
@@ -86,9 +65,7 @@ def daily_counts(ev: DataFrame) -> DataFrame:
 def append_daily_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
     """foreachBatch body for the level-shift monitor: persist one
     micro-batch's daily counts (overwrite-idempotent under replay)."""
-    daily_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/daily/batch={batch_id}"
-    )
+    write_partial(daily_counts(batch_df), store_dir, batch_id, sub="daily")
 
 
 def serve_change_point(spark, store_dir: str) -> DataFrame:
@@ -98,29 +75,16 @@ def serve_change_point(spark, store_dir: str) -> DataFrame:
     is O(days), never O(events)."""
     from ..queries.temporal import cusum_top
 
-    broot = os.path.join(store_dir, "daily")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no daily partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
-    daily = parts.groupBy("d").agg(F.sum("x").alias("x"))
+    daily = read_partials(spark, store_dir, "daily").groupBy("d").agg(
+        F.sum("x").alias("x")
+    )
     return cusum_top(daily)
 
 
 def level_shift_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
     """Attach the CUSUM level-shift monitor to a streaming events frame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_daily_batch(b, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df, lambda b, i: append_daily_batch(b, store_dir, i), checkpoint_dir
     )
 
 
@@ -128,13 +92,11 @@ def level_shift_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: st
 
 def append_sprt_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
     """foreachBatch body for the SPRT monitor: persist one micro-batch's
-    per-day (successes, trials) partials (overwrite-idempotent under
-    replay; same-day partials from different batches sum at serve time)."""
+    per-day (successes, trials) partials (same-day partials from
+    different batches sum at serve time)."""
     from ..queries.stats_models import sprt_daily_counts
 
-    sprt_daily_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/sprt/batch={batch_id}"
-    )
+    write_partial(sprt_daily_counts(batch_df), store_dir, batch_id, sub="sprt")
 
 
 def serve_sprt(spark, store_dir: str) -> DataFrame:
@@ -146,18 +108,7 @@ def serve_sprt(spark, store_dir: str) -> DataFrame:
     O(days), never O(events)."""
     from ..queries.stats_models import sprt_score
 
-    broot = os.path.join(store_dir, "sprt")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no sprt partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
-    daily = parts.groupBy("day").agg(
+    daily = read_partials(spark, store_dir, "sprt").groupBy("day").agg(
         F.sum("s").cast("long").alias("s"),
         F.sum("n").cast("long").alias("n"),
     )
@@ -166,12 +117,8 @@ def serve_sprt(spark, store_dir: str) -> DataFrame:
 
 def sprt_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
     """Attach the sequential-test monitor to a streaming events frame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_sprt_batch(b, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df, lambda b, i: append_sprt_batch(b, store_dir, i), checkpoint_dir
     )
 
 
@@ -179,33 +126,10 @@ def sprt_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
 
 def append_w1_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
     """foreachBatch body for a streaming DOCUMENTS frame: persist one
-    micro-batch's (source, bucket, n) length-bucket counts — mergeable
-    partials, idempotent under replay (per-batch dir, deterministic
-    content; the `append_drift_batch` contract)."""
+    micro-batch's (source, bucket, n) length-bucket counts."""
     from ..queries.data_quality import length_bucket_counts
 
-    length_bucket_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
-    )
-
-
-def _merged_w1_counts(spark, store_dir: str) -> DataFrame:
-    import os as _os
-
-    broot = _os.path.join(store_dir, "batches")
-    dirs = [
-        _os.path.join(broot, d)
-        for d in sorted(_os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no W1 partials under {store_dir}")
-    # One multi-path scan: plan depth and footer reads stay O(1) in the
-    # number of batches (counts re-aggregate below, so order is moot).
-    parts = spark.read.parquet(*dirs)
-    return parts.groupBy("source", "bucket").agg(
-        F.sum("n").cast("long").alias("n")
-    )
+    write_partial(length_bucket_counts(batch_df), store_dir, batch_id)
 
 
 def serve_w1(spark, store_dir: str, reference: DataFrame | None = None) -> DataFrame:
@@ -223,7 +147,9 @@ def serve_w1(spark, store_dir: str, reference: DataFrame | None = None) -> DataF
         w1_from_cells,
     )
 
-    merged = _merged_w1_counts(spark, store_dir)
+    merged = read_partials(spark, store_dir).groupBy("source", "bucket").agg(
+        F.sum("n").cast("long").alias("n")
+    )
     if reference is None:
         return w1_from_cells(rest_of_corpus_cells(merged))
     ref = reference.select("bucket", F.col("n").cast("long").alias("cb"))
@@ -250,12 +176,8 @@ def serve_w1(spark, store_dir: str, reference: DataFrame | None = None) -> DataF
 
 def w1_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
     """Attach the Wasserstein drift monitor to a streaming documents frame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_w1_batch(b, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df, lambda b, i: append_w1_batch(b, store_dir, i), checkpoint_dir
     )
 
 
@@ -271,16 +193,10 @@ def serve_burst(spark, store_dir: str):
     O(events)."""
     from ..queries.temporal import burst_label_days
 
-    broot = os.path.join(store_dir, "daily")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no daily partials under {store_dir}")
-    parts = spark.read.parquet(*dirs)
-    daily = parts.groupBy("d").agg(F.sum("x").cast("long").alias("x")).select(
-        F.col("d").alias("day"), "x"
+    daily = (
+        read_partials(spark, store_dir, "daily")
+        .groupBy("d")
+        .agg(F.sum("x").cast("long").alias("x"))
+        .select(F.col("d").alias("day"), "x")
     )
     return burst_label_days(daily)

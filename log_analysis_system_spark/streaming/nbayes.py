@@ -6,10 +6,10 @@ The NB model is a pure function of two count tables — (class, word)
 token counts and per-class doc counts — and counts are SUM-mergeable,
 so the trainer is an incremental-view-maintenance problem, not a
 retraining problem: each micro-batch of TRAIN docs appends its own
-bounded partial (the W1 monitor's contract: per-batch dir, byte-
-identical content under replay), and serving merges the partials and
-calls `queries.nbayes.nb_confusion_from_counts` on whatever eval set
-the caller supplies. Per-class token totals, vocabulary size, and
+bounded partials to the partial store (`operators/partials.py`), and
+serving merges the partials and calls
+`queries.nbayes.nb_confusion_from_counts` on whatever eval set the
+caller supplies. Per-class token totals, vocabulary size, and
 priors all DERIVE from the merged counts, so no other state exists.
 
 The parity test pins: streamed-trained model == the batch
@@ -20,11 +20,10 @@ where one class's docs are concentrated in a single late batch.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partials import attach_foreach_batch, read_partials, write_partial
 from ..queries.nbayes import nb_count_partials
 
 
@@ -33,29 +32,8 @@ def append_nb_batch(batch_df: DataFrame, store_dir: str,
     """foreachBatch body for a streaming TRAIN-docs frame: persist one
     batch's token-count and doc-count partials."""
     cw, dc = nb_count_partials(batch_df)
-    cw.write.mode("overwrite").parquet(
-        f"{store_dir}/cw/batch={batch_id}"
-    )
-    dc.write.mode("overwrite").parquet(
-        f"{store_dir}/dc/batch={batch_id}"
-    )
-
-
-def _merged(spark, store_dir: str, sub: str, keys: list[str],
-            col: str) -> DataFrame:
-    root = os.path.join(store_dir, sub)
-    dirs = [
-        os.path.join(root, d)
-        for d in sorted(os.listdir(root))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no NB partials under {root}")
-    return (
-        spark.read.parquet(*dirs)
-        .groupBy(*keys)
-        .agg(F.sum(col).cast("long").alias(col))
-    )
+    write_partial(cw, store_dir, batch_id, sub="cw")
+    write_partial(dc, store_dir, batch_id, sub="dc")
 
 
 def serve_nb_confusion(spark, store_dir: str,
@@ -65,17 +43,17 @@ def serve_nb_confusion(spark, store_dir: str,
     stream."""
     from ..queries.nbayes import nb_confusion_from_counts
 
-    cw = _merged(spark, store_dir, "cw", ["lang", "word"], "c_cw")
-    dc = _merged(spark, store_dir, "dc", ["lang"], "d_c")
+    cw = read_partials(spark, store_dir, "cw").groupBy("lang", "word").agg(
+        F.sum("c_cw").cast("long").alias("c_cw")
+    )
+    dc = read_partials(spark, store_dir, "dc").groupBy("lang").agg(
+        F.sum("d_c").cast("long").alias("d_c")
+    )
     return nb_confusion_from_counts(spark, cw, dc, eval_docs)
 
 
 def nb_trainer(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
     """Attach the incremental trainer to a streaming TRAIN-docs frame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_nb_batch(b, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df, lambda b, i: append_nb_batch(b, store_dir, i), checkpoint_dir
     )

@@ -11,21 +11,18 @@ the same trained vocab map, so they cannot disagree about the rule —
 the equivalence test pins served == batch on identical data (the
 drift_psi monitor pattern).
 
-Contract = the incremental rollup store's: every counter is a mergeable
-sum, each micro-batch writes its own ``batches/batch=<id>`` dir
-(replayed batches overwrite byte-identically — exactly-once without
-marker files), and serving reads O(batches x sources) partial rows,
-never the stream. The trained vocab is pinned at monitor-attach time
+Every counter is a mergeable sum kept in the partial store
+(`operators/partials.py`); serving reads O(batches x sources) partial
+rows, never the stream. The trained vocab is pinned at monitor-attach time
 (a tokenizer in production is a frozen artifact; retrain => new store).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partials import attach_foreach_batch, read_partials, write_partial
 from ..queries.bpe import oov_score
 
 
@@ -33,27 +30,14 @@ def append_oov_batch(
     batch_df: DataFrame, vocab_map: DataFrame, store_dir: str, batch_id: int
 ) -> None:
     """foreachBatch body: persist ONE micro-batch's per-source counters."""
-    oov_score(batch_df, vocab_map).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
-    )
+    write_partial(oov_score(batch_df, vocab_map), store_dir, batch_id)
 
 
 def serve_oov(spark, store_dir: str) -> DataFrame:
     """Merge streamed partials into the cumulative per-source audit —
     identical columns (and, on identical data, identical values) to the
     batch `bpe_oov_audit`."""
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no OOV partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
-    return parts.groupBy("source").agg(
+    return read_partials(spark, store_dir).groupBy("source").agg(
         F.sum("n_words").alias("n_words"),
         F.sum("n_oov_words").alias("n_oov_words"),
         F.sum("bpe_tokens").alias("bpe_tokens"),
@@ -67,10 +51,8 @@ def oov_monitor(
     checkpoint_dir: str,
 ):
     """Attach the monitor to a streaming documents DataFrame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_oov_batch(b, vocab_map, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df,
+        lambda b, i: append_oov_batch(b, vocab_map, store_dir, i),
+        checkpoint_dir,
     )

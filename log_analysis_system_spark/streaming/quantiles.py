@@ -26,18 +26,17 @@ the 1/R=32 bound, vs <= 1.7% day-aligned). The split-day test pins the
 served estimates inside the 1/R envelope; the summary table stays
 bounded at segments x R rows.
 
-State per batch is O(days-in-batch x R), never O(rows); nothing about
-the stream's length accumulates anywhere except the bounded partial
-store (compactable by re-summarizing, since the merge is associative).
+State per batch is O(days-in-batch x R), never O(rows), kept in the
+partial store (`operators/partials.py`; compactable by re-summarizing,
+since the merge is associative).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partials import attach_foreach_batch, read_partials, write_partial
 from ..queries.olap_extras import qsr_day_values, qsr_estimates, qsr_summaries
 
 
@@ -45,31 +44,15 @@ def append_quantile_batch(
     batch_df: DataFrame, store_dir: str, batch_id: int
 ) -> None:
     """foreachBatch body for a streaming EVENTS frame: persist one
-    micro-batch's per-day R-rank summaries — mergeable partials,
-    idempotent under replay (per-batch dir, deterministic content; the
-    `append_drift_batch` contract)."""
-    qsr_summaries(qsr_day_values(batch_df)).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
-    )
+    micro-batch's per-day R-rank summaries."""
+    write_partial(qsr_summaries(qsr_day_values(batch_df)), store_dir, batch_id)
 
 
 def serve_quantiles(spark, store_dir: str) -> DataFrame:
     """Serve (q_bp, est_milli, n_total) from the streamed summary
     partials — O(batches x days x R) rows read, never the stream. The
     merge body is the batch query's `qsr_estimates` verbatim."""
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no quantile partials under {store_dir}")
-    # One multi-path scan: plan depth and footer reads stay O(1) in the
-    # number of batches (summaries re-merge in qsr_estimates, so order
-    # is moot).
-    parts = spark.read.parquet(*dirs)
-    return qsr_estimates(parts).select(
+    return qsr_estimates(read_partials(spark, store_dir)).select(
         F.col("q").alias("q_bp"),
         "est_milli",
         F.col("n").alias("n_total"),
@@ -78,10 +61,6 @@ def serve_quantiles(spark, store_dir: str) -> DataFrame:
 
 def quantile_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
     """Attach the quantile-rollup monitor to a streaming events frame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_quantile_batch(b, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df, lambda b, i: append_quantile_batch(b, store_dir, i), checkpoint_dir
     )

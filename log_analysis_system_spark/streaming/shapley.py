@@ -14,8 +14,7 @@ precedes the earliest purchase, so the merged minima reconstruct the
 coalition masks exactly.
 
 Per-batch state is O(active users x 5 kinds), independent of batch row
-count; replayed batches overwrite their own ``batches/batch=<id>`` dir
-with byte-identical content (exactly-once without marker files). The
+count, kept in the partial store (`operators/partials.py`). The
 serve path merges the bounded partial table, rebuilds masks, and calls
 `queries.behavior.shapley_from_masks` — shared code, so batch and
 stream cannot disagree (pinned by tests/test_streaming_shapley.py).
@@ -23,12 +22,11 @@ stream cannot disagree (pinned by tests/test_streaming_shapley.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import epoch_us
+from ..operators.partials import attach_foreach_batch, read_partials, write_partial
 from ..queries.behavior import MARKOV_CHANNELS, SHAPLEY_BITS
 
 
@@ -58,33 +56,8 @@ def touch_partials(batch_df: DataFrame) -> DataFrame:
 def append_shapley_batch(
     batch_df: DataFrame, store_dir: str, batch_id: int
 ) -> None:
-    """foreachBatch body: persist ONE micro-batch's touch minima.
-    Deterministic content + per-batch dir = idempotent under replay."""
-    touch_partials(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
-    )
-
-
-def _merged_minima(spark, store_dir: str) -> DataFrame:
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no shapley partials under {store_dir}")
-    # one multi-path scan (the W1 monitor's plan-depth argument); the
-    # MIN monoid makes re-merging order-free
-    parts = spark.read.parquet(*dirs)
-    return (
-        parts.groupBy("user_id", "kind")
-        .agg(
-            F.min(
-                F.struct(F.col("t").alias("t"), F.col("id").alias("id"))
-            ).alias("k")
-        )
-    )
+    """foreachBatch body: persist ONE micro-batch's touch minima."""
+    write_partial(touch_partials(batch_df), store_dir, batch_id)
 
 
 def serve_shapley(spark, store_dir: str) -> DataFrame:
@@ -92,7 +65,9 @@ def serve_shapley(spark, store_dir: str) -> DataFrame:
     partials — O(users x kinds) rows read, never the stream."""
     from ..queries.behavior import shapley_from_masks
 
-    merged = _merged_minima(spark, store_dir)
+    merged = read_partials(spark, store_dir).groupBy("user_id", "kind").agg(
+        F.min(F.struct(F.col("t").alias("t"), F.col("id").alias("id"))).alias("k")
+    )
     fp = merged.where(F.col("kind") == "purchase").select(
         "user_id", F.col("k").alias("fp")
     )
@@ -116,10 +91,6 @@ def serve_shapley(spark, store_dir: str) -> DataFrame:
 def shapley_monitor(stream_df: DataFrame, store_dir: str,
                     checkpoint_dir: str):
     """Attach the monitor to a streaming events DataFrame."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: append_shapley_batch(b, store_dir, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return attach_foreach_batch(
+        stream_df, lambda b, i: append_shapley_batch(b, store_dir, i), checkpoint_dir
     )

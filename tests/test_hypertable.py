@@ -180,3 +180,34 @@ def test_time_travel_snapshot_reads(spark, tmp_path):
     assert _canon(serve_rollup(spark, store, as_of_batch=2)) == full
     both = merge_rollups(rollup_events(ev), rollup_events(parts[0]))
     assert _canon(serve_rollup(spark, store)) == _canon(both)
+
+
+def test_second_compaction_keeps_high_water_mark(spark, tmp_path):
+    """A compaction with no batch above the pointer is a no-op: the
+    high-water mark never moves back, so snapshots it retired stay
+    retired and a replay of an already-folded batch is not counted
+    twice."""
+    import pytest as _pytest
+
+    from log_analysis_system_spark.operators.hypertable import (
+        append_rollup_batch,
+        compact_rollup,
+        serve_rollup,
+    )
+
+    ev = read_events(spark, SF_DIR).select("ts", "value")
+    store = str(tmp_path / "store")
+    parts = [ev.where(F.abs(F.hash("ts", "value")) % 3 == i) for i in range(3)]
+    for i, p in enumerate(parts):
+        append_rollup_batch(p, store, batch_id=i)
+    full = _canon(rollup_events(ev))
+
+    compact_rollup(spark, store)
+    compact_rollup(spark, store)
+    assert _canon(serve_rollup(spark, store)) == full
+    with _pytest.raises(ValueError, match="compaction high-water mark"):
+        serve_rollup(spark, store, as_of_batch=0)
+
+    # crash replay of batch 1, which the first compaction folded in
+    append_rollup_batch(parts[1], store, batch_id=1)
+    assert _canon(serve_rollup(spark, store)) == full
