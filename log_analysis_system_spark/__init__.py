@@ -7,7 +7,7 @@ where built-ins genuinely cannot express the semantics (multimodal decode).
 
 Subpackages
 -----------
-- ``session``    : SparkSession factory tuned for local[32] testing / cluster scale
+- ``session``    : SparkSession factory tuned for local[nproc] testing / cluster scale
 - ``sources``    : catalog of batch sources (parquet, \\x01-text, JDBC, Kafka)
 - ``operators``  : reusable DataFrame operators (sessionize, top-n, funnel, sampling,
                    dedup, similarity, text analysis, multimodal plumbing)

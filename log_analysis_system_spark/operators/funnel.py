@@ -9,8 +9,8 @@ Spark-first shape: a ``lag`` window over (session, time) produces the adjacent
 pairs declaratively — the per-group sort the reference does in Java is the
 window's ORDER BY, executed as one shuffle + in-partition sort, no
 driver involvement. The rate chain stays in the plan too: the per-split
-counts are one row per funnel step, so chaining them is a tiny self-join
-and a one-row cross join, and nothing is collected to the driver.
+counts are pivoted into one row beside the start count, and each step's
+rate is computed in that row, so nothing is collected to the driver.
 """
 
 from __future__ import annotations
@@ -80,29 +80,32 @@ def conversion_rates(
     by another) gives a NULL rate — ``try_divide``, because ANSI mode makes
     ``/`` raise, and NULL is what SQL's division gives the oracles."""
     targets = [f"{a}_{b}" for a, b in zip(target_flow, target_flow[1:])]
-    order = splits_df.sparkSession.createDataFrame(
-        [(t, i + 1) for i, t in enumerate(targets)], "split string, ord int"
+    if not targets:  # a one-page flow has no step to rate
+        return splits_df.sparkSession.createDataFrame(
+            [], "split string, split_pv long, convert_rate double"
+        )
+    # The counts are read once: pivoted into one row (0 for a split with no
+    # traffic) beside start_pv, then unfolded into one row per step. A
+    # self-join on the step number would plan the splits branch twice, and
+    # AQE reuses neither copy's stages when that branch scans a cached
+    # table.
+    counts = funnel_counts(splits_df, target_flow).agg(
+        *[
+            F.coalesce(F.max(F.when(F.col("split") == t, F.col("split_pv"))), F.lit(0))
+            .alias(f"pv{i}")
+            for i, t in enumerate(targets)
+        ]
     )
-    start_pv = start_rows.agg(F.count(F.lit(1)).alias("pv"))
-    # prev-step lookup as a tiny self-join on ord-1 rather than lag() over an
-    # unpartitioned window: same per-step result, but no single-partition
-    # window in any plan (keeps that warning reserved for real regressions).
-    filled = order.join(
-        funnel_counts(splits_df, target_flow), "split", "left"
-    ).withColumn("split_pv", F.coalesce(F.col("split_pv"), F.lit(0)))
-    prev = filled.select(
-        F.col("ord").alias("prev_ord"), F.col("split_pv").alias("prev_pv")
-    )
-    chained = filled.join(
-        F.broadcast(prev), F.col("ord") - 1 == F.col("prev_ord"), "left"
-    ).drop("prev_ord")
-    return chained.crossJoin(start_pv).select(
-        "split",
-        "split_pv",
-        F.round(
-            F.try_divide(
-                F.col("split_pv"), F.coalesce(F.col("prev_pv"), F.col("pv"))
+    start_pv = start_rows.agg(F.count(F.lit(1)).alias("start_pv"))
+    prev = ["start_pv"] + [f"pv{i}" for i in range(len(targets) - 1)]
+    steps = [
+        F.struct(
+            F.lit(t).alias("split"),
+            F.col(f"pv{i}").alias("split_pv"),
+            F.round(F.try_divide(F.col(f"pv{i}"), F.col(p)), scale).alias(
+                "convert_rate"
             ),
-            scale,
-        ).alias("convert_rate"),
-    )
+        )
+        for i, (t, p) in enumerate(zip(targets, prev))
+    ]
+    return counts.crossJoin(start_pv).select(F.inline(F.array(*steps)))

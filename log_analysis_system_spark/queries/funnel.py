@@ -15,12 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import read_events
-
 from ..operators.funnel import conversion_rates, page_splits
-from ..operators.sessionize import sessionize
+from ..sources.catalog import read_events
 from . import query
-from .session_analysis import GAP_MINUTES, SESS_CTE
+from .session_analysis import SESS_CTE, _sessionized
 
 TARGET_FLOW = ["view", "click", "purchase"]
 
@@ -57,20 +55,17 @@ FROM chained ch CROSS JOIN start_pv s
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 + X2: adjacent-pair generation via lag, target-split counts, chained
     conversion rates. Reference pair-gen: PageOneStepConvertRateSpark.java:
-    122-217; rate chain :270-308 (driver loop → here an in-plan self-join
-    over the 2-row count table)."""
-    ev = read_events(spark, sf_dir)
-    sess = sessionize(
-        ev, user_col="user_id", ts_col="ts", gap_minutes=GAP_MINUTES,
-        tiebreak_col="event_id",
-    )
+    122-217; rate chain :270-308 (driver loop → here in-plan, over the
+    count table pivoted into one row)."""
+    sess = _sessionized(spark, sf_dir)
     splits = page_splits(
         sess, session_col="session_id", ts_col="ts", page_col="event_type",
         tiebreak_col="event_id", copartition_col="user_id",
     )
     # start_pv needs no session column — count from the RAW scan so this
-    # branch is a pushed-filter count, not a second sessionize window pass
-    # over the full corpus (same count either way).
-    return conversion_rates(
-        splits, ev.where(F.col("event_type") == TARGET_FLOW[0]), TARGET_FLOW, 4
+    # branch is a pushed-filter count that plans no second copy of the
+    # base's sessionize exchange (same count either way).
+    start_rows = read_events(spark, sf_dir).where(
+        F.col("event_type") == TARGET_FLOW[0]
     )
+    return conversion_rates(splits, start_rows, TARGET_FLOW, 4)

@@ -785,10 +785,11 @@ def q_hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to the edge list, but its checkpoint-backed plan hides size
     statistics, so the planner sort-merge-joined BOTH sides every
     half-round; an explicit broadcast hint on the score side keeps the
-    edge list un-shuffled for all {HITS_ROUNDS}x2 half-steps (round-11,
-    guide §3.1 — at cluster scale the same recurrence flips to a
-    shuffle join past the broadcast cap, a size decision, never a
-    correctness one). Both engines floor-div non-negative sums, so the
+    edge list un-shuffled for all {HITS_ROUNDS}x2 half-steps. The hint
+    overrides ``autoBroadcastJoinThreshold``: the join never falls back to
+    a shuffle, however big the score table grows. It stays safe only
+    while the per-node score table (one row per customer or supplier)
+    fits in a broadcast. Both engines floor-div non-negative sums, so the
     unrolled-CTE oracle hash-matches bit for bit."""
     edges = (
         trade_edges(spark, sf_dir)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import read_events
+from ..sources.catalog import cache_partitioned, per_snapshot, read_events
 
 from ..operators.sessionize import session_aggregate, sessionize
 from ..operators.aggregates import SESSION_BINS, session_bin_ratios
@@ -57,7 +57,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_events(spark, sf_dir)
 
 
-def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(
         _events(spark, sf_dir),
         user_col="user_id",
@@ -67,8 +67,27 @@ def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event-level session base, cached once per snapshot of
+    ``events.parquet`` and shared by the session family and ``funnel``. The
+    cache keeps the window's ``user_id`` hash partitioning, so the rollup
+    and funnel's per-session window add no shuffle on top of it."""
+    return per_snapshot(
+        spark,
+        "sessionized",
+        f"{sf_dir}/events.parquet",
+        lambda: cache_partitioned(spark, lambda s: _sessionize_events(s, sf_dir)),
+    )
+
+
 def _session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_aggregate(_sessionized(spark, sf_dir))
+    """Per-session rollup of ``_sessionized``, cached per snapshot too."""
+    return per_snapshot(
+        spark,
+        "session_agg",
+        f"{sf_dir}/events.parquet",
+        lambda: session_aggregate(_sessionized(spark, sf_dir)).cache(),
+    )
 
 
 @query(
@@ -168,12 +187,15 @@ def q_session_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: recover detail rows of qualifying sessions via left-semi join.
     The reference does inner-join + project (UserVisitSessionAnalyzeSpark.java:
     679-698); semantics are a semi-join, which shuffles only the key column."""
-    sess = _sessionized(spark, sf_dir)
     qualifying = (
-        session_aggregate(sess).where(F.col("step_length") >= 2).select("session_id")
+        _session_agg(spark, sf_dir)
+        .where(F.col("step_length") >= 2)
+        .select("session_id")
     )
-    return sess.join(qualifying, "session_id", "left_semi").select(
-        "event_id", "session_id", "user_id", "event_type", "value"
+    return (
+        _sessionized(spark, sf_dir)
+        .join(qualifying, "session_id", "left_semi")
+        .select("event_id", "session_id", "user_id", "event_type", "value")
     )
 
 

@@ -33,8 +33,9 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) a SparkSession configured for this engine.
 
-    Parameters default from ``SPARK_GRAFT_CPUS`` (local parallelism) so the same
-    code path serves pytest (local[32]) and the driver's bench harness.
+    Local parallelism defaults from ``SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on, so the same code path serves pytest (conftest
+    defaults to local[8]), scripts and the bench harness.
 
     ``hive_warehouse``: opt-in Hive-catalog mode (the reference's prod-mode
     table surface, util/SparkUtils.java:38-45): managed tables + a persistent
@@ -44,7 +45,11 @@ def get_spark(
     implementation is fixed at first-session creation per JVM; use a fresh
     process to switch modes.
     """
-    n = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = str(
+        cpus
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or len(os.sched_getaffinity(0))
+    )
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)

@@ -15,6 +15,10 @@ groups from the WHERE clause — S1's hand-interpolated
 
 from __future__ import annotations
 
+import os
+import threading
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
@@ -58,6 +62,77 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only above CPU-heavy per-row derivation — the shingle/minhash
     # pipelines, where it measures ~2x.
     return df
+
+
+def snapshot(path: str) -> tuple:
+    """(path, size, mtime_ns) of a file, or of every data file under a
+    directory (names starting with '.' or '_' are skipped, as Spark's file
+    listing skips them). A rewrite of the input changes the snapshot."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((path, st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for name in sorted(files):
+            if not name.startswith((".", "_")):
+                st = os.stat(os.path.join(root, name))
+                out.append((os.path.join(root, name), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+_slots: dict[tuple, tuple[tuple, DataFrame]] = {}
+_slots_lock = threading.RLock()
+_planners: dict[SparkSession, SparkSession] = {}
+
+
+def per_snapshot(
+    spark: SparkSession, name: str, path: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The DataFrame ``build()`` gave for this session, ``name`` and the
+    current snapshot of ``path``; ``build`` should return it ``.cache()``d.
+
+    One entry per (session, name). It is rebuilt when ``path`` changes on
+    disk, or when its data left the cache (``spark.catalog.clearCache()``).
+    The old entry is unpersisted first: Spark's cache matches plans, not
+    file contents, so a cached plan over the same path would otherwise keep
+    serving the old rows. The RLock serializes builds across threads (one
+    build per snapshot) and lets a build call ``per_snapshot`` for its own
+    base."""
+    key = (spark, name)
+    with _slots_lock:
+        snap = snapshot(path)
+        entry = _slots.get(key)
+        if entry is not None:
+            level = entry[1].storageLevel
+            if entry[0] == snap and (level.useMemory or level.useDisk):
+                return entry[1]
+            entry[1].unpersist()
+        df = build()
+        _slots[key] = (snap, df)
+        return df
+
+
+def cache_partitioned(
+    spark: SparkSession, frame: Callable[[SparkSession], DataFrame]
+) -> DataFrame:
+    """``frame(spark)``, resolved to a cache entry whose plan reports its
+    output partitioning before it is materialized.
+
+    Under AQE a cached plan reports unknown partitioning until its first
+    run, so every keyed operator planned over it adds an exchange that AQE
+    only drops at run time (and that tests/test_plan_budget.py counts).
+    The entry is therefore planned in a sibling session with AQE off; the
+    cache is shared between sessions and matches plans, so ``frame(spark)``
+    scans the same entry, and its operators keep adaptive execution."""
+    with _slots_lock:
+        planner = _planners.get(spark)
+        if planner is None:
+            planner = spark.newSession()
+            planner.conf.set("spark.sql.adaptive.enabled", "false")
+            _planners[spark] = planner
+    frame(planner).cache()
+    return frame(spark)
 
 
 def widen_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:

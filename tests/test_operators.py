@@ -127,6 +127,17 @@ def test_funnel_rate_zero_start(spark):
     assert [tuple(r) for r in rates.collect()] == [("a_b", 0, None)]
 
 
+def test_funnel_rate_one_page_flow_has_no_steps(spark):
+    df = spark.createDataFrame(
+        [(1, "s1", ts(0), "a")],
+        "event_id long, session_id string, ts timestamp, page_id string",
+    )
+    splits = page_splits(df, page_col="page_id", tiebreak_col="event_id")
+    rates = conversion_rates(splits, df, ["a"], 2)
+    assert rates.collect() == []
+    assert rates.columns == ["split", "split_pv", "convert_rate"]
+
+
 def test_resize_images_pads_and_crops(spark):
     from log_analysis_system_spark.operators.multimodal import resize_images
 

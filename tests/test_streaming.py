@@ -421,3 +421,37 @@ def test_available_now_drains_and_terminates(spark, tmp_path):
     assert q2.awaitTermination(120)
     got2 = {r.province: r.n for r in spark.sql("SELECT * FROM an_sink2").collect()}
     assert got2 == {"Jiangsu": 5, "Zhejiang": 3}
+
+
+def test_pipeline_state_matches_stream_replay(spark, stream_env):
+    """The per-batch transaction against perfbench's independent replay of
+    the ad stream, on its own generator's files: 12 files of 1,000 records
+    fed as batches of 1, 2, 3, 3 and 3 files, then the last batch id again
+    (a crash between the state commit and the checkpoint commit). The files
+    cross midnight and mint blacklisted users, so the date split and the
+    feedback edge are both exercised."""
+    from perfbench.adgen import ad_click_lines
+    from perfbench.checks import ad_state_matches, replay_ad_state
+
+    files = []
+    for k in range(12):
+        name = f"part-{k:02d}.txt"
+        _write_chunk(stream_env["input"], name, ad_click_lines(7, k, 1000, 0.5))
+        files.append(os.path.join(stream_env["input"], name))
+    batches, start = [], 0
+    for n in (1, 2, 3, 3, 3):
+        batches.append(files[start : start + n])
+        start += n
+
+    pipe = AdAnalyticsPipeline(stream_env["state"])
+    frames = [parse_ad_click_log(spark.read.text(b)) for b in batches]
+    for batch_id, frame in enumerate(frames):
+        pipe.process_batch(frame, batch_id)
+    pipe.process_batch(frames[-1], len(frames) - 1)
+
+    expected = replay_ad_state(batches)
+    assert expected["ad_blacklist"]
+    assert len({row[0] for row in expected["ad_user_click_count"]}) == 2
+    assert ad_state_matches(stream_env["state"], expected) == {
+        table: True for table in expected
+    }
