@@ -6,16 +6,23 @@ driver and broadcasting them (UserVisitSessionAnalyzeSpark.java:701-1013).
 That design is driver-bound and unseeded (order-dependent).
 
 Engine form: fully distributed and deterministic —
-1. per-stratum and per-parent counts (two small aggregates),
+1. per-stratum counts (one small aggregate); each parent's total is a
+   window over that stratum-count table, never over data rows,
 2. per-stratum quota from the same proportional formula,
 3. rank rows inside each stratum by a *deterministic pseudo-random key*
    (md5 of the row id — stable across engines and runs, unlike rand(seed)
    which is engine-specific), keep rank <= quota.
 
-At 100 TB: the rank is ``grouped_prefix_sum``'s slice path — one hash
-exchange on (md5 slice, stratum), so no task holds a whole stratum; the
-quota table is tiny and broadcast. No driver-side index draws, no collect
-of data rows.
+At 100 TB: the rank is a per-stratum top-k. A stratum's quota never
+exceeds ``per_parent``, so the rank is filtered by the literal
+``rnk <= per_parent`` as well, and Catalyst's ``InferWindowGroupLimit``
+puts a ``WindowGroupLimit … Partial`` below the stratum exchange: each map
+task ships at most ``per_parent`` rows per stratum, and the stratum-keyed
+window sees at most ``per_parent`` rows per map task, however large the
+stratum. The bound holds while ``per_parent`` <=
+``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default); above
+it the limit is not inferred and every row is shipped. The quota table is
+tiny and broadcast. No driver-side index draws, no collect of data rows.
 """
 
 from __future__ import annotations
@@ -39,29 +46,24 @@ def stratified_sample_exact(
     (md5(cast(id as string)), id). Returns ``df``'s rows and columns; the
     names ``rnk`` and ``quota`` are used internally."""
     strata = [*parent_cols, *child_cols]
-    stratum_counts = df.groupBy(*strata).agg(F.count(F.lit(1)).alias("n_h"))
-    parent_counts = df.groupBy(*parent_cols).agg(F.count(F.lit(1)).alias("n_d"))
-    quotas = stratum_counts.join(parent_counts, parent_cols).select(
-        *strata,
-        F.least(
-            F.col("n_h"),
-            F.floor(F.col("n_h") * float(per_parent) / F.col("n_d")).cast("long"),
-        ).alias("quota"),
+    n_d = F.sum("n_h").over(Window.partitionBy(*parent_cols))
+    quotas = (
+        df.groupBy(*strata)
+        .agg(F.count(F.lit(1)).alias("n_h"))
+        .select(
+            *strata,
+            F.least(
+                F.col("n_h"), F.floor(F.col("n_h") * float(per_parent) / n_d).cast("long")
+            ).alias("quota"),
+        )
     )
-    # Slice-bounded rank (grouped_prefix_sum of 1s == row_number over the
-    # same order): a bare-stratum window would funnel each stratum into one
-    # task — a straggler once any stratum outgrows a partition. The md5
-    # key's leading hex digit is the slice id: deterministic, monotone in
-    # the order and uniform by construction, so the rank costs ONE hash
-    # exchange and needs no checkpoint.
-    md5_key = F.md5(F.col(id_col).cast("string"))
-    ranked = grouped_prefix_sum(
-        df,
-        strata,
-        [F.asc(md5_key), F.asc(id_col)],
-        F.lit(1).cast("long"),
-        out_col="rnk",
-        slice_col=F.conv(F.substring(md5_key, 1, 1), 16, 10),
+    rank = Window.partitionBy(*strata).orderBy(
+        F.md5(F.col(id_col).cast("string")), F.col(id_col)
+    )
+    # The literal bound is what lets Catalyst infer the partial top-k below
+    # the stratum exchange; the per-stratum quota is applied after the join.
+    ranked = df.withColumn("rnk", F.row_number().over(rank)).where(
+        F.col("rnk") <= per_parent
     )
     return (
         ranked.join(F.broadcast(quotas), strata)

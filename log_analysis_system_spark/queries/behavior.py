@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import read_events
+from ..sources.catalog import read_events, read_table
 from . import query
 
 # MAD multiplier for the outlier fence (≈3 sigma for normal data under the
@@ -413,7 +413,7 @@ def term_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     document counts, thresholded at COOC_MIN_DOCS — the undirected edge list
     of the term graph (shared by `term_cooccurrence` and the triangle
     counter in graph.py)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     # Per-doc distinct term SETS in one aggregation (collect_set dedups,
     # array_sort fixes the canonical term_a < term_b order — Spark string
     # array_sort and the `<` comparison share UTF8 binary ordering), then
@@ -694,7 +694,7 @@ def q_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation itself shuffles.
     """
     t = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .where(F.col("term") != "")
         .distinct()

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 
 N_MERGES = 12
@@ -337,7 +338,7 @@ def q_bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed design; the result is assembled from the {N_MERGES}
     1-row driver collects (the merges ARE driver state, like Lloyd's
     centroids), so the returned DataFrame is a literal of bounded size."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     merges, _ = train_bpe(word_vocab(docs), N_MERGES)
     return spark.createDataFrame(
         merges,
@@ -357,7 +358,7 @@ def q_bpe_vocab_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deliberately shares `bpe_vocab_train`'s sequential-recurrence oracle:
     the hash match IS the proof that batching changes wall-clock shape
     (driver round-trips sublinear in vocab size), never output."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     merges, _ = train_bpe(word_vocab(docs), N_MERGES, batch_size=4)
     return spark.createDataFrame(
         merges,
@@ -377,7 +378,7 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     words against the (word -> merged symbol count) map — the corpus is
     never re-segmented, and word order within docs is irrelevant to the
     count, so no window is needed."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     _, final = train_bpe(word_vocab(docs), N_MERGES)
     doc_words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
@@ -432,7 +433,7 @@ def q_training_manifest_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shard-level rows return."""
     from ..operators.sampling import grouped_prefix_sum
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     _, final = train_bpe(word_vocab(docs), N_MERGES)
     doc_words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
@@ -507,7 +508,7 @@ def q_bpe_oov_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical shape to bpe_tokenize — one word-freq agg over the
     train split, bounded per-round training, then one broadcast
     left-join of the val split's words; the fallback is a projection."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 2 == 0)
     _, final = train_bpe(word_vocab(train), N_MERGES)
     val = docs.where(F.col("doc_id") % 2 == 1)
@@ -562,7 +563,7 @@ def build_bpe_index(
     memoized (word -> n_syms, syms) segmentation of every training word,
     so serve-time tokenization of seen words is a broadcast join with no
     recompute. Rebuild = overwrite (derived data)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     merges, final = train_bpe(word_vocab(docs), n_merges, batch_size)
     spark.createDataFrame(
         merges,
@@ -696,7 +697,7 @@ def q_tokenizer_fertility_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `tokenize_with_bpe_index(broadcast_vocab=False)`). The unigram twin
     of this audit is `unigram_lm_segment_stats`; this row adds the
     chars-per-token compression rate that decides storage/compute cost."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     _, final = train_bpe(word_vocab(docs), N_MERGES)
     doc_words = docs.select(
         "source", F.explode(F.split("text", " ")).alias("word")
@@ -863,7 +864,7 @@ def q_wordpiece_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle codegen'd fold; lineage truncated per round. The
     oracle shares `_train_ctes`' merge-application recurrence verbatim
     with the BPE oracle — only the best{{r}} selection CTE differs."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     merges, _ = train_wordpiece(word_vocab(docs), WP_MERGES)
     return spark.createDataFrame(
         merges,

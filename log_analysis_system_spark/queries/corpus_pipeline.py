@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import ORACLES, query
 from .dedup import q_dedup_minhash_lsh
 from .text_analysis import _EN_STOPWORDS, _STOP_IN_SQL
@@ -84,7 +85,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; the clustering variant (canonical doc per component) is
     ``dedup_components``.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_events, read_table
 from . import query
 
 _PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_shipdate", "l_returnflag")
@@ -42,7 +43,7 @@ def q_dq_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-column rows are unpivoted from that single result row, so no
     per-column rescans exist.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(*_PROFILE_COLS)
+    li = read_table(spark, sf_dir, "lineitem").select(*_PROFILE_COLS)
     agg = li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         *[F.count(c).alias(f"cnt_{c}") for c in _PROFILE_COLS],
@@ -100,10 +101,10 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Checks are unioned as independent single-row aggregates, so Spark
     schedules them as parallel jobs over pruned scans.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    li = read_table(spark, sf_dir, "lineitem")
+    ev = read_events(spark, sf_dir)
 
     def one(name: str, df: DataFrame) -> DataFrame:
         return df.select(
@@ -281,8 +282,6 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-ratio collapses to one division of integer cross-products — the
     drift pass is one conditional-aggregate scan + a per-feature scalar
     broadcast, no shuffle wider than the bucket table."""
-    from ..sources.catalog import read_events
-
     ev = read_events(spark, sf_dir)
     in_a = (F.col("ts") < F.lit(f"{DRIFT_CUT} 00:00:00").cast("timestamp_ntz")).cast("long")
     num = ev.select(
@@ -371,8 +370,6 @@ def q_benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One scan + a 9-row aggregate; the total joins back as a broadcast
     scalar."""
-    from ..sources.catalog import read_events
-
     ev = read_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("long")
     digits = ev.where(cents >= 1).select(
@@ -453,8 +450,6 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the prefix sums never see raw events."""
     from pyspark.sql import Window
 
-    from ..sources.catalog import read_events
-
     ev = read_events(spark, sf_dir)
     in_a = (
         F.col("ts") < F.lit(f"{DRIFT_CUT} 00:00:00").cast("timestamp_ntz")
@@ -533,7 +528,7 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded aggregate over it. If rows_at_risk > 0 the fix is coarsening
     the generalization (wider bands) or suppressing the risky classes —
     both re-runs of this same query shape."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     classes = cust.groupBy(
         "c_nationkey",
         "c_mktsegment",
@@ -600,7 +595,7 @@ def q_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     its two columns."""
     out = None
     for table, lhs, rhs in FD_CANDIDATES:
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        df = read_table(spark, sf_dir, table)
         g = df.groupBy(lhs).agg(F.countDistinct(rhs).alias("n_rhs"))
         viol = F.sum((F.col("n_rhs") > 1).cast("long"))
         one = g.agg(
@@ -659,8 +654,8 @@ def q_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: detail collapses to one row per order before the join;
     header-detail is the orderkey equi-join the engine already co-locates;
     the audit is one conditional aggregate over slim reconciled rows."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     detail = li.groupBy("l_orderkey").agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
             "line_total_c"
@@ -746,7 +741,7 @@ def q_mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized input."""
     from ..operators.sampling import global_rank
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.expr(
             "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
@@ -822,7 +817,7 @@ def q_fuzzy_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     phonetic buckets to subdivide hot blocks — exactly how production
     ER systems handle skew); the edit-distance evaluation itself is a
     codegen scalar inside the joined row."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    c = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
     a = c.select(
@@ -898,8 +893,8 @@ def q_modality_integrity_checks(
     uniqueness, and two zero-shuffle projections (dimension + zero-test
     via exists over the array) — nothing wider than a bigint key ever
     shuffles."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    docs = read_table(spark, sf_dir, "documents")
+    emb = read_table(spark, sf_dir, "embeddings")
 
     def one(name: str, df: DataFrame) -> DataFrame:
         return df.select(
@@ -987,7 +982,7 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     count(DISTINCT) as the standard two-phase expand-agg), then a
     bounded audit rollup — same two-aggregate shape and knobs as the
     k-anonymity row, so the two reports coarsen together."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     classes = cust.groupBy(
         "c_nationkey",
         F.floor(F.col("c_acctbal") / K_ANON_BAL_W).cast("long").alias(
@@ -1073,7 +1068,7 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the |sensitive|-row global distribution (5 segments)
     against the class totals — zeros for absent combinations are what
     make TVD exact."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     cls = cust.groupBy(
         "c_nationkey",
         F.floor(F.col("c_acctbal") / K_ANON_BAL_W).cast("long").alias(
@@ -1193,7 +1188,7 @@ def q_wasserstein_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor (`streaming/drift.py`), so batch and served distances can
     never disagree about the metric — the `drift_psi`/`drift_labels`
     contract."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return w1_from_cells(rest_of_corpus_cells(length_bucket_counts(docs)))
 
 
@@ -1334,8 +1329,6 @@ def q_randomized_response_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-is, floor semantics shared). Scale: one scan, one (day) hash-agg
     of conditional sums; the debias is arithmetic on the bounded
     day table."""
-    from ..sources.catalog import read_events
-
     ev = read_events(spark, sf_dir)
     keep = (
         F.conv(

@@ -19,11 +19,13 @@ md5(perm_id | shingle) so both engines compute identical signatures.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
-from ..sources.catalog import widen_scan
+from ..sources.catalog import per_snapshot, read_table, widen_scan
 
 N_MINHASH = 8  # 4 bands x 2 rows
 N_BANDS = 4
@@ -79,6 +81,20 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
+def _per_documents(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """``build(documents).cache()``, kept once per snapshot of
+    ``documents.parquet``: a rewrite of the file drops the old entry, so the
+    cache never serves the old rows."""
+    return per_snapshot(
+        spark,
+        name,
+        f"{sf_dir}/documents.parquet",
+        lambda: build(read_table(spark, sf_dir, "documents")).cache(),
+    )
+
+
 # ---------------------------------------------------------------- exact
 
 @query(
@@ -91,7 +107,7 @@ FROM documents GROUP BY 1
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content-hash groupBy: keep the lowest doc_id per hash.
     At 100 TB the shuffle carries only (32-byte hash, id) pairs."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select(F.md5(F.col("text").cast("binary")).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
@@ -229,14 +245,13 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate→signature lookups; the candidate side is broadcast (LSH keeps
     it result-sized, which DOES scale — broadcasting all docs would not).
     The quadratic blow-up is bounded per band bucket by LSH collision prob."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # Cache holds the shingle arrays too: measured faster at bench scale than
     # the slim-signature alternative (cache mh0..7 only, re-shingle just the
     # candidate docs via semi-join — tried, 2x slower cold from the extra
     # shuffle stages). At 100 TB flip that tradeoff: corpus-wide shingle
     # arrays won't fit executor storage, candidates are result-sized, so the
     # slim-cache + candidate-recompute form is the cluster configuration.
-    sig = doc_shingle_signatures(docs).cache()
+    sig = _per_documents(spark, sf_dir, "doc_shingle_signatures", doc_shingle_signatures)
     band_cols = F.array(
         *[
             F.concat_ws(
@@ -322,7 +337,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     +1/-1 votes weighted by term frequency, sign → 16-bit fingerprint.
     One explode + one grouped conditional aggregate (16 sums fused in a single
     hash-agg pass); near-dup docs land on equal or near-equal fingerprints."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
     )
@@ -400,18 +415,18 @@ def q_dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket occupancy stays bounded while the pigeonhole guarantee
     (threshold < bands) is preserved. Ref parity: extends the reference's
     dedup surface the same way the MinHash tier does."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
-    )
-    hashed = tok.select(
-        "doc_id", _hexint(F.md5(F.col("word").cast("binary"))).alias("wh")
-    )
+    def signatures(docs: DataFrame) -> DataFrame:
+        tok = docs.select(
+            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
+        )
+        hashed = tok.select(
+            "doc_id", _hexint(F.md5(F.col("word").cast("binary"))).alias("wh")
+        )
+        return hashed.groupBy("doc_id").agg(F.expr(_SIMHASH_ND_SPARK).alias("simhash"))
+
     # cache: both sides of the band self-join and the verify projection
     # read the signatures (the dedup_minhash_lsh precedent)
-    sig = hashed.groupBy("doc_id").agg(
-        F.expr(_SIMHASH_ND_SPARK).alias("simhash")
-    ).cache()
+    sig = _per_documents(spark, sf_dir, "simhash_neardup_signatures", signatures)
     bands = sig.select(
         "doc_id",
         "simhash",
@@ -543,7 +558,7 @@ def ngram_jaccard_pairs(docs: DataFrame, df_cap: int | None = None) -> DataFrame
     """N-gram Jaccard pairs via inverted-index join, optionally capped —
     candidate generation + overlap stats come from ``pair_overlap_stats``
     (see there for the exact-vs-``df_cap`` semantics)."""
-    joined = pair_overlap_stats(shingles(docs).cache(), df_cap)
+    joined = pair_overlap_stats(shingles(docs), df_cap)
     jac = F.col("inter_n") / (F.col("na") + F.col("nb") - F.col("inter_n"))
     return joined.where(jac >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
@@ -575,7 +590,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join. This registry entry runs uncapped (exact semantics = the
     oracle); at 100 TB pass ``df_cap`` to ``ngram_jaccard_pairs`` to bound
     hot-shingle blowup — see there for the semantics."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(docs, df_cap=None)
 
 
@@ -638,6 +653,9 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
             converged = True
             break
         prev_sum = cur_sum
+    # Every round's labels are checkpointed, so the result no longer reads
+    # the edge cache; keeping it would pin the edges for the session's life.
+    bidir.unpersist()
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
@@ -933,7 +951,7 @@ def q_entity_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (block size)^2, so block choice (prefix, phonetic code, LSH bucket)
     bounds the quadratic term exactly like LSH bands do for MinHash.
     Aggregated to per-(name pair, distance) counts."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    p = read_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
         F.split(F.col("p_name"), " ").getItem(0).alias("blk"),
@@ -994,7 +1012,7 @@ def q_chunk_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never text), one hash-agg for chunk frequencies, one equi-join back on
     the hash (the natural co-partitioning), one final per-doc agg. All
     shuffles carry fixed-width rows; nothing is quadratic."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     chunks = docs.select(
         "doc_id",
         F.explode(
@@ -1113,13 +1131,13 @@ def q_incremental_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index alone (`screen_delta` — equivalence-tested against this
     inline query). Signatures stay the zero-shuffle row-wise projection
     (doc_shingle_signatures)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     is_delta = (F.col("doc_id") % DELTA_MOD) == (DELTA_MOD - 1)
 
     texth = docs.select(
         "doc_id", F.md5(F.col("text").cast("binary")).alias("th")
     )
-    sig = doc_shingle_signatures(docs).cache()
+    sig = _per_documents(spark, sf_dir, "doc_shingle_signatures", doc_shingle_signatures)
     bands = sig.select("doc_id", F.explode(_band_keys_col()).alias("band_key"))
     meta = sig.select("doc_id", "sh_arr", "n_sh")
     return _screen_verdicts(
@@ -1307,7 +1325,6 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_cap stop-gram bound ngram_jaccard_pairs applies is the deployment
     mitigation."""
     K, W = WINNOW_K, WINNOW_W
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     gh = F.expr(
         f"transform(sequence(1, greatest(size(split(text, ' ')) - {K - 1}, 1)), "
         f"i -> cast(conv(substring(md5(cast(concat_ws(' ', "
@@ -1318,7 +1335,9 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram md5s for EVERY window position — O(n^2) md5 per doc (measured
     # 104 s -> 4.8 s at sf0.1, 22x). Same materialization pattern as
     # similarity._quantized; the cached projection is ~8 B/token.
-    ghf = docs.select("doc_id", gh.alias("gh")).cache()
+    ghf = _per_documents(
+        spark, sf_dir, "winnow_gram_hashes", lambda docs: docs.select("doc_id", gh.alias("gh"))
+    )
     wins = ghf.select(
         "doc_id",
         F.array_distinct(
@@ -1484,7 +1503,7 @@ def containment_pairs(docs: DataFrame, df_cap: int | None = None) -> DataFrame:
     (bigint `div`, matching the oracle's `//` — double division drifts by
     1 ppm once the numerator passes ~2^53), and which doc is the contained
     (smaller-set) one — the drop candidate under a keep-superset policy."""
-    joined = pair_overlap_stats(shingles(docs).cache(), df_cap)
+    joined = pair_overlap_stats(shingles(docs), df_cap)
     cont = F.expr("CAST(inter_n * 1000000 div least(na, nb) AS BIGINT)")
     return (
         joined.withColumn("containment_ppm", cont)
@@ -1541,7 +1560,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB configuration is ``containment_pairs(docs, df_cap=K)`` — the
     stop-gram candidate bound shared with ``ngram_jaccard_pairs`` via
     ``pair_overlap_stats`` — oracle-checked by ``dedup_containment_capped``."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return containment_pairs(docs, df_cap=None)
 
 
@@ -1601,7 +1620,7 @@ def q_dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact one — end-to-end: a hot shingle can never blow up the
     self-join into the |docs-sharing-it|^2 regime, and emitted ppm values
     are bit-identical to the exact tier for every emitted pair."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return containment_pairs(docs, df_cap=CONTAIN_DF_CAP)
 
 
@@ -1688,7 +1707,7 @@ def q_ppjoin_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning factor is measured, not asserted: see `ppjoin_prune_audit`."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     sh = shingles(docs)
     df_tbl = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")
@@ -1793,7 +1812,7 @@ def q_ppjoin_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked number instead of a docstring assertion."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     sh = shingles(docs).localCheckpoint(eager=False)
     inv_n = (
         sh.select(F.col("doc_id").alias("doc_a"), "shingle")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 from .dedup import JACCARD_THRESHOLD, SHINGLE_CTE, shingle_array
 
@@ -87,7 +88,7 @@ def q_sorted_neighborhood_dedup(
     size — and every stage is an equi-join or a block-partitioned
     window; the shingle arrays join the slim candidate list, not each
     other."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         F.substring(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 from .dedup import shingles
 
@@ -87,7 +88,7 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-merging is one window + hash-agg keyed by (doc_a, doc_b), bounded
     by true span overlap, not corpus size. Reports (doc pair, 1-based
     token starts, exact span token length) for spans >= SPAN_MIN_TOKENS."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return shared_substring_spans(
         docs, k=SPAN_K, min_tokens=SPAN_MIN_TOKENS, df_cap=SPAN_DF_CAP
     )
@@ -263,7 +264,7 @@ def q_substring_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     miner's plan — interval counts per doc are bounded by span structure,
     not corpus size; the corpus text itself is never shuffled (only
     (doc_id, start, end) triples move)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     spans = shared_substring_spans(
         docs, k=SPAN_K, min_tokens=SPAN_MIN_TOKENS, df_cap=SPAN_DF_CAP
     )
@@ -332,7 +333,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs), and each shingle contributes at most |sources|^2 pair rows —
     bounded by the source count (tens), not the corpus. One hash-agg per
     pair cell; |sources|^2 output rows."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     s = (
         shingles(docs.select(F.col("source").alias("doc_id"), "text"))
         .withColumnRenamed("doc_id", "source")
@@ -401,7 +402,7 @@ def q_corpus_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one source-keyed hash-agg on top of the scrub plan; output is
     |sources| rows."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     per_doc = q_substring_span_scrub(spark, sf_dir).select(
         "doc_id", "n_tokens", F.col("scrubbed_tokens").alias("scrubbed")
     )
@@ -658,7 +659,7 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     any test-scale df). Eval docs are never touched."""
     from .training_prep import EVAL_SOURCES
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     is_eval = F.col("source").isin(*EVAL_SOURCES)
     merged = contamination_intervals(docs, is_eval)
     per_doc = merged.groupBy("doc_id").agg(
@@ -732,7 +733,7 @@ def q_decontaminate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     move (doc_id, s, e) triples and the final doc-keyed join."""
     from .training_prep import EVAL_SOURCES
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     is_eval = F.col("source").isin(*EVAL_SOURCES)
     ivs = (
         contamination_intervals(docs, is_eval)

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 
 DB_SCALE = 16       # grid resolution: eps = 1/16 (power of two -> exact)
@@ -92,7 +93,7 @@ def q_grid_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness and scale argument."""
     from .dedup import connected_components
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     cells = (
         emb.select(
             F.floor(

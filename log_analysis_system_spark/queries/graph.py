@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 from .behavior import COOC_MIN_DOCS, term_pair_edges
 
@@ -352,10 +353,10 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     trading pairs via lineitem x orders, supplier ids offset above customer
     keys. The shared graph every iterative operator here walks — matches
     ``_EDGES_SQL`` exactly."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     pairs = (
@@ -383,10 +384,10 @@ def q_personalized_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame
     just surface overall hubs. Integer micro-unit recurrence (floor-div
     per-edge contributions), fixed {PR_ITERS} rounds, unrolled-CTE oracle
     — the established exact-iterative contract."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    c = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
+    n = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
     edges = trade_edges(spark, sf_dir)
@@ -497,10 +498,10 @@ def lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     `label_propagation_communities` and `modularity_communities`."""
     from pyspark.sql import Window
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     trades = (
@@ -907,10 +908,10 @@ def q_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator was tried here and measured SLOWER — 4.3 -> 6.1 s warm —
     the interpreted slice/transform HOF tower costs more than the
     codegen'd self-join at deg<=48 pair volume; kept the join form.)"""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     cs = (
@@ -1323,7 +1324,7 @@ def q_rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(wa).cast("long").alias("ra"),
         )
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     freq = (
         docs.select(F.explode(F.split("text", " ")).alias("term"))
         .where(F.col("term") != "")

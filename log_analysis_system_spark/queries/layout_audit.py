@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
+from ..sources.catalog import read_table
 from ..sources.layout import zvalue
 
 Z_BITS = 8                      # per-dimension bits
@@ -180,7 +181,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task global window); binning + per-bin stats are one hash agg."""
     from ..operators.sampling import grouped_prefix_sum
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     files = (
         li.groupBy(F.to_date("l_shipdate").alias("day"))
         .agg(F.count(F.lit(1)).alias("n_rows"))

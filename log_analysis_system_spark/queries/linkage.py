@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 from .dedup_blocking import SN_BLOCK_LEN, SN_KEY_LEN
 
@@ -267,7 +268,7 @@ def q_fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     `markov_attribution` contract), in exact Python integers mirrored
     term-for-term by the oracle's unrolled-CTE bigint EM. At 100 TB the
     only data-sized stages are the window and two equi-joins."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         F.substring(

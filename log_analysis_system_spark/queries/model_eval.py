@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import grouped_prefix_sum
+from ..sources.catalog import read_table
 from . import query
 from .training_prep import (
     QD_ROUNDS,
@@ -93,7 +94,7 @@ def q_discriminator_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges regardless of corpus size. Training cost is the same
     {QD_ROUNDS}×5-scalar-aggregate loop `quality_discriminator` pays;
     the metric itself adds O(distinct scores) work."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     feat = _qd_features(docs).localCheckpoint(eager=False)
     w = train_quality_discriminator(feat)
     score = " + ".join(f"x{j} * {w[j]}L" for j in range(5))
@@ -193,7 +194,7 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     and DuckDB agree bit for bit. Scale: one projection + one
     {ECE_BUCKETS}-ary hash-agg over the corpus — map-side combinable,
     no window, no join; training cost as `quality_discriminator`."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     feat = _qd_features(docs).localCheckpoint(eager=False)
     w = train_quality_discriminator(feat)
     score = " + ".join(f"x{j} * {w[j]}L" for j in range(5))
@@ -280,7 +281,7 @@ def q_discriminator_group_fairness(
     the metric pass is one source-keyed hash-agg over the scored
     projection — map-side combinable, no joins beyond the 1-row weight
     broadcast already inside the scoring expression."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     feat = _qd_features(docs).localCheckpoint(eager=False)
     w = train_quality_discriminator(feat)
     score = " + ".join(f"x{j} * {w[j]}L" for j in range(5))
@@ -389,7 +390,7 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     join run on that BOUNDED table via broadcast joins — data volume never
     enters the quadratic/cubic terms (the same reduce-first seam as
     `discriminator_auc`'s score histogram). No windows, no driver loop."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_tokens = F.size(words).cast("long")
     n_alpha = F.length(F.regexp_replace("text", " ", "")).cast("long")

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import documents_as_media, extract_features
+from ..sources.catalog import read_table
 from . import query
 
 
@@ -30,7 +31,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas (Arrow batches) feature extraction, metadata projection.
     The float feature vector is dropped from the oracle-compared output
     (doubles derived in Python; the byte stats fully pin the plumbing)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     media = documents_as_media(docs)
     feats = extract_features(media)
     return feats.select("media_id", "byte_len", "first_byte")
@@ -86,7 +87,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     movement is whatever the caller aggregates downstream."""
     from ..operators.multimodal import decode_features
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     raster = F.rpad(F.substring("text", 1, _RASTER_LEN), _RASTER_LEN, " ")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -127,7 +128,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte and character offsets coincide)."""
     from ..operators.multimodal import sample_frames
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     media = documents_as_media(docs)
     frames = sample_frames(media, frame_size=FRAME_SIZE, stride=FRAME_STRIDE)
     return frames.select(
@@ -193,7 +194,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection."""
     from ..operators.multimodal import audio_features
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     raster = F.rpad(F.substring("text", 1, AUDIO_BYTES), AUDIO_BYTES, " ")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -255,7 +256,7 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out (VID_FRAMES rows per payload)."""
     from ..operators.multimodal import video_frame_features
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     raster = F.rpad(F.substring("text", 1, _VID_RASTER), _VID_RASTER, " ")
     frame_parts = []
     for i in range(VID_FRAMES):
@@ -325,7 +326,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature extraction)."""
     from ..operators.multimodal import decode_features, resize_decoded_images
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     raster = F.rpad(F.substring("text", 1, _RASTER_LEN), _RASTER_LEN, " ")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -418,7 +419,7 @@ def q_multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: decode+hash is a zero-shuffle Arrow projection; the band join
     shuffles 4 small rows per image; no all-pairs anywhere."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     raster = F.expr(
         f"rpad(substring(text, 1, {_RASTER_LEN}), {_RASTER_LEN}, "
         f"concat(text, ' '))"

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import epoch_us
 from ..operators.asof import asof_join
-from ..sources.catalog import read_events
+from ..sources.catalog import read_events, read_table
 from . import query
 
 
@@ -41,7 +41,7 @@ def q_asof_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     is well-defined in both engines."""
     ev = read_events(spark, sf_dir).select("event_id", "user_id", "ts")
     orders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_custkey", "o_orderdate")
         .agg(
             F.max_by("o_orderkey", "o_orderkey").alias("o_orderkey"),
@@ -74,7 +74,7 @@ def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping sets / ROLLUP (absent from the reference — §2.4 notes the
     gap): subtotals per flag, per (flag,status), and grand total in one pass
     (Spark expands to a single Expand + aggregate, not N scans)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -253,9 +253,9 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's Expand emits the three grouping shapes map-side, so one shuffle
     replaces three separate scans+aggs. GROUPING() flags disambiguate
     summary NULLs from data NULLs, matching the oracle bit-for-bit."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -300,10 +300,10 @@ def q_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusion list. The excluded-supplier set is dim-sized, so the anti-join
     broadcasts; count(DISTINCT) runs as Spark's two-phase partial-distinct
     expand, never a driver-side distinct."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     excluded = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        read_table(spark, sf_dir, "supplier")
         .where(F.col("s_acctbal") < SUPPLIER_ACCTBAL_FLOOR)
         .select("s_suppkey")
     )
@@ -335,7 +335,7 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle (Spark expands grouping sets map-side; no multi-pass union).
     Money summed as exact integer cents — float sums are order-dependent and
     can't be hash-compared across engines."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -468,7 +468,7 @@ def q_analytic_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     here). The reference only ever uses row_number (W1-W3)."""
     from pyspark.sql import Window
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumn(
+    o = read_table(spark, sf_dir, "orders").withColumn(
         "price_cents", F.round(F.col("o_totalprice") * 100).cast("long")
     )
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -975,7 +975,7 @@ def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a silent one: Spark ANSI mode raises on overflow)."""
     from ..operators.sampling import global_rank
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
             "rev_c"
@@ -1048,7 +1048,7 @@ def q_copurchase_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     by part key. Top-k compiles to the per-partition heap."""
     from ..operators.topn import global_topn
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     items = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     ).distinct()
@@ -1383,7 +1383,7 @@ def q_bloom_membership_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at most {BLOOM_M} rows — a broadcastable relation standing in for
     the packed bitset), and a probe hits iff all {BLOOM_K} of its
     positions join. Counts and the ppm rate are exact integers."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     from .training_prep import EVAL_SOURCES
 
     is_eval = F.col("source").isin(*EVAL_SOURCES)
@@ -1494,7 +1494,7 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.xxhash64("event_id"), F.lit(SKEW_JOIN_SALTS)).alias("salt"),
     )
     cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment")
         .withColumn(
             "salt", F.explode(F.expr(f"sequence(0, {SKEW_JOIN_SALTS - 1})"))
@@ -1712,7 +1712,7 @@ def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     over all orders — the green row is the proof that the incremental
     merge path equals recomputation (the IVM contract), the aggregate
     twin of `incremental_dedup_delta`."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("key"),
         F.col("o_orderdate"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("value_c"),
@@ -1899,7 +1899,7 @@ def q_weighted_value_percentiles(
     thresholds."""
     from ..operators.sampling import grouped_prefix_sum
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     pre = (
         li.groupBy(
             "l_returnflag",
@@ -2059,13 +2059,13 @@ def q_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists for the audit and would be OMITTED in production — the entire
     point is answering the size question without running the join."""
     a_freq = _key_freq(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+        read_table(spark, sf_dir, "lineitem").select(
             F.col("l_partkey").alias("pk")
         ),
         "fa",
     ).localCheckpoint(eager=False)
     b_freq = _key_freq(
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_brand").isin(*JC_BRANDS))
         .select(F.col("p_partkey").alias("pk")),
         "fb",
@@ -2170,7 +2170,7 @@ def q_table_stats_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the same output contract. Numerics are integerized
     (cents/milli) before any aggregate, so every statistic is exact and
     partitioning-independent."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     out = None
     specs = [(c, s) for c, s in ANALYZE_NUMERIC] + [
         (c, None) for c in ANALYZE_CATEGORICAL
@@ -2459,10 +2459,10 @@ def q_incremental_join_maintenance(
     retractions compose with the weighted-delta law the aggregate row
     implements (w = -1 rows delete their join partners)."""
     split = F.lit(IVM_SPLIT_DATE).cast("timestamp")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.col("l_linenumber").cast("long").alias("l_linenumber"),
         F.round(
@@ -3046,7 +3046,7 @@ def q_aqp_revenue_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded). z = 2 keeps the bound rational. Scale shape: ONE scan,
     one hash-agg with conditional sums — the estimate, the truth, and
     the error bar in a single pass."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
         F.round(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import global_rank
+from ..sources.catalog import read_table
 from . import query
 
 SAMPLE_K = 200
@@ -72,7 +73,7 @@ def q_sample_weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The top-K is a TakeOrderedAndProject heap at any scale — the one-pass,
     shuffle-light way to draw a weighted corpus sample (vs. sorting 100 TB
     or a driver-side reservoir)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     w = F.greatest(F.length("text"), F.lit(1))
     nkey = F.round(F.log(_u01("doc_id")) / w * 1e9).cast("long")
     return (
@@ -105,7 +106,7 @@ def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     rand()-based splits lack, and the reason eval sets silently leak).
     Emits per-split counts + id range; the split column itself is a pure
     projection any downstream query filters on (pushdown-composable)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(
             F.substring(
@@ -164,7 +165,7 @@ def q_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative partition counts — so NO stage funnels the corpus into a
     single task (the naive ``row_number() OVER (ORDER BY ...)`` does).
     Everything after is projection + aggregate."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tokens")
     )
@@ -312,7 +313,7 @@ def q_split_leak_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import q_dedup_minhash_lsh
 
     pairs = q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(
             F.substring(
@@ -407,7 +408,7 @@ def q_split_leak_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q_embedding_near_dup(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(
             F.substring(
@@ -509,7 +510,7 @@ def q_leak_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = q_dedup_components(spark, sf_dir).select(
         "doc_id", "component_id"
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     lab = (
         docs.select("doc_id")
         .join(comp, "doc_id", "left")
@@ -578,7 +579,7 @@ def q_epoch_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus text itself never moves (loaders fetch by manifest order)."""
     from ..operators.sampling import global_rank
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         F.md5(
@@ -656,7 +657,7 @@ def q_rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per doc + one max_by hash-agg keyed on doc_id; the audit join
     is doc-keyed. Plain column expressions end to end (md5 shared
     bit-for-bit with the oracle), no windows, no collects."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     pairs = docs.select(
         "doc_id",
         F.explode(

@@ -20,7 +20,7 @@ from ..functions import (
     time_minute_key,
     zero_pad,
 )
-from ..sources.catalog import read_events
+from ..sources.catalog import read_events, read_table
 from . import query
 
 
@@ -118,7 +118,7 @@ def q_array_function_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites reference parity: the reference has no array columns at all
     (flat log rows); this surface exists for the embedding extension.
     """
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     mq = "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
     return emb.select(
         "vec_id",

@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import cache_partitioned, per_snapshot, read_events
+from ..sources.catalog import (
+    cache_partitioned,
+    per_snapshot,
+    read_events,
+    read_table,
+)
 
 from ..operators.sessionize import session_aggregate, sessionize
 from ..operators.aggregates import SESSION_BINS, session_bin_ratios
@@ -149,7 +154,7 @@ def q_session_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF-proportional, so a forced broadcast would OOM at scale (locally it
     auto-broadcasts under the threshold)."""
     agg = _session_agg(spark, sf_dir)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     joined = agg.join(
         cust, agg["user_id"] == cust["c_custkey"], "inner"
     )

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topn import grouped_topn
+from ..sources.catalog import read_table
 from . import query
 
 N_QUERIES = 10  # vec_id < 10 serve as the query set
@@ -60,7 +61,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache it re-runs per branch. At scale this is the materialized
     integer-vector projection an embedding index would store anyway;
     Spark's CacheManager dedups by logical plan across calls."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", F.expr(_QUANT).alias("e"))
     # norm precomputed ONCE per vector: pair-stage cosines otherwise re-fold
     # both norms per candidate pair (2 interpreted HOF folds x |pairs|).
@@ -1563,7 +1564,7 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally)."""
     assigned = _kmeans_assigned(spark, sf_dir)
     vecs = _quantized(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"
     )
     members = (
@@ -1671,7 +1672,7 @@ def q_contrastive_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     vecs = _quantized(spark, sf_dir)
-    labels = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    labels = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label"
     )
     q = (
@@ -1764,7 +1765,7 @@ def q_cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is two hash aggregates on (cluster, label) then cluster — map-side
     combinable, output O(K)."""
     assigned = _kmeans_assigned(spark, sf_dir)
-    labels = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    labels = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label"
     )
     by_label = (
@@ -1935,7 +1936,7 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_col="ra",
     ).select("query_id", "neighbor_id", F.col("ra").cast("long").alias("ra"))
     # sparse pool: Jaccard via the inverted shingle index
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     sh = shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     qsh = sh.where(F.col("doc_id") < N_QUERIES).select(
@@ -2055,8 +2056,8 @@ def q_source_embedding_separation(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: the flatten+agg is dim x corpus rows map-side-combined down to
     dim x |sources| centroid cells; the pair join is centroid x centroid
     (bounded by source count), never corpus-sized."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    emb = read_table(spark, sf_dir, "embeddings")
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source"
     )
     q = emb.select("vec_id", F.expr(_QUANT).alias("e")).join(

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topn import grouped_topn
+from ..sources.catalog import read_table
 from . import query
 from .similarity import (
     N_DIMS,
@@ -337,7 +338,7 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: no counterpart in the reference (no linear-algebra surface);
     extension per SURVEY §2.13."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     xq = emb.select(
         "vec_id",
         F.posexplode(F.expr(_QUANT)).alias("j", "x"),

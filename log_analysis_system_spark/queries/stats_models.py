@@ -39,7 +39,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import register_views
+from ..sources.catalog import read_events, read_table, register_views
 from . import query
 
 # Truncation-division (toward zero) on a possibly-negative numerator,
@@ -113,7 +113,7 @@ def q_survival_churn_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     size), which is why the two order-only windows over it are allowlisted
     bounded-frame windows, like key_skew_profile's counts-of-counts pass.
     The horizon (global max order day) is a 1-row broadcast."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     day = F.expr(
         f"unix_micros(cast(o_orderdate as timestamp_ltz)) div {_DAY_US}"
     )
@@ -462,7 +462,7 @@ def q_grouped_ols_two_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-moments, evaluated in double with the SAME operand values and
     operation order on both engines (the trend_fit overflow argument:
     the n*S products exceed int64, the raw sums cannot)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_returnflag").alias("grp"),
         F.round("l_quantity").cast("long").alias("x1"),
@@ -561,7 +561,7 @@ def q_winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation division matches DuckDB floor division). Scale shape: one
     hash-agg to the histogram, windows partitioned BY GROUP over bounded
     cent-value domains, one closing agg — never a global sort."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     hist = li.groupBy(
         F.col("l_returnflag").alias("grp"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
@@ -688,7 +688,7 @@ def q_bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval), sorted INSIDE an aggregate (array_sort over collect_list)
     so no window touches the data. Reference: the reference system has
     no uncertainty machinery at all."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     o = orders.select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -790,7 +790,7 @@ def q_sprt_conversion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sprt_daily_counts` / `sprt_score` split is shared with the
     streaming monitor (streaming/drift.py) so batch and served verdicts
     can never diverge — the equivalence is test-pinned."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_events(spark, sf_dir)
     return sprt_score(sprt_daily_counts(ev))
 
 
@@ -885,7 +885,7 @@ def q_diff_in_diff_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces all eight sufficient statistics (no pivot, no second scan,
     no window); the estimator itself is O(1) arithmetic on a 1-row
     table."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_events(spark, sf_dir)
     arm = (
         F.conv(
             F.substring(
@@ -999,7 +999,7 @@ def q_zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     {K}-row table (bm25_rank's allowlist argument), then the
     `trend_fit_events` closed-form OLS on micro-nat integer points
     (floor(ln * 1e6) — the established cross-engine log idiom)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tf = (
         docs.select(F.explode(F.split("text", " ")).alias("term"))
         .groupBy("term")
@@ -1090,7 +1090,7 @@ def q_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hash-agg to the zero-filled dense calendar
     (the MASE densify argument), one lag window over O(days) rows
     (calendar-bounded allowlist), limits as 1-row scalar subqueries."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_events(spark, sf_dir)
     observed = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
     )
@@ -1204,7 +1204,7 @@ def q_eb_shrunk_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly in the oracle — no IEEE summation anywhere. Scale shape: one
     documents scan reduces to a per-source (n, k) tuple; everything after
     runs on the O(sources) table with 1-row broadcast cross joins."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_tokens = F.size(words).cast("long")
     n_alpha = F.length(F.regexp_replace("text", " ", "")).cast("long")
@@ -1374,7 +1374,6 @@ def q_propensity_stratified_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CUPED idiom); output carries the per-stratum table AND
     the scalar ATT. Scale shape: two user-keyed hash-aggs (pre and
     post) + one join, then a 5-row stratum table."""
-    from ..sources.catalog import read_events
 
     events = read_events(spark, sf_dir)
     cut = F.lit(ATT_CUT).cast("timestamp_ntz")

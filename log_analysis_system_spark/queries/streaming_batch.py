@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import read_events
+from ..sources.catalog import read_events, read_table
 
 from ..operators.topn import grouped_topn
 from . import query
@@ -305,7 +305,7 @@ def q_stream_corpus_accept(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_expr,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.withColumn("quality", quality_expr())
         .where(F.col("quality") >= CORPUS_MIN_QUALITY)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import epoch_us
-from ..sources.catalog import read_events
+from ..sources.catalog import read_events, read_table
 from . import query
 
 GAP_MINUTES = 30
@@ -1373,7 +1373,7 @@ def q_croston_demand_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(x/2.0) there); the closing rate is floor'd double division in
     both engines (IEEE-correctly rounded)."""
     dem = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy(
             "l_partkey", F.col("l_shipdate").cast("date").alias("day")
         )

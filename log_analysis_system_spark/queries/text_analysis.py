@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topn import grouped_topn
+from ..sources.catalog import read_table
 from . import query
 
 # English function words for the n-gram/stopword language heuristic.
@@ -34,7 +35,7 @@ FROM documents
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting + char counts per document (the BPE-ish
     regex variant is `F.split(text, '[^a-z0-9]+')` — same operator shape)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
@@ -65,7 +66,7 @@ FROM scored
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID via stopword-hit ratio (n-gram heuristic family). Array
     `filter` keeps the whole computation vectorized in codegen."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     stop_hits = F.size(
         F.filter(words, lambda w: w.isin(*_EN_STOPWORDS))
@@ -104,7 +105,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring from length / token-shape / stopword features
     (the C4-style heuristic family): 0.5 * capped length + 0.3 * plausible
     avg token length + 0.2 * has-function-words."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_tokens = F.size(words).cast("long")
     n_alpha = F.length(F.regexp_replace("text", " ", "")).cast("long")
@@ -199,7 +200,7 @@ def q_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     except the parquet scan; the cheapest possible full-corpus screen
     and the natural FIRST stage before any LM- or embedding-based
     filter."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     feat = docs.select(
         "doc_id",
@@ -272,7 +273,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     length, so the dedup join at 100 TB carries 4 hashes per doc."""
     from .dedup import shingles
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     sh = shingles(docs)
     hashed = sh.select(
         "doc_id", F.md5(F.col("shingle").cast("binary")).alias("h")
@@ -331,7 +332,7 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace collapse, trim, lowercase — the standard pre-dedup cleanup
     stage of a training-data pipeline. Pure `regexp_replace` chain: one
     narrow map stage, no shuffle, scales embarrassingly at 100 TB."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     norm = normalize_text(F.col("text"))
     return docs.select(
         "doc_id",
@@ -378,7 +379,7 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     all of them). Pure codegen expressions, zero shuffle, zero UDFs.
     Composes the same operators exposed individually as `token_count`,
     `lang_id`, `quality_score`, and `text_normalize`."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_tokens = F.size(words).cast("long")
     n_alpha = F.length(F.regexp_replace("text", " ", "")).cast("long")
@@ -443,7 +444,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact variant). Two shuffles at scale: tf groupBy (doc, term)
     and the df groupBy (term) joined back on term — the term join is the
     natural inverted-index co-partitioning."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
     )
@@ -500,7 +501,7 @@ def q_doc_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode feeding both the frequency groupBy and (re-exploded) the
     inverted-index join back on term; corpus total stays in-plan as a
     1-row cross join."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
     )
@@ -549,7 +550,7 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     array expressions — size/array_distinct over the in-row token list —
     so the whole operator is a zero-shuffle codegen projection at any
     scale; no explode, no aggregation."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     grams = F.when(
         F.size(words) >= _REP_N,
@@ -638,7 +639,7 @@ def q_countmin_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises genuine overestimation; a deployment sizes W ~ e/eps."""
     from .dedup import MINHASH_A, MINHASH_B, MINHASH_P
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     terms = docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("term")
     )
@@ -761,7 +762,7 @@ def q_source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline — result-sized, AQE-broadcast into the per-source rollup."""
     from .dedup import q_dedup_minhash_lsh
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_tokens = F.size(words).cast("long")
     n_alpha = F.length(F.regexp_replace("text", " ", "")).cast("long")
@@ -847,7 +848,7 @@ def q_heavy_hitters_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "term")
     ).select(
@@ -1020,7 +1021,7 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     making every double rounding point identical on both engines."""
     from ..operators.topn import global_topn
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tf_cols = [
         F.expr(f"CAST(size(filter(w, x -> x = '{t}')) AS BIGINT)").alias(
             f"tf{i}"
@@ -1105,7 +1106,7 @@ def q_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     same values in DuckDB), making the vectorizer itself oracle-checkable —
     unlike murmur-based hashingTF whose hash differs across engines. One
     explode + one (doc_id, bucket) hash-aggregate; no vocabulary state."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
@@ -1173,7 +1174,7 @@ def q_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     loud ANSI overflow, not silent."""
     from ..operators.topn import global_topn
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(F.split(F.col("text"), " ").alias("w"))
     uni = toks.select(F.explode("w").alias("tok")).groupBy("tok").agg(
         F.count(F.lit(1)).alias("n")
@@ -1259,7 +1260,7 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     `lang_id` emits), one aggregate builds the bounded |labels|^2 cell
     table, and the marginals are windows OVER that bounded table — the
     evaluation never rescans the corpus."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     stop_hits = F.size(
         F.filter(words, lambda w: w.isin(*_EN_STOPWORDS))
@@ -1357,7 +1358,7 @@ def q_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only corpus-sized shuffles are the count hash-aggs and the final
     per-doc rollup. In-sample scoring is intentional (corpus self-model);
     train/score splits compose exactly like `bpe_oov_audit`."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split("text", " ").alias("w"))
     bg = toks.where(F.size("w") >= 2).select(
         "doc_id",
@@ -1633,7 +1634,7 @@ def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical shape to dedup_exact — the shuffle carries only
     (32-byte hash, id, changed-bit) after a codegen'd projection."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     n = docs.select(
         "doc_id",
         "text",
@@ -1719,7 +1720,7 @@ def q_source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the (sources x vocab) grid — bounded by vocabulary and source
     count, never corpus size (cap the grid with a top-K vocabulary at
     open-vocab scale, the standard JSD-over-top-terms practice)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     w = docs.select(
         "source", F.explode(F.split("text", " ")).alias("word")
     ).where(F.col("word") != "")
@@ -1903,7 +1904,7 @@ def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase distinct aggregate per n, all map-side combinable; at open
     scale swap count_distinct for approx_count_distinct (the
     `sketch_rollup_users` HLL pattern) without changing the shape."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
 
     def grams(k: int):
         if k == 1:
@@ -2046,7 +2047,7 @@ def q_kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks the strategy (`pair_overlap_stats` documents the same stance).
     Ref: the reference has no LM family at all; extension per SURVEY
     §2.13."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split("text", " ").alias("w"))
     bg = toks.where(F.size("w") >= 2).select(
         "doc_id",
@@ -2135,7 +2136,7 @@ def q_vocab_coverage_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer floor divisions. Scale shape: explode -> per-(source, term)
     hash-agg -> per-source count-of-counts hash-agg; both aggregates are
     map-side combinable and the second's input is vocabulary-sized."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tc = (
         docs.select(
             "source", F.explode(F.split(F.col("text"), " ")).alias("term")
@@ -2254,7 +2255,7 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration, no driver collects."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     t = docs.select(

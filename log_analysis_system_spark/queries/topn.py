@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import read_events
+from ..sources.catalog import read_events, read_table
 
 from ..functions.compat import group_concat_distinct
 from ..operators.topn import grouped_topn, top10_categories_by_counts
@@ -171,18 +171,18 @@ def q_area_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     java:71-91), window top-3 per area (W1), CASE banding (P7), product-status
     derivation (F7 analog).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
+    part = read_table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_size"
     )
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 
 
@@ -47,7 +48,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: scan + pushed-down predicate + exact
     grouped sums. One partial/final hash aggregate, no joins, no shuffle
     beyond the 6-group exchange."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     cents = li.where(
         F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
     ).select(
@@ -94,9 +95,9 @@ LIMIT 20
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact→dim broadcast join + grouped exact sum + global top-k
     (TakeOrderedAndProject)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     joined = orders.join(
         cust, orders["o_custkey"] == cust["c_custkey"]
     ).join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
@@ -127,8 +128,8 @@ GROUP BY o_orderpriority
 def q_order_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4-shaped: predicate + left-semi join (EXISTS) + count. Exercises
     the semi-join operator the reference only has as an idiom (J2/J3)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     qualifying = li.where(F.col("l_quantity") > 45).select("l_orderkey")
     return (
         orders.where(
@@ -169,14 +170,14 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders⋈lineitem join shuffles on orderkey, the natural co-partition
     key at scale."""
     c = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_table(spark, sf_dir, "customer")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
+    o = read_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < "1998-01-01"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > "1998-01-01"
     )
     rev = _cents("l_extendedprice") * (100 - _cents("l_discount"))
@@ -213,7 +214,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     as PushedFilters, so at 100 TB the row-group min/max statistics skip
     most of the table before a single row is decoded. No join, one scalar
     aggregate, zero shuffles beyond the single-row final agg."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -254,11 +255,11 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sort-merge on l_partkey/p_partkey at cluster scale. The ratio
     divides two exact integer sums, so both engines perform one identical
     IEEE division."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1997-01-01")
     )
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     rev = _cents("l_extendedprice") * (100 - _cents("l_discount"))
     joined = li.join(part, li.l_partkey == part.p_partkey).select(
         rev.alias("rev_c4"), "p_type"
@@ -300,9 +301,9 @@ def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern. The aggregate runs map-side partial on l_orderkey before the
     HAVING cut, so only the ~1% surviving keys reach the orders join; AQE
     sees the post-filter size at runtime and broadcasts the survivors."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(_cents("l_quantity")).alias("qty_c"))
@@ -356,7 +357,7 @@ def q_cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin for unbounded-width keys but falls back to SortAggregate; the
     packed form keeps whole-stage codegen. A plan gate pins HashAggregate.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     packed = _cents("l_extendedprice") * _ARGMIN_BASE + F.col("l_suppkey")
     return (
         li.groupBy("l_partkey")
@@ -396,7 +397,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     any SF). The scalar stays IN-PLAN as a 1-row cross join over the
     already-aggregated per-part relation — the fact table is scanned and
     shuffled exactly once, and the driver never collects anything."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     rev = _cents("l_extendedprice") * (100 - _cents("l_discount"))
     per = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
         F.sum(rev).alias("rev_c4")
@@ -444,15 +445,15 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     so their join strategy is left to Catalyst/AQE — hinting them would
     force an OOM broadcast at 100 TB. The c_nationkey = s_nationkey
     condition rides the join, never a post-filter cross product."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01")
         & (F.col("o_orderdate") < "1998-01-01")
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet").where(
+    li = read_table(spark, sf_dir, "lineitem")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").where(
         F.col("r_name") == "ASIA"
     )
     rev = _cents("l_extendedprice") * (100 - _cents("l_discount"))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 from .tpch import _cents
 
@@ -28,10 +29,6 @@ _REV_C4_SQL = (
     "CAST(round(l_extendedprice * 100) AS BIGINT)"
     " * (100 - CAST(round(l_discount * 100) AS BIGINT))"
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # --------------------------------------------------------------------- Q7
@@ -62,13 +59,13 @@ def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate applies AFTER both joins (it references both sides), but each
     branch's nation restriction still prunes via the broadcast hash tables.
     supplier/customer are SF-proportional — join strategy stays AQE's call."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1995-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
     n1 = n.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
@@ -128,15 +125,15 @@ def q_nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     The share is a single-pass conditional aggregation (CASE-sum / sum) over
     one joined relation — never two scans diffed. Exact integer volumes make
     the ratio engine-deterministic; round(6) at the edge."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
-    o = _t(spark, sf_dir, "orders").where(
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
+    o = read_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     n1 = n.select("n_nationkey", "n_regionkey")
     n2 = n.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
@@ -190,11 +187,11 @@ def q_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation and order year (cost proxy: 10% of retail price per unit, exact
     in 1e-4 dollar ints). The LIKE lands in the part scan (pushed string
     filter); nation is broadcast; the three fact joins stay AQE-owned."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("%bolt%"))
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part").where(F.col("p_name").like("%bolt%"))
+    s = read_table(spark, sf_dir, "supplier")
+    o = read_table(spark, sf_dir, "orders")
+    n = read_table(spark, sf_dir, "nation")
     profit = _rev_c4() - _cents("p_retailprice") * F.col("l_quantity").cast(
         "long"
     ) * F.lit(10)
@@ -235,12 +232,12 @@ def q_returned_item_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: lost-revenue ranking of customers who returned items
     in a two-quarter window. Grouped exact sum + global top-20
     (TakeOrderedAndProject — no full sort at any scale)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    o = _t(spark, sf_dir, "orders").where(
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    o = read_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
     )
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -276,10 +273,10 @@ def q_priority_by_line_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (line status standing in for the absent ship mode):
     fact-fact join + fused two-way conditional count — one aggregate pass,
     no per-branch scans."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -313,8 +310,8 @@ def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     (an inner join silently drops the c_count=0 bucket). Two cascaded
     aggregations; the second groups on the first's output, so AQE coalesces
     its tiny shuffle."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") != "4-NOT SPECIFIED"
     )
     per_cust = (
@@ -350,10 +347,10 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     units — float equality would be engine-dependent); Spark plans the 1-row
     side as a broadcast, so no second scan of the revenue view and no window
     over the whole supplier set."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = read_table(spark, sf_dir, "supplier")
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.sum(_rev_c4()).alias("total_c4")
     )
@@ -397,9 +394,9 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplied into pure integers (qty*5*cnt < sum_qty) so no float ever
     decides a row's membership. Both lineitem passes prune to the target
     part family via the same semi-joinable filter."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     target = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where((F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 10))
         .select("p_partkey")
     )
@@ -438,8 +435,8 @@ def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (...), size <= 15, quantity ranges) and pushes THOSE into each scan,
     then applies the full residual after the join — the pattern that turns
     a 'can't push ORs' query into a pruned scan at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part")
     q = F.col("l_quantity")
     cond = (
         (
@@ -496,11 +493,11 @@ def q_heavy_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier dim; part family membership is a semi-join (the part side is
     projected to its key before joining — no payload dragged through)."""
     small_parts = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_name").like("small%"))
         .select("p_partkey")
     )
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
     supp_qty = (
@@ -509,9 +506,9 @@ def q_heavy_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(_cents("l_quantity")).alias("qty_c"))
         .where(F.col("qty_c") > 10000)
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     return (
         supp_qty.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -556,9 +553,9 @@ def q_blamed_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and the NOT EXISTS a left-anti join on (orderkey, suppkey-inequality)
     — the canonical decorrelation; no subquery is re-executed per row.
     Top-10 with deterministic (numwait DESC, suppkey) tie-break."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     f_orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
@@ -584,7 +581,7 @@ def q_blamed_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_suppkey") != F.col("o2_suppkey")),
         "left_anti",
     ).distinct()
-    s = _t(spark, sf_dir, "supplier")
+    s = read_table(spark, sf_dir, "supplier")
     return (
         sole_blame.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("s_suppkey").alias("suppkey"))
@@ -621,9 +618,9 @@ def q_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (integer cents, rounded once so both engines compare the same
     scalar); the dormancy test is a left-anti join against the date-pruned
     orders scan — the decorrelated NOT EXISTS."""
-    c = _t(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     o = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderdate") >= "2000-06-01")
         .select("o_custkey")
     )
@@ -683,7 +680,7 @@ def q_supplier_attr_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-proportional except the grouped distinct itself, whose key space
     is bounded by |dim slice| x |suppliers|."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(
             (F.col("p_brand") != Q16_BRAND)
             & ~F.col("p_type").startswith(Q16_TYPE_PREFIX)
@@ -692,11 +689,11 @@ def q_supplier_attr_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey", "p_brand", "p_type", "p_size")
     )
     bad = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .where(F.col("s_acctbal") < 0.0)
         .select("s_suppkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.sampling import grouped_prefix_sum
+from ..sources.catalog import read_table
 from . import query
 
 # ------------------------------------------------------------- shared bits
@@ -102,7 +103,7 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-sized side is never shuffled, and the per-doc count is a
     map-side-combinable hash aggregate on doc_id.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     grams = docs.select(
         "doc_id", "source", F.explode(_word_ngrams(DECON_N)).alias("gram")
     )
@@ -155,7 +156,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     Task size is bounded by partition size, never language size, and the
     result is placement-independent (CPUS-sweep checked).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split("text", " ")).cast("long")
     toks = docs.select("doc_id", "lang", n_tokens.alias("n_tokens"))
     cum = grouped_prefix_sum(
@@ -200,7 +201,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     a count-min sketch pre-pass is the documented alternative when even the
     (gram, df) pairs overflow.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     grams = docs.select(
         "doc_id", F.explode(_word_ngrams(BOILERPLATE_N)).alias("gram")
     )
@@ -257,7 +258,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen; the only cost is the regex engine itself, which is why the
     patterns are anchored character classes (no catastrophic backtracking).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.regexp_count("text", F.lit(_PII_EMAIL)).cast("long").alias("n_emails"),
@@ -301,7 +302,7 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     count table broadcast. Output is bit-identical to the window ntile the
     oracle states.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split("text", " ")).cast("long")
     feat = docs.select("doc_id", "lang", n_tokens.alias("n_tokens"))
     ranked = grouped_prefix_sum(
@@ -358,7 +359,7 @@ def q_source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the single-row total — the classic two-level aggregation; nothing
     here grows with corpus size except the first map-side sum.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split("text", " ")).cast("long")
     per_lang = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -423,7 +424,7 @@ def q_temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: one per-source hash-agg + a 1-row broadcast total —
     output is |sources| rows."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     per_src = docs.groupBy("source").agg(
         F.sum(F.size(F.split("text", " ")).cast("long")).alias("n_tokens")
     )
@@ -495,7 +496,7 @@ def q_mixture_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ORDER BY ... LIMIT`` that compiles to TakeOrderedAndProject
     (per-partition heap + driver merge of SCHED_LIMIT rows), not a global
     sort. The per-source token totals are a broadcast dimension."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("nt"),
@@ -565,7 +566,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen end to end (same class as text_metrics); chunk
     count per doc is data-bounded (ceil(n/stride)), never collected."""
     C, S = CHUNK_TOKENS, CHUNK_STRIDE
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         F.split(F.col("text"), " ").alias("w"),
@@ -667,7 +668,7 @@ def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     in word space); `training_manifest_bpe` (queries/bpe.py) is the
     honest-budget variant that cuts shards on TRAINED BPE token counts."""
     C, S = CHUNK_TOKENS, CHUNK_STRIDE
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         "source",
@@ -800,7 +801,7 @@ def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window). Nothing corpus-sized ever broadcasts or funnels."""
     from ..operators.sampling import global_rank
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     occ = (
         docs.select(
             "doc_id",
@@ -941,7 +942,7 @@ def q_excess_loss_mixture_weights(
     the zero-shuffle bigram stream), then |sources|-row aggregates and
     1-row totals — the per-source grid is bounded by the source count,
     exactly like `source_mixture_weights`."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "source", F.split("text", " ").alias("w"))
     bg = toks.where(F.size("w") >= 2).select(
         "source",
@@ -1198,7 +1199,7 @@ def q_quality_discriminator(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection (zero-shuffle) + {QD_ROUNDS} x one 5-scalar aggregate;
     the model is 5 ints; scoring is a codegen projection with literal
     weights."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     feat = _qd_features(docs).localCheckpoint(eager=False)
     w = train_quality_discriminator(feat)
     score = " + ".join(f"x{j} * {w[j]}L" for j in range(5))
@@ -1249,7 +1250,7 @@ def q_shard_integrity_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     — collect_list is per-shard bounded here by design (a production
     manifest uses more shards so each stays collectable; shard count is
     a knob, not a scalability ceiling)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     h = docs.select(
         (
             F.conv(
@@ -1350,7 +1351,7 @@ def q_dataset_cartography(spark: SparkSession, sf_dir: str) -> DataFrame:
     are literal-weight dot products in a single select. The oracle
     cross-joins the shared unrolled training CTEs, proving both engines
     train the identical model before mapping."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     feat = _qd_features(docs).localCheckpoint(eager=False)
     snaps = train_quality_discriminator_history(feat)
     r = QD_ROUNDS
@@ -1457,7 +1458,7 @@ def q_unimax_mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     waterfilling window runs on that bounded categorical table (the
     per-DAY/per-MONTH precedent in BOUNDED_FRAME_WINDOWS), and the 1-row
     budget/pool tables broadcast."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     src = docs.groupBy("source").agg(
         F.sum(F.size(F.split(F.col("text"), " "))).cast("long").alias(
             "n_tokens"
@@ -1570,7 +1571,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one projection + one hash-agg on ~13 bucket keys; no joins,
     no windows, no skew (bucket cardinality is the ladder length)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok"),
@@ -1658,7 +1659,7 @@ def q_source_influence_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
     feasible at 100 TB where per-example influence is not. Betas are
     Cramer ratios evaluated in double from identical exact operands on
     both engines (the trend_fit precedent); rounding at the output edge."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     pts = docs.select(
         "source",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("x"),
@@ -1805,7 +1806,7 @@ def q_mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFrame
     whose key spaces are |feature values| x 2 — bounded, map-side
     combinable; marginals and MI terms join those bounded cell tables.
     Adding a feature adds one bounded agg, never a second scan pass."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_tokens = F.size(words).cast("long")
     n_alpha = F.length(F.regexp_replace("text", " ", "")).cast("long")

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import read_table
 from . import query
 
 UNI_LMAX = 4            # max candidate token length (chars)
@@ -328,7 +329,7 @@ def q_unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     See the module docstring for the algorithm, scale shape (corpus
     touched once; Viterbi dp is a zero-shuffle codegen fold) and the
     determinism recipe shared with `bpe_vocab_train`."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     scores, _ = train_unigram_lm(docs)
     return scores.select(
         F.col("tok").alias("token"),
@@ -368,7 +369,7 @@ def q_unigram_lm_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     open-vocabulary deployment should drop the hint and take the
     shuffle hash join on the same key, exactly as
     `tokenize_with_bpe_index(broadcast_vocab=False)` does."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     _, best = train_unigram_lm(docs)
     words = docs.select(
         "source", F.explode(F.split("text", " ")).alias("word")

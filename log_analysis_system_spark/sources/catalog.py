@@ -52,7 +52,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # .epoch_us), which is only deterministic under a pinned session timezone.
     # UTC matches DuckDB's naive-timestamp epoch semantics exactly.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_table(spark, sf_dir, "events")
     if isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # NOT widen_scan'd: measured A/B at sf0.1 (round 7) shows the extra
@@ -84,6 +84,38 @@ def snapshot(path: str) -> tuple:
 _slots: dict[tuple, tuple[tuple, DataFrame]] = {}
 _slots_lock = threading.RLock()
 _planners: dict[SparkSession, SparkSession] = {}
+
+#: Session confs that change the schema parquet inference gives a file.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``spark.read.parquet`` of the table ``name`` under ``sf_dir``, with
+    its schema inferred once per input snapshot.
+
+    Inference reads a parquet footer; on a small query that costs more than
+    the scan. The schema is kept per path, keyed by the file's snapshot and
+    the confs that change inference, so a rewrite or a flipped
+    ``nanosAsLong`` infers again. Every call builds a new relation: a shared
+    DataFrame would share attribute ids and break self-joins. A path that is
+    not a local file or directory is read as is."""
+    path = f"{sf_dir}/{name}.parquet"
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (snapshot(path), *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    with _slots_lock:
+        entry = _schemas.get(path)
+        if entry is None or entry[0] != key:
+            entry = (key, spark.read.parquet(path).schema)
+            _schemas[path] = entry
+    return spark.read.schema(entry[1]).parquet(path)
 
 
 def per_snapshot(
@@ -161,11 +193,7 @@ def widen_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every driver test table from ``sf_dir`` as a DataFrame."""
     return {
-        name: (
-            read_events(spark, sf_dir)
-            if name == "events"
-            else spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        )
+        name: read_events(spark, sf_dir) if name == "events" else read_table(spark, sf_dir, name)
         for name in TABLES
     }
 
@@ -255,7 +283,7 @@ def write_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     w.save(path)
 
 
-def read_table(
+def read_format(
     spark: SparkSession, path: str, fmt: str = "parquet", schema: StructType | None = None
 ) -> DataFrame:
     """Read a table written by ``write_table``. Schemaless columnar formats

@@ -35,8 +35,8 @@ SHOWCASE = {
     "(per-partition heap + merge), never a full Sort",
     "dedup_minhash_lsh": "signatures are a zero-shuffle projection; banded "
     "candidates join on (band, sig) equi-keys",
-    "stratified_sample": "grouped_prefix_sum fast path — rank windows key on "
-    "the md5-nibble slice id, never the bare stratum",
+    "stratified_sample": "per-stratum top-k: a WindowGroupLimit Partial below "
+    "the stratum exchange ships at most 100 rows per stratum per map task",
     "robust_outlier_events": "per-type med/MAD broadcast back onto the raw "
     "scan; the fact side is never reshuffled",
     "session_path_topk": "one sort window feeds both leads; LIMIT is a "

@@ -502,14 +502,9 @@ def test_no_bare_global_windows_registry_wide(spark):
     )
 
 
-def test_reference_extract_ranks_in_slice_windows(spark):
-    """Job 1's session extraction (R1 on the native schema) ranks inside
-    grouped_prefix_sum's slice-keyed windows: a rank window keyed on just
-    the (date, hour_key) stratum is one task per hour at scale. The one
-    stratum-keyed window allowed is the slice-offset prefix, ordered by the
-    slice id over the O(slices x strata) totals table, never data rows."""
-    import re
-
+def _stratified_plans(spark):
+    """Executed plans of both R1 paths, with each path's stratum: the
+    registry's ``stratified_sample`` and job 1's session extraction."""
     from log_analysis_system_spark.params import TaskParams
     from log_analysis_system_spark.queries.reference_jobs import session_analyze
     from log_analysis_system_spark.sources.mockdata import mock_user_visit_data
@@ -519,19 +514,45 @@ def test_reference_extract_ranks_in_slice_windows(spark):
     extract = session_analyze(
         dfs["user_visit_action"], dfs["user_info"], TaskParams()
     )["session_random_extract"]
-    plan = extract._jdf.queryExecution().executedPlan().toString()
+    plans = {
+        "stratified_sample": (plan_of(spark, "stratified_sample"), "[date_key, hour_key]"),
+        "session_random_extract": (
+            extract._jdf.queryExecution().executedPlan().toString(),
+            "[date, hour_key]",
+        ),
+    }
     spark.catalog.clearCache()
+    return plans
 
-    def strip_ids(spec: str) -> str:
-        return re.sub(r"#\d+L?", "", spec)
 
-    windows = [
-        (line, strip_ids(part or "")) for line, part in _window_partition_specs(plan)
-    ]
-    assert any(part == "[__pid, date, hour_key]" for _, part in windows), windows
-    for line, part in windows:
-        if part == "[date, hour_key]":
-            assert strip_ids(line).endswith("[__pid ASC NULLS FIRST]"), line
+def test_stratified_rank_ships_a_partial_top_k(spark):
+    """R1 on both paths ranks as a per-stratum top-k: the one window keyed
+    on the bare (day, hour) stratum is fed by an exchange whose map side is
+    a ``WindowGroupLimit … Partial``, so each map task ships at most
+    ``per_parent`` rows per stratum. Any other window (the day total of the
+    quotas) reads the stratum-count aggregate, never data rows."""
+    import re
+
+    for name, (plan, stratum) in _stratified_plans(spark).items():
+        lines = [re.sub(r"#\d+L?", "", line) for line in plan.splitlines()]
+        windows = [
+            (i, part) for i, line in enumerate(lines) for _, part in _window_partition_specs(line)
+        ]
+        rank = [i for i, part in windows if part == stratum]
+        assert len(rank) == 1, (name, windows)
+        below = lines[rank[0] + 1 :]
+        k = next(j for j, line in enumerate(below) if "Exchange" in line)
+        assert f"hashpartitioning({stratum[1:-1]}," in below[k], (name, below[k])
+        assert "WindowGroupLimit" in below[k + 1] and below[k + 1].endswith("Partial"), (
+            name,
+            below[k + 1],
+        )
+        for i, part in windows:
+            if i in rank:
+                continue
+            below = lines[i + 1 :]
+            k = next(j for j, line in enumerate(below) if "Exchange" in line)
+            assert "HashAggregate" in below[k + 1], (name, part, below[k + 1])
 
 
 def test_bounded_frame_window_allowlist_is_current(spark):

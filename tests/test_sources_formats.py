@@ -8,7 +8,7 @@ import pytest
 
 from log_analysis_system_spark.sources.catalog import (
     read_events,
-    read_table,
+    read_format,
     write_table,
 )
 from tests.conftest import SF_DIR
@@ -24,14 +24,14 @@ def test_roundtrip_matches_parquet(spark, tmp_path, fmt):
     src = read_events(spark, SF_DIR)
     path = str(tmp_path / f"events_{fmt}")
     write_table(src, path, fmt)
-    back = read_table(spark, path, fmt, schema=src.schema)
+    back = read_format(spark, path, fmt, schema=src.schema)
     assert back.schema == src.schema
     assert _canon(back) == _canon(src)
 
 
 def test_unknown_format_rejected(spark):
     with pytest.raises(ValueError):
-        read_table(spark, "/nowhere", "avro")
+        read_format(spark, "/nowhere", "avro")
 
 
 def test_schema_evolution_merge(spark, tmp_path):
