@@ -1,23 +1,30 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-COMPACT JSON line: {"metric": ..., "value": <total sec>, "unit": "sec",
-"sf": ..., "n_queries": N, ...}. The per-query {name: sec} map goes to
-stderr AND to BENCH_DETAIL.json (repo root) — round 8's 76-entry map made
-the stdout line ~3.3 KB, overflowing the driver's ~2 KB output-tail
-capture and leaving BENCH_r08.json with "parsed": null (no official
-headline). The final line is length-pinned in tests/test_bench_pins.py.
+"""Bench sweep: times the bench rows listed in bench_pins.json (registered
+queries, then the index-lifecycle halves) at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[nproc], in one warm session:
 
-Timing = full query execution to a count()-style action (collect for small
-results), after a warm-up of the session (JVM + parquet footer caches are
-shared, matching how a long-lived engine would serve queries).
+    python bench.py
 
-Host-speed calibration: this container's single-thread throughput varies
-run to run (documented 1.06x-1.55x total swings for identical code —
-BASELINE.md round-3 notes), so the JSON also records `loadavg` (the
-1/5/15-min /proc/loadavg at start) and `calib_sec` (a fixed pure-Python
-integer loop timed before Spark starts). Comparing BENCH_r{N} files:
-divide totals by their calib_sec ratio first — a uniform inflation that
-tracks calib_sec is the host, not a code regression.
+Each row runs as perfbench's session ops do: ``queries.build`` (the query
+function), ``catalyst.plan`` (the physical plan), then ``spark.execute``, a
+``noop`` write that computes every output column. A lifecycle half that
+writes or collects inside its own call (an index build, a recall audit) runs
+whole as its ``spark.execute``. The spans and the session's Spark event log
+give one layer record per row, through perfbench/harness.py and
+perfbench/run.py: wall, build, plan, Spark-busy and driver-gap seconds,
+jobs/stages/tasks, executor run/CPU/GC, shuffle, spill and result bytes,
+Python-worker CPU, and ``reconciled``: build + plan + busy + gap is within
+``RECONCILE_TOLERANCE`` of the wall time.
+
+Outputs:
+- stdout: one compact line per row, then ONE JSON line {"metric", "value"
+  (total seconds), ...}. It stays under 1.5 KB (pinned in
+  tests/test_bench_pins.py): the driver keeps only a ~2 KB stdout tail;
+- BENCH_DETAIL.json: every row's layer record (overwritten per run);
+- BENCH_HISTORY.jsonl: one appended line per run with {name: seconds}.
+
+bench_pins.json holds each row's pin, the median of 3 sweeps, with the
+nproc, sf and action it was taken under. Compare runs on one host, in A-B
+pairs started below ``LOAD_OK_MAX`` load average (``load_ok``).
 """
 
 from __future__ import annotations
@@ -29,476 +36,251 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
-from log_analysis_system_spark.queries import QUERIES, load_all
-from log_analysis_system_spark.session import get_spark
+import harness  # noqa: E402  perfbench/harness.py
+import run as perfbench_run  # noqa: E402  perfbench/run.py
 
-# Headline set: the reference-parity jobs (BASELINE.md table) + heaviest
-# extension operators. Round 4 folded in the previously non-headline heavy
-# queries (winnow_overlap, semantic_clusters, lsh_recall_audit,
-# ann_pq_topk) plus the PQ build/serve split, so regressions of the
-# winnow_overlap-CollapseProject class (200 s -> 10.5 s in round 3) are
-# visible round-over-round instead of only in BASELINE.md prose.
-BENCH_QUERIES = [
-    "session_agg",
-    "session_stats",
-    "session_filter",
-    "top10_category",
-    "top10_session_per_category",
-    "funnel",
-    "area_top3",
-    "stratified_sample",
-    "pricing_summary",
-    "stream_sliding_window",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "cube_revenue",
-    "analytic_functions",
-    "value_percentiles",
-    "multimodal_frames",
-    "shipping_priority",
-    "local_supplier_volume",
-    "range_join_events",
-    "dedup_components",
-    "tfidf_top_terms",
-    "corpus_pipeline",
-    "hypertable_rollup",
-    "forecast_revenue",
-    "promo_revenue_share",
-    "big_orders",
-    "text_normalize",
-    "grouping_sets_revenue",
-    "supplier_diversity",
-    # round-4 heavy additions
-    "winnow_overlap",
-    "semantic_clusters",
-    "lsh_recall_audit",
-    "ann_pq_topk",
-    # round-5 flagships (pins appended to the BASELINE.md table)
-    "score_correlation",
-    "dedup_containment_capped",
-    "unigram_lm_vocab",
-    "zorder_skipping_stats",
-    # round-6 flagships (pins appended to the BASELINE.md table).
-    # ann_ivfpq_topk / pq_index_refresh were bench rows through round 8;
-    # round 9 splits them into build/serve halves (ivfpq_index_build /
-    # ivfpq_index_search, pq_refresh_audit / pq_refresh_rebuild — timed
-    # in bench_ivfpq_build_serve / bench_pq_refresh_halves below) so a
-    # serve-latency regression can't hide under ~20 s of training noise.
-    # The monolithic queries stay registered for correctness.
-    "decontaminate_spans",
-    "decontaminate_scrub",
-    # round-6 post-battery additions (pins in the BASELINE.md addendum)
-    "ann_sq8_topk",
-    "dsir_importance_resample",
-    "perplexity_band_filter",
-    "quality_discriminator",
-    "leak_free_split",
-    # round-6 second-wave additions (pins in BASELINE.md)
-    "label_propagation_communities",
-    "forecast_backtest_mase",
-    "dedup_simhash_neardup",
-    "pareto_price_size_frontier",
-    "hll_precision_curve",
-    # round-7 flagships (pins in the BASELINE.md round-7 table)
-    "mmr_diversified_topk",
-    "point_in_time_features",
-    # round-7 second-wave additions (pins in the BASELINE.md addendum)
-    "retrieval_eval_ndcg",
-    "coreset_kcenter",
-    "discriminator_auc",
-    "rolling_distinct_users",
-    "kcore_trade_graph",
-    "hits_trade_graph",
-    # round-8 flagships
-    "survival_churn_hazard",
-    "seasonal_decompose_daily",
-    "conformal_forecast_interval",
-    "bootstrap_revenue_ci",
-    "sorted_neighborhood_dedup",
-    # round-8 second-wave additions (pins in the BASELINE.md addendum)
-    "supplier_attr_counts",
-    "link_prediction_scores",
-    "compaction_plan",
-    "eb_shrunk_quality",
-    "isotonic_calibration",
-    "join_cardinality_estimate",
-    "source_influence_jackknife",
-    "markov_attribution",
-    # round-9 additions (pins in the BASELINE.md round-9 addendum)
-    "textrank_keywords",
-    "fellegi_sunter_em",
-    "table_stats_analyze",
-    "betweenness_centrality",
-    # round-10 additions (pins in the BASELINE.md round-10 addendum)
-    "shapley_attribution",
-    "window_funnel_steps",
-    "item_cf_recs",
-    "grid_dbscan_clusters",
-    "bloom_prefiltered_join",
-    "nb_lang_confusion",
-    "join_order_advisor",
-    # round-10 second wave
-    "ams_f2_estimate",
-    "modularity_communities",
-    "randomized_response_rate",
-    "rake_keywords",
-    "aqp_revenue_estimate",
-    "holt_winters_daily",
-    "croston_demand_forecast",
-    "burst_detection_days",
-    "wordpiece_vocab_train",
-]
+from log_analysis_system_spark.queries import QUERIES, load_all  # noqa: E402
+from log_analysis_system_spark.session import get_spark  # noqa: E402
 
-# Timings produced by the bench_* lifecycle helpers rather than registered
-# queries; each needs a BASELINE.md pin like the BENCH_QUERIES rows
-# (enforced in tests/test_bench_pins.py).
-HELPER_TIMINGS = [
-    "pq_index_build",
-    "pq_index_search",
-    "ivfpq_index_build",
-    "ivfpq_index_search",
-    "pq_refresh_audit",
-    "pq_refresh_rebuild",
-]
+PINS_PATH = os.path.join(ROOT, "bench_pins.json")
 
-CALIB_ITERS = 20_000_000  # fixed single-thread work unit (~1-2 s idle)
-
-
-def calibrate() -> float:
-    """Time a fixed pure-Python integer loop — a host single-thread speed
-    probe taken before the JVM starts. Identical work every run, so the
-    ratio of two runs' calib_sec IS the host-speed ratio."""
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(CALIB_ITERS):
-        x += i * i
-    assert x > 0
-    return round(time.perf_counter() - t0, 3)
-
-
-def _calib_unit(_):
-    x = 0
-    for i in range(CALIB_ITERS):
-        x += i * i
-    return x
-
-
-def calibrate_parallel(workers: int = 32) -> float:
-    """Time ``workers`` copies of the calib loop run concurrently — the
-    host's effective PARALLEL capacity, which the single-thread probe
-    cannot see. This container's 32 vCPUs are sometimes heavily
-    oversubscribed by the hypervisor (measured this round: 38% steal +
-    21% involuntary idle under full load → ~13 effective cores while
-    calib_sec stayed nominal); that state uniformly inflates every Spark
-    stage while leaving calib_sec untouched. Comparing BENCH files:
-    calib_par_sec ratio explains "uniform drag" that calib_sec cannot.
-    Ideal = calib_sec (perfect scaling); N x calib_sec = no parallelism."""
-    from multiprocessing import Pool
-
-    t0 = time.perf_counter()
-    with Pool(workers) as p:
-        p.map(_calib_unit, range(workers))
-    return round(time.perf_counter() - t0, 3)
-
-
-def read_loadavg() -> list[float]:
-    try:
-        with open("/proc/loadavg") as f:
-            return [float(v) for v in f.read().split()[:3]]
-    except OSError:  # non-Linux fallback
-        return []
-
-
-# round_close.sh's documented trust threshold; a start 1-min loadavg at or
-# above this tags the artifact so a loaded-host run (round 8: 8.49) can't
-# become the official record silently.
+# round_close.sh's trust threshold: a start 1-min loadavg at or above this
+# tags the run load_ok=false.
 LOAD_OK_MAX = 1.5
 
-# Reference idle-host single-thread calib_sec (BASELINE.md "Host-speed
-# calibration pin"): the calib loop's wall-clock on the host state the
-# BASELINE.md pins were recorded under. value_calib_adjusted =
-# value * (CALIB_PIN / calib_sec) rescales a run's seconds to pin-host
-# speed, so the 2x gate can be adjudicated from the artifact alone —
-# rounds 8 and 9 both landed official benches on loaded hosts
-# (calib_sec 1.26-1.33) and produced false per-query breaches that
-# needed a judge re-run to dismiss.
-CALIB_PIN = 1.20
+# The layers a row's wall time splits into.
+LAYERS = ("queries.build_s", "catalyst.plan_s", "spark.busy_s", "driver.gap_s")
 
 
-def final_line(
-    total: float,
-    sf: str,
-    n_queries: int,
-    loadavg: list[float],
-    calib_sec: float,
-    calib_par_sec: float,
-) -> str:
-    """The single stdout JSON line the driver parses. MUST stay compact
-    (< ~1.5 KB, pinned in tests/test_bench_pins.py) — the driver keeps
-    only a ~2 KB tail of stdout, and an oversized line loses its head
-    (with "metric"/"value") to truncation. Per-query detail lives in
-    BENCH_DETAIL.json, pointed to by "detail"."""
-    return json.dumps(
-        {
-            "metric": "headline_queries_total_wall_clock",
-            "value": total,
-            "unit": "sec",
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "n_queries": n_queries,
-            "loadavg": loadavg,
-            "calib_sec": calib_sec,
-            "calib_par_sec": calib_par_sec,
-            "calib_pin": CALIB_PIN,
-            "value_calib_adjusted": round(
-                total * (CALIB_PIN / calib_sec), 3
-            ) if calib_sec else None,
-            "load_ok": bool(loadavg and loadavg[0] < LOAD_OK_MAX),
-            "detail": "BENCH_DETAIL.json",
-        }
+def read_pins() -> dict:
+    """bench_pins.json: ``queries`` and ``lifecycle`` ({name: seconds}, in
+    run order), and the ``nproc``, ``sf`` and ``action`` they were taken
+    under."""
+    with open(PINS_PATH) as fh:
+        return json.load(fh)
+
+
+def layer_record(spans: list, log: harness.EventLog, pyworker_s: float) -> dict:
+    """One row's record from its spans (an ``op`` span around
+    ``queries.build``, ``catalyst.plan`` and ``spark.execute``) and the
+    session's event log: the build and plan spans' self times, the action
+    span split into Spark-busy time and driver gap, and the task metrics of
+    every job submitted during the row."""
+    op = next(s for s in spans if s.name == "op")
+    st = harness.self_times(spans)
+    rec = {
+        "wall_s": op.dur,
+        "queries.build_s": st.get("queries.build", 0.0),
+        "catalyst.plan_s": st.get("catalyst.plan", 0.0),
+        "spark.busy_s": 0.0,
+        "driver.gap_s": 0.0,
+    }
+    for s in spans:
+        if s.name == "spark.execute":
+            busy, gap = perfbench_run.split_jobs(s, log)
+            rec["spark.busy_s"] += busy
+            rec["driver.gap_s"] += gap
+    layers = sum(rec[k] for k in LAYERS)
+    rec.update(log.totals(log.submitted(op.start - 0.005, op.end)))
+    rec["pyworker.cpu_s"] = pyworker_s
+    rec = {k: round(float(v), 4) if k.endswith("_s") else int(v) for k, v in rec.items()}
+    rec["reconciled"] = (
+        abs(op.dur - layers) <= perfbench_run.RECONCILE_TOLERANCE * op.dur
     )
+    return rec
 
 
-def bench_pq_build_serve(spark, sf_dir: str, timings: dict) -> None:
-    """Time the PQ index build half and serve half separately (the
-    persisted-index path a production deployment runs — build offline,
-    serve per query batch), not just the inline ann_pq_topk form."""
+class Sweep:
+    """Runs rows one after another in one session with every span traced;
+    each row's Python-worker CPU is taken around it."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        jvm = getattr(spark.sparkContext._gateway, "proc", None)
+        self.jvm_pid = jvm.pid if jvm else os.getpid()
+        self.tracer = harness.Tracer(enabled=True)
+        self.pyworker: dict[str, float] = {}
+
+    def row(self, name: str, build=None, action=None) -> None:
+        """Time ``build`` -> plan -> noop write, or ``action`` alone."""
+        tr = self.tracer
+        cpu0 = harness.pyworker_cpu(self.jvm_pid)
+        with tr.span(name, "op"):
+            if action is None:
+                with tr.span(name, "queries.build"):
+                    df = build()
+                with tr.span(name, "catalyst.plan"):
+                    df._jdf.queryExecution().executedPlan()
+
+                def action():
+                    df.write.format("noop").mode("overwrite").save()
+
+            with tr.span(name, "spark.execute"):
+                action()
+        self.pyworker[name] = harness.cpu_delta(
+            cpu0, harness.pyworker_cpu(self.jvm_pid)
+        )
+        print(f"# {name}: {tr.spans[-1].dur:.3f}s", file=sys.stderr)
+
+
+def lifecycle_rows(sweep: Sweep, sf_dir: str, work: str) -> None:
+    """The index-lifecycle halves: build and serve of the persisted PQ and
+    IVF-PQ indexes (build offline, serve per query batch), then the PQ
+    refresh halves on an index a drifted batch was appended to: the stale
+    index's recall audit, and the audit-triggered retrain and re-encode.
+    The refresh setup (build + append) is untimed."""
     import pyspark.sql.functions as F
 
-    from log_analysis_system_spark.queries.similarity import (
-        N_QUERIES,
-        _quantized,
-    )
-    from log_analysis_system_spark.queries.similarity_pq import (
-        build_pq_index,
-        search_pq_index,
-    )
-
-    idx = tempfile.mkdtemp(prefix="bench_pq_")
-    try:
-        t0 = time.perf_counter()
-        build_pq_index(spark, sf_dir, idx)
-        timings["pq_index_build"] = round(time.perf_counter() - t0, 3)
-        print(
-            f"# pq_index_build: {timings['pq_index_build']:.3f}s",
-            file=sys.stderr,
-        )
-
-        queries = (
-            _quantized(spark, sf_dir)
-            .where(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", "e")
-        )
-        t0 = time.perf_counter()
-        n = search_pq_index(spark, idx, queries).count()
-        timings["pq_index_search"] = round(time.perf_counter() - t0, 3)
-        print(
-            f"# pq_index_search: {timings['pq_index_search']:.3f}s rows={n}",
-            file=sys.stderr,
-        )
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
-def bench_ivfpq_build_serve(spark, sf_dir: str, timings: dict) -> None:
-    """Time the persisted IVF-PQ lifecycle halves separately (round-9
-    split of the former ann_ivfpq_topk bench row): build = coarse
-    quantizer + residual codebooks + cell-partitioned coded corpus;
-    serve = probe + ADC + exact re-rank from the stored index only."""
-    import pyspark.sql.functions as F
-
-    from log_analysis_system_spark.queries.similarity import (
-        N_QUERIES,
-        _quantized,
-    )
-    from log_analysis_system_spark.queries.similarity_pq import (
-        build_ivfpq_index,
-        search_ivfpq_index,
-    )
-
-    idx = tempfile.mkdtemp(prefix="bench_ivfpq_")
-    try:
-        t0 = time.perf_counter()
-        build_ivfpq_index(spark, sf_dir, idx)
-        timings["ivfpq_index_build"] = round(time.perf_counter() - t0, 3)
-        print(
-            f"# ivfpq_index_build: {timings['ivfpq_index_build']:.3f}s",
-            file=sys.stderr,
-        )
-        queries = (
-            _quantized(spark, sf_dir)
-            .where(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", "e")
-        )
-        t0 = time.perf_counter()
-        n = search_ivfpq_index(spark, idx, queries).count()
-        timings["ivfpq_index_search"] = round(time.perf_counter() - t0, 3)
-        print(
-            f"# ivfpq_index_search: "
-            f"{timings['ivfpq_index_search']:.3f}s rows={n}",
-            file=sys.stderr,
-        )
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-
-
-def bench_pq_refresh_halves(spark, sf_dir: str, timings: dict) -> None:
-    """Time the PQ refresh lifecycle halves separately (round-9 split of
-    the former pq_index_refresh bench row): audit = the scheduled
-    stale-index recall probe (serve-path search + exact truth on the
-    query sample); rebuild = the audit-triggered codebook retrain +
-    staged re-encode + re-audit. Setup (build + drifted append) is
-    untimed — its cost is already pinned as pq_index_build."""
-    import pyspark.sql.functions as F
-
+    from log_analysis_system_spark.queries import similarity_pq as pq
     from log_analysis_system_spark.queries.similarity import (
         N_QUERIES,
         _norm,
         _quantized,
     )
-    from log_analysis_system_spark.queries.similarity_pq import (
-        PQ_DRIFT_EXPR,
-        append_pq_index,
-        audit_pq_index_recall,
-        build_pq_index,
-        refresh_pq_index,
+
+    spark = sweep.spark
+    vecs = _quantized(spark, sf_dir)
+    queries = vecs.where(F.col("vec_id") < N_QUERIES).select("vec_id", "e")
+    for kind, build, search in (
+        ("pq", pq.build_pq_index, pq.search_pq_index),
+        ("ivfpq", pq.build_ivfpq_index, pq.search_ivfpq_index),
+    ):
+        idx = os.path.join(work, kind)
+        sweep.row(f"{kind}_index_build", action=lambda: build(spark, sf_dir, idx))
+        sweep.row(f"{kind}_index_search", build=lambda: search(spark, idx, queries))
+
+    idx = os.path.join(work, "pq_refresh")
+    pq.build_pq_index(spark, sf_dir, idx)
+    delta = vecs.select(
+        (F.col("vec_id") + 10**6).alias("vec_id"),
+        F.expr(pq.PQ_DRIFT_EXPR).alias("e"),
+    ).withColumn("nrm", _norm("e"))
+    pq.append_pq_index(spark, idx, delta, batch_id=0)
+    drifted = vecs.where(F.col("vec_id") < N_QUERIES).select(
+        (F.col("vec_id") + 2 * 10**6).alias("vec_id"),
+        F.expr(pq.PQ_DRIFT_EXPR).alias("e"),
+    )
+    sweep.row(
+        "pq_refresh_audit",
+        action=lambda: pq.audit_pq_index_recall(spark, idx, drifted),
+    )
+    sweep.row(
+        "pq_refresh_rebuild",
+        action=lambda: pq.refresh_pq_index(spark, idx, drifted),
     )
 
-    idx = tempfile.mkdtemp(prefix="bench_pqref_")
-    try:
-        build_pq_index(spark, sf_dir, idx)
-        vecs = _quantized(spark, sf_dir)
-        delta = vecs.select(
-            (F.col("vec_id") + 10**6).alias("vec_id"),
-            F.expr(PQ_DRIFT_EXPR).alias("e"),
-        ).withColumn("nrm", _norm("e"))
-        append_pq_index(spark, idx, delta, batch_id=0)
-        queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-            (F.col("vec_id") + 2 * 10**6).alias("vec_id"),
-            F.expr(PQ_DRIFT_EXPR).alias("e"),
-        )
-        t0 = time.perf_counter()
-        hits, tot = audit_pq_index_recall(spark, idx, queries)
-        timings["pq_refresh_audit"] = round(time.perf_counter() - t0, 3)
-        print(
-            f"# pq_refresh_audit: {timings['pq_refresh_audit']:.3f}s "
-            f"recall={hits}/{tot}",
-            file=sys.stderr,
-        )
-        t0 = time.perf_counter()
-        r = refresh_pq_index(spark, idx, queries)
-        timings["pq_refresh_rebuild"] = round(time.perf_counter() - t0, 3)
-        print(
-            f"# pq_refresh_rebuild: {timings['pq_refresh_rebuild']:.3f}s "
-            f"refreshed={r['refreshed']}",
-            file=sys.stderr,
-        )
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
+
+def row_line(name: str, rec: dict, pin: float) -> str:
+    """One compact stdout line per row, with its wall time over its pin."""
+    return (
+        f"{name} {rec['wall_s']:.3f}s x{rec['wall_s'] / pin:.2f}"
+        f" build {rec['queries.build_s']:.2f} plan {rec['catalyst.plan_s']:.2f}"
+        f" busy {rec['spark.busy_s']:.2f} gap {rec['driver.gap_s']:.2f}"
+        f" jobs {rec['spark.jobs']}" + ("" if rec["reconciled"] else " UNRECONCILED")
+    )
+
+
+def final_line(
+    total: float,
+    sf: float | str,
+    n_queries: int,
+    loadavg: list[float],
+    nproc: int,
+    unreconciled: int,
+) -> str:
+    """The single stdout JSON line the driver parses. It carries no per-row
+    detail (that lives in BENCH_DETAIL.json, pointed to by "detail")."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total_wall_clock",
+            "value": total,
+            "unit": "sec",
+            "sf": sf,
+            "n_queries": n_queries,
+            "nproc": nproc,
+            "action": "noop",
+            "loadavg": loadavg,
+            "load_ok": bool(loadavg and loadavg[0] < LOAD_OK_MAX),
+            "unreconciled": unreconciled,
+            "detail": "BENCH_DETAIL.json",
+        }
+    )
 
 
 def main() -> None:
     load_all()
+    pins = read_pins()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    loadavg = read_loadavg()
-    calib_sec = calibrate()
-    calib_par_sec = calibrate_parallel()
-    print(
-        f"# loadavg={loadavg} calib_sec={calib_sec} "
-        f"calib_par_sec={calib_par_sec}",
-        file=sys.stderr,
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    loadavg = [round(v, 2) for v in os.getloadavg()]
+    nproc = harness.nproc()
+    print(f"# loadavg={loadavg} nproc={nproc}", file=sys.stderr)
+
+    work = tempfile.mkdtemp(prefix="bench-")
+    log_dir = os.path.join(work, "eventlog")
+    os.makedirs(log_dir)
+    spark = get_spark(
+        app_name="bench",
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": log_dir,
+            "spark.eventLog.compress": "false",
+        },
     )
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        sweep = Sweep(spark)
+        # Warm the JVM/codegen once so the first row times its plan, not
+        # first-call setup.
+        spark.range(1000).selectExpr("sum(id)").collect()
+        for name in pins["queries"]:
+            sweep.row(name, build=lambda: QUERIES[name](spark, sf_dir))
+        lifecycle_rows(sweep, sf_dir, work)
+        perfbench_run.stop_spark(spark)  # flushes the event log
+        spark = None
+        log = harness.EventLog.read(log_dir)
+    finally:
+        if spark is not None:
+            perfbench_run.stop_spark(spark)
+        shutil.rmtree(work, ignore_errors=True)
 
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM/codegen once with a trivial job so query timings measure
-    # the plan, not first-call setup.
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        fn = QUERIES[name]
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = df.count()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
-
-    bench_pq_build_serve(spark, sf_dir, timings)
-    bench_ivfpq_build_serve(spark, sf_dir, timings)
-    bench_pq_refresh_halves(spark, sf_dir, timings)
-
-    total = round(sum(timings.values()), 3)
-    adj = (CALIB_PIN / calib_sec) if calib_sec else 1.0
-    headline_sec = round(
-        sum(v for k, v in timings.items() if k not in HELPER_TIMINGS), 3
-    )
-    lifecycle_sec = round(
-        sum(v for k, v in timings.items() if k in HELPER_TIMINGS), 3
-    )
+    records = {
+        name: layer_record(spans, log, sweep.pyworker[name])
+        for name, spans in sweep.tracer.by_op().items()
+    }
+    walls = {name: rec["wall_s"] for name, rec in records.items()}
+    total = round(sum(walls.values()), 3)
+    unreconciled = [n for n, rec in records.items() if not rec["reconciled"]]
     detail = {
         "metric": "headline_queries_total_wall_clock",
         "value": total,
         "unit": "sec",
-        "queries": timings,
-        # Seconds rescaled to the BASELINE.md pin host's speed
-        # (value * CALIB_PIN / calib_sec): the per-query 2x gate reads
-        # THESE when load_ok is false, so a loaded driver host cannot
-        # manufacture a false breach (round-9 grouping_sets_revenue:
-        # 2.47x raw on a loadavg-7 host, 1.29x idle).
-        "queries_calib_adjusted": {
-            k: round(v * adj, 3) for k, v in timings.items()
-        },
-        "value_calib_adjusted": round(total * adj, 3),
-        # Registered-query serve paths vs index build/rebuild lifecycle
-        # halves — separate subtotals so heavy offline-build rows
-        # (~20% of total) cannot mask a serve-path regression.
-        "headline_sec": headline_sec,
-        "lifecycle_sec": lifecycle_sec,
-        "calib_pin": CALIB_PIN,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf,
+        "nproc": nproc,
+        "action": "noop",
         "loadavg": loadavg,
-        "calib_sec": calib_sec,
-        "calib_par_sec": calib_par_sec,
+        # Registered-query serve paths vs index build/rebuild lifecycle
+        # halves, so offline-build cost cannot mask a serve-path regression.
+        "headline_sec": round(sum(walls[n] for n in pins["queries"]), 3),
+        "lifecycle_sec": round(sum(walls[n] for n in pins["lifecycle"]), 3),
+        "unreconciled": unreconciled,
+        "rows": records,
     }
-    # Full per-query record: stderr (survives in the driver's stderr log)
-    # and a repo-root file the judge can read / commits can snapshot.
-    print("# detail: " + json.dumps(detail), file=sys.stderr)
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as f:
+        json.dump(detail, f, indent=1)
         f.write("\n")
-    # Append-only history (round-11, verdict item 5): BENCH_DETAIL.json
-    # is overwritten by every run — the round-10 official 32-core
-    # per-query map was silently replaced in the working tree by the
-    # later 8-core scaling run, leaving PERF_r10 with no prev-side
-    # per-query source. Each run therefore ALSO appends its detail as
-    # one timestamped JSON line here. Additive only: the official
-    # stdout line and BENCH_DETAIL.json are unchanged.
-    history_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl"
-    )
-    with open(history_path, "a") as f:
-        f.write(
-            json.dumps(
-                {"ts": int(time.time()), **detail}, sort_keys=True
-            )
-            + "\n"
-        )
-    n_registered = sum(1 for k in timings if k not in HELPER_TIMINGS)
-    print(
-        final_line(
-            total, sf, n_registered, loadavg, calib_sec, calib_par_sec
-        )
-    )
-    spark.stop()
+    with open(os.path.join(ROOT, "BENCH_HISTORY.jsonl"), "a") as f:
+        slim = {"ts": int(time.time()), "nproc": nproc, "loadavg": loadavg,
+                "sf": sf, "value": total, "queries": walls}
+        f.write(json.dumps(slim) + "\n")
+    pin = {**pins["queries"], **pins["lifecycle"]}
+    for name, rec in records.items():
+        print(row_line(name, rec, pin[name]))
+    print(final_line(total, sf, len(pins["queries"]), loadavg, nproc, len(unreconciled)))
 
 
 if __name__ == "__main__":

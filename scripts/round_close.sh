@@ -9,8 +9,9 @@
 # 3. full driver_sim sweep, SPARK_GRAFT_CPUS=5    (~5-8 min)
 #    -> hashes must match step 2 (partitioning independence)
 # 4. scale probe -> SCALE.md      (~8 min; exit 1 on unexplained superlinear)
-# 5. bench.py one-line JSON       (~2 min; compare to BASELINE.md pin,
-#    scale by calib_sec ratio first)
+# 5. bench.py layer records + one-line JSON  (~5 min; compare each row
+#    to its bench_pins.json pin, taken on the same host; the load guard
+#    below stays)
 #
 # Any non-zero exit stops the battery.
 set -euo pipefail

@@ -27,9 +27,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from bench import BENCH_QUERIES, calibrate, read_loadavg
 from log_analysis_system_spark.queries import QUERIES, load_all
 from log_analysis_system_spark.session import get_spark
 
@@ -44,8 +44,9 @@ SF_DIRS = {
 
 FLAG_SLOPE = 1.3
 
-# Heaviest non-headline operators: the class where a quadratic term could
-# hide (pair joins, iterative loops, grids, full-corpus scoring).
+# Heaviest operators beyond the bench rows (bench_pins.json): the class
+# where a quadratic term could hide (pair joins, iterative loops, grids,
+# full-corpus scoring). A name in both lists is probed once.
 EXTRA_QUERIES = [
     "dedup_containment",
     "dedup_containment_capped",
@@ -70,14 +71,10 @@ EXTRA_QUERIES = [
     "unigram_lm_segment_stats",
     "bpe_vocab_train_batched",
     "decontaminate_spans",
-    # round-6 additions (decontaminate_scrub / ann_ivfpq_topk /
-    # pq_index_refresh arrive via BENCH_QUERIES): the remaining round-5
-    # post-battery rows plus the heavy pair-scoring fusion path
     "temperature_mixture_weights",
     "hybrid_rrf_topk",
     "multimodal_resize",
     "pack_sequences",
-    # round-6 post-battery additions not in BENCH_QUERIES
     "gopher_quality_rules",
     "excess_loss_mixture_weights",
     "contamination_by_source",
@@ -89,7 +86,6 @@ EXTRA_QUERIES = [
     "frequent_event_triples",
     "bloom_membership_audit",
     "modality_integrity_checks",
-    # round-6 late additions (this session)
     "salted_skew_join",
     "kneser_ney_perplexity",
     "pca_top_component",
@@ -110,8 +106,6 @@ EXTRA_QUERIES = [
     "pareto_price_size_frontier",
     "hll_precision_curve",
     "dedup_method_agreement",
-    # round-7 additions (mmr_diversified_topk / point_in_time_features
-    # arrive via BENCH_QUERIES)
     "retrieval_eval_ndcg",
     "coreset_kcenter",
     "discriminator_auc",
@@ -124,8 +118,6 @@ EXTRA_QUERIES = [
     "weighted_value_percentiles",
     "cuped_adjusted_lift",
     "t_closeness_audit",
-    # round-8 additions (the five windowed flagships arrive via
-    # BENCH_QUERIES; these are the two sim-pass rows)
     "grouped_ols_two_factor",
     "winsorized_price_stats",
     "sprt_conversion_monitor",
@@ -135,33 +127,24 @@ EXTRA_QUERIES = [
     "theil_sen_trend",
     "mann_kendall_trend",
     "acf_daily_revenue",
-    # round-8 post-battery addition (bench carries the other second-wave
-    # rows; MI is cheap but its cell-table joins deserve a slope curve)
     "mutual_information_features",
     "rendezvous_sharding",
     "peak_concurrency",
     "vocab_coverage_estimate",
-    # round-9 additions
     "textrank_keywords",
     "fellegi_sunter_em",
     "table_stats_analyze",
     "betweenness_centrality",
     "wasserstein_source_drift",
     "rbo_rank_agreement",
-    # round-9 bench split moved these off BENCH_QUERIES; keep their
-    # slope curves here (the heaviest training paths in the repo)
     "ann_ivfpq_topk",
     "pq_index_refresh",
     "quantile_summary_rollup",
     "incremental_join_maintenance",
-    # round-10 additions not in BENCH_QUERIES (the seven bench rows
-    # carry their own curves); these two are reduce-first but their
-    # user-keyed aggs deserve a slope each
     "propensity_stratified_att",
     "gini_stump_conversion",
     "ipf_margin_raking",
     "degree_assortativity",
-    # round-10 second wave
     "ams_f2_estimate",
     "modularity_communities",
     "randomized_response_rate",
@@ -182,11 +165,13 @@ EXPECTED_SUPERLINEAR = {
 
 def main() -> int:
     load_all()
-    loadavg = read_loadavg()
-    calib_sec = calibrate()
-    print(f"# loadavg={loadavg} calib_sec={calib_sec}", file=sys.stderr)
+    loadavg = [round(v, 2) for v in os.getloadavg()]
+    nproc = len(os.sched_getaffinity(0))
+    print(f"# loadavg={loadavg} nproc={nproc}", file=sys.stderr)
 
-    names = list(dict.fromkeys(BENCH_QUERIES + EXTRA_QUERIES))
+    with open(os.path.join(ROOT, "bench_pins.json")) as fh:
+        bench_queries = list(json.load(fh)["queries"])
+    names = list(dict.fromkeys(bench_queries + EXTRA_QUERIES))
     spark = get_spark(app_name="scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM/codegen warm-up
@@ -216,14 +201,13 @@ def main() -> int:
                      else ("FLAG" if flag else "")))
 
     rows.sort(key=lambda r: -r[5])
-    end_load = read_loadavg()
+    end_load = [round(v, 2) for v in os.getloadavg()]
     with open("SCALE.md", "w") as f:
         f.write(
             "# SCALE — measured time-vs-scale-factor curves\n\n"
             "Generated by `python scripts/scale_probe.py` (one warm "
             "session, one run per (query, sf), ascending SF).\n\n"
-            f"- loadavg start {loadavg} / end {end_load}, calib_sec "
-            f"{calib_sec} (see BASELINE.md for the host-speed protocol)\n"
+            f"- nproc {nproc}, loadavg start {loadavg} / end {end_load}\n"
             f"- decision statistic: slope_mid = log10(t(0.1)/t(0.01)) — "
             f"linear-work queries land <= ~1.0 (fixed overhead pulls them "
             f"below); > {FLAG_SLOPE} is flagged unless the query is a "
@@ -259,7 +243,7 @@ def main() -> int:
         "unit": "log10(t)/log10(sf)",
         "flagged": flagged,
         "loadavg": loadavg,
-        "calib_sec": calib_sec,
+        "nproc": nproc,
     }))
     spark.stop()
     return 1 if flagged else 0

@@ -101,6 +101,16 @@ def _canon(val):
     return str(val)
 
 
+def canon_hash(sdf) -> tuple[int, str]:
+    """(row count, value hash) of a result, the hash scripts/driver_sim.py
+    prints: columns sorted by name, cells canonicalized, rows sorted."""
+    from scripts.driver_sim import value_hash
+
+    cols = sorted(sdf.columns)
+    rows = [tuple(_canon(r[c]) for c in cols) for r in sdf.collect()]
+    return len(rows), value_hash(cols, rows)
+
+
 def assert_matches_oracle(spark, duck, query_fn, oracle: str, sf_dir: str):
     """Run the Spark query and the DuckDB oracle; compare schema column names,
     row counts, and exact values (columns sorted by name, rows sorted)."""

@@ -1,43 +1,32 @@
-"""Bench/probe wiring pins: every bench headline query must be a
-registered query WITH a recorded BASELINE.md pin (the per-query 2x gate
-is meaningless for an unpinned row — exactly the drift the round-6
-verdict flagged), and every scale-probe extra must be registered. Fails
-at commit time instead of at the next round's adjudication."""
+"""Bench wiring pins: every row in bench_pins.json is a registered query with
+an oracle (or a lifecycle half) and carries a pin taken under the recorded
+action, every scale-probe extra is registered, the final stdout line stays
+compact, and the per-row layer record keeps its schema and reconciliation
+rule. Fails at commit time instead of at the next bench run."""
 
 from __future__ import annotations
 
-import re
+import json
 
-from bench import BENCH_QUERIES, HELPER_TIMINGS, final_line
+from bench import final_line, layer_record, read_pins
+from harness import EventLog, Job, Span
 from log_analysis_system_spark.queries import ORACLES, QUERIES, load_all
 from scripts.scale_probe import EXTRA_QUERIES
 
 load_all()
-
-
-def _baseline_pins() -> dict[str, float]:
-    pins: dict[str, float] = {}
-    with open("BASELINE.md") as f:
-        for line in f:
-            m = re.match(
-                r"\|\s*([a-z0-9_]+)\s*(?:\([^)]*\))?\s*\|"
-                r"\s*(?:sec\s*\|\s*)?([0-9.]+)\s*\|",
-                line,
-            )
-            if m:
-                pins[m.group(1)] = float(m.group(2))
-    return pins
+PINS = read_pins()
+BENCH_QUERIES = list(PINS["queries"])
+HELPER_TIMINGS = list(PINS["lifecycle"])
 
 
 def test_bench_queries_registered_and_pinned():
-    pins = _baseline_pins()
     unregistered = [q for q in BENCH_QUERIES if q not in QUERIES]
     assert not unregistered, unregistered
-    unpinned = [q for q in BENCH_QUERIES if q not in pins]
-    assert not unpinned, (
-        f"bench entries without a BASELINE.md pin (add the 3-run-median "
-        f"row before shipping): {unpinned}"
-    )
+    assert len(BENCH_QUERIES) == len(set(BENCH_QUERIES))
+    unpinned = [q for q in BENCH_QUERIES if not PINS["queries"][q] > 0]
+    assert not unpinned, unpinned
+    assert PINS["action"] == "noop"
+    assert PINS["nproc"] >= 1 and PINS["sf"] > 0
 
 
 def test_bench_queries_have_oracles():
@@ -46,26 +35,20 @@ def test_bench_queries_have_oracles():
 
 
 def test_helper_timings_pinned():
-    pins = _baseline_pins()
-    unpinned = [q for q in HELPER_TIMINGS if q not in pins]
-    assert not unpinned, (
-        f"lifecycle-helper timings without a BASELINE.md pin: {unpinned}"
-    )
+    # The lifecycle halves are timed by bench.lifecycle_rows, not looked up
+    # in the registry; a registered name there would be timed twice.
+    assert not set(HELPER_TIMINGS) & set(QUERIES)
+    unpinned = [q for q in HELPER_TIMINGS if not PINS["lifecycle"][q] > 0]
+    assert not unpinned, unpinned
 
 
 def test_final_line_stays_compact():
-    """The driver keeps only a ~2 KB tail of bench stdout; round 8's
-    76-entry per-query map made the final line ~3.3 KB and the head
-    (with "metric"/"value") was truncated away -> BENCH_r08.json
-    "parsed": null. The final line must never carry per-query detail
-    and must stay well under the capture window."""
-    line = final_line(
-        999999.999, "0.1", 99, [99.99, 99.99, 99.99], 9.999, 99.999
-    )
+    """The driver keeps only a ~2 KB tail of bench stdout; a line carrying
+    the per-query map once lost its head ("metric"/"value") to truncation.
+    The final line must never carry per-query detail."""
+    line = final_line(999999.999, 0.1, 99, [99.99, 99.99, 99.99], 9999, 999)
     assert len(line) < 1500, len(line)
     assert '"queries"' not in line
-    import json
-
     parsed = json.loads(line)
     assert parsed["metric"] == "headline_queries_total_wall_clock"
     assert parsed["value"] == 999999.999
@@ -73,29 +56,75 @@ def test_final_line_stays_compact():
     assert parsed["n_queries"] == 99
 
 
-def test_final_line_carries_calib_adjusted_value():
-    """Round-9 verdict: the 2x gate is adjudicated on the official
-    artifact, and two consecutive loaded-host driver runs produced
-    false breaches. The final line must carry the calib-rescaled total
-    so a gate decision needs no judge re-run."""
-    import json
+RECORD_KEYS = {
+    "wall_s",
+    "queries.build_s",
+    "catalyst.plan_s",
+    "spark.busy_s",
+    "driver.gap_s",
+    "spark.jobs",
+    "spark.stages",
+    "spark.tasks",
+    "exec.run_s",
+    "exec.cpu_s",
+    "exec.gc_s",
+    "shuffle.write_bytes",
+    "shuffle.read_bytes",
+    "exec.spill_bytes",
+    "exec.result_bytes",
+    "pyworker.cpu_s",
+    "reconciled",
+}
 
-    from bench import CALIB_PIN
 
-    line = final_line(100.0, "0.1", 10, [0.5, 0.5, 0.5], 1.5, 10.0)
-    parsed = json.loads(line)
-    assert parsed["calib_pin"] == CALIB_PIN
-    # 100 s measured while the calib loop ran 1.5 s vs the 1.2 s pin
-    # host -> the host was 1.25x slow -> adjusted = 80 s.
-    assert parsed["value_calib_adjusted"] == round(
-        100.0 * CALIB_PIN / 1.5, 3
-    )
-    assert parsed["load_ok"] is True
+def _row(t0: float, wall: float) -> tuple[list[Span], EventLog]:
+    """One row's spans (build 0.2 s, plan 0.1 s, a 0.7 s noop write inside
+    an op span of ``wall`` seconds) and an event log with one two-stage
+    job running 0.1-0.65 s into the write."""
+    spans = [
+        Span(1, "r", "queries.build", 0, t0, t0 + 0.2),
+        Span(2, "r", "catalyst.plan", 0, t0 + 0.2, t0 + 0.3),
+        Span(3, "r", "spark.execute", 0, t0 + 0.3, t0 + 1.0),
+        Span(0, "r", "op", None, t0, t0 + wall),
+    ]
+    log = EventLog()
+    log.jobs[7] = Job(t0 + 0.4, t0 + 0.95, stages={1, 2})
+    log.stages_done = {1, 2}
+    log.tasks = {
+        1: [(0.3, 0.2, 0.01, 1000, 0, 0, 50)] * 2,
+        2: [(0.1, 0.1, 0.0, 0, 2000, 64, 70)],
+    }
+    return spans, log
+
+
+def test_layer_record_schema_and_reconciled_rule():
+    """Synthetic spans and event log, no Spark: the record holds every layer
+    figure, the write span splits into Spark-busy time and driver gap, and
+    a row reconciles when build + plan + busy + gap is within 10% of its
+    wall time."""
+    spans, log = _row(1000.0, 1.0)
+    rec = layer_record(spans, log, 0.25)
+    assert set(rec) == RECORD_KEYS
+    assert rec["queries.build_s"] == 0.2
+    assert rec["catalyst.plan_s"] == 0.1
+    assert rec["spark.busy_s"] == 0.55
+    assert rec["driver.gap_s"] == 0.15
+    assert (rec["spark.jobs"], rec["spark.stages"], rec["spark.tasks"]) == (1, 2, 3)
+    assert rec["exec.run_s"] == 0.7
+    assert rec["shuffle.write_bytes"] == 2000
+    assert rec["shuffle.read_bytes"] == 2000
+    assert rec["exec.spill_bytes"] == 64
+    assert rec["exec.result_bytes"] == 170
+    assert rec["pyworker.cpu_s"] == 0.25
+    assert rec["reconciled"] is True
+    # 1.05 s of wall against 1.0 s of layers: inside 10%.
+    assert layer_record(*_row(1000.0, 1.05), 0.0)["reconciled"] is True
+    # 1.2 s: 0.2 s outside every layer.
+    assert layer_record(*_row(1000.0, 1.2), 0.0)["reconciled"] is False
 
 
 def test_probe_extras_registered():
-    # overlap with BENCH_QUERIES is fine (promoted entries keep their
-    # EXTRA row for history; the probe dedupes via dict.fromkeys) —
-    # what must never happen is probing an unregistered name
+    # overlap with BENCH_QUERIES is fine (the probe dedupes via
+    # dict.fromkeys) — what must never happen is probing an unregistered name
     unregistered = [q for q in EXTRA_QUERIES if q not in QUERIES]
     assert not unregistered, unregistered

@@ -52,14 +52,3 @@ def test_query_registry_and_errors(engine):
         engine.query("no_such_query")
     with pytest.raises(KeyError):
         engine.table("no_such_table")
-
-
-def test_bench_headline_queries_are_registered():
-    """bench.py must never name a query the registry doesn't have — the
-    driver runs it unattended per-round."""
-    import bench
-    from log_analysis_system_spark.queries import QUERIES, load_all
-
-    load_all()
-    missing = [q for q in bench.BENCH_QUERIES if q not in QUERIES]
-    assert not missing, f"bench names unregistered queries: {missing}"

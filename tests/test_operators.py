@@ -18,7 +18,7 @@ from log_analysis_system_spark.operators import (
     session_aggregate,
     sessionize,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_matches_oracle
 
 
 def ts(minute: int, second: int = 0):
@@ -628,6 +628,42 @@ def test_pq_codes_compact_and_recall_gate(spark):
     row = QUERIES["ann_pq_topk"](spark, SF_DIR).collect()[0]
     assert row["recall_ok"] is True
     assert row["n_queries"] == 10
+
+
+def test_training_aggregate_reduction_matches_driver_merge(
+    spark, duck, monkeypatch
+):
+    """With TRAIN_MERGE_MAX_ROWS at 0 every Lloyd round of the IVF and PQ
+    trainers takes the JVM hash-aggregate reduction instead of the
+    driver-merged mapInPandas partials. Both must give the same integer
+    centroids and codebooks, and both registry queries must still match
+    their oracles."""
+    from log_analysis_system_spark.queries import (
+        ORACLES,
+        QUERIES,
+        load_all,
+        similarity,
+        similarity_pq,
+    )
+
+    load_all()
+    vecs = similarity._quantized(spark, SF_DIR)
+
+    def models():
+        cents = similarity.train_ivf_centroids(vecs).collect()
+        book = similarity_pq.train_pq_codebooks(vecs).collect()
+        return (
+            sorted((r["cell_id"], list(r["ce"]), r["cn"]) for r in cents),
+            sorted((r["sub"], r["code"], list(r["cv"])) for r in book),
+        )
+
+    merged = models()
+    # similarity_pq binds the bound by name at import: patch both modules.
+    monkeypatch.setattr(similarity, "TRAIN_MERGE_MAX_ROWS", 0)
+    monkeypatch.setattr(similarity_pq, "TRAIN_MERGE_MAX_ROWS", 0)
+    assert models() == merged
+    for name in ("ann_ivf_trained_topk", "ann_pq_topk"):
+        assert_matches_oracle(spark, duck, QUERIES[name], ORACLES[name], SF_DIR)
 
 
 def test_pq_empty_corpus_returns_empty_verdict(spark, tmp_path):

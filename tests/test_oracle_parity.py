@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from log_analysis_system_spark.queries import ORACLES, QUERIES, load_all
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, canon_hash
 
 load_all()
 
@@ -42,6 +42,29 @@ SLOW_ORACLES = {
 )
 def test_query_matches_oracle(spark, duck, name):
     assert_matches_oracle(spark, duck, QUERIES[name], ORACLES[name], SF_DIR)
+
+
+# (row count, canon hash) at sf0.001 of the slow-oracle rows outside the
+# driver's 50-query window, so the default tier still checks their Spark
+# side. Each was computed once next to its DuckDB oracle, which gave the
+# same count and hash; the slow tier above re-runs the oracle itself.
+SLOW_ORACLE_PINS = {
+    "embedding_dup_clusters": (14, "f4310548a3e71b03"),
+    "hits_trade_graph": (160, "22ad6a73ba591e7b"),
+    "holt_forecast_revenue": (80, "df01e6b37606ca79"),
+    "kcore_trade_graph": (0, "e3b0c44298fc1c14"),
+    "lsh_recall_audit": (1, "d066fcbadd829057"),
+    "mmr_diversified_topk": (50, "4e34d190e928325e"),
+    "semantic_dedup_keep": (500, "b1a20c890b6e0821"),
+    "theil_sen_trend": (1, "8899670f30933bbf"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SLOW_ORACLE_PINS))
+def test_slow_oracle_row_matches_pinned_hash(spark, name):
+    if not SF_DIR.rstrip("/").endswith("sf0.001"):
+        pytest.skip("hashes are pinned at sf0.001")
+    assert canon_hash(QUERIES[name](spark, SF_DIR)) == SLOW_ORACLE_PINS[name]
 
 
 def test_every_query_has_oracle_or_is_flagged():
