@@ -2158,13 +2158,13 @@ def q_table_stats_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table this engine's `join_cardinality_estimate` row would read
     instead of re-sketching at plan time.
 
-    Scale shape: each column's stats derive from ONE column-pruned scan
-    (columnar parquet reads just that column) feeding a per-value hash
-    aggregate — map-side combinable, keyed on the value, so the heavy
-    input reduces to the value histogram before NDV/MCV/min/max are
-    taken from the bounded histogram table; the quartiles are Spark's
-    sort-based exact percentile over the integerized value. This is the
-    exact-audit tier: at 100 TB production swaps NDV for HLL and the
+    Scale shape: each column is scanned twice, column-pruned (columnar
+    parquet reads just that column). One scan feeds a per-value hash
+    aggregate — map-side combinable, keyed on the value — whose top row
+    is the MCV. The other feeds one global aggregate over the raw values:
+    row and null counts, the exact NDV (`countDistinct`), min/max and,
+    for numerics, three exact `percentile`s, Spark's sort-based exact
+    percentile over the integerized value. This is the exact-audit tier: at 100 TB production swaps NDV for HLL and the
     quartiles for a mergeable quantile sketch (the
     `approx_distinct_users` / `approx_value_percentiles` serving tier)
     under the same output contract. Numerics are integerized

@@ -181,17 +181,28 @@ def top10_sessions_per_category(details: DataFrame, top10_cats: DataFrame) -> Da
 
 
 def session_analyze(
-    action_df: DataFrame, user_df: DataFrame, params: TaskParams
+    action_df: DataFrame,
+    user_df: DataFrame,
+    params: TaskParams,
+    cached: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Job 1 end-to-end. Returns the result tables of sql.txt:2-67.
 
-    The scan and the filtered-session aggregate are cached — they feed four
-    downstream branches (stat, sampling, top10 x2), the same three reuse
-    points the reference persists (:116,138,149)."""
-    actions = scan_actions(action_df, params).cache()
+    The scan, the filtered-session aggregate and the session detail are
+    cached — they feed four downstream branches (stat, sampling, top10 x2),
+    the same three reuse points the reference persists (:116,138,149). Each
+    is appended to ``cached`` for the caller to unpersist once the tables
+    are written (``runner.run_session_task`` does)."""
+
+    def keep(df: DataFrame) -> DataFrame:
+        if cached is not None:
+            cached.append(df)
+        return df.cache()
+
+    actions = keep(scan_actions(action_df, params))
     agg = aggregate_sessions(actions)
-    filtered = filter_sessions(agg, user_df, params).cache()
-    details = session_detail(actions, filtered).cache()
+    filtered = keep(filter_sessions(agg, user_df, params))
+    details = keep(session_detail(actions, filtered))
     top10 = top10_categories(details)
     return {
         "session_aggr_stat": session_aggr_stat(filtered),

@@ -34,11 +34,18 @@ def run_session_task(
     """Job 1: session analysis end-to-end from a reference-encoded task JSON.
     ``sink(df, table_name)`` receives each result table (the reference's
     session_aggr_stat / session_random_extract / session_detail /
-    top10_category / top10_category_session, sql.txt:2-67)."""
+    top10_category / top10_category_session, sql.txt:2-67). The job's caches
+    are released once every table is written; the returned tables stay
+    readable, uncached."""
     params = TaskParams.from_json(task_param_json)
-    results = session_analyze(action_df, user_df, params)
-    for name, df in results.items():
-        sink(df, name)
+    cached: list[DataFrame] = []
+    results = session_analyze(action_df, user_df, params, cached)
+    try:
+        for name, df in results.items():
+            sink(df, name)
+    finally:
+        for df in cached:
+            df.unpersist()
     return results
 
 

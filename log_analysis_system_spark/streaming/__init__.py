@@ -4,7 +4,6 @@ from .ad_analytics import (
     parse_ad_click_log,
     AdAnalyticsPipeline,
     sliding_window_counts,
-    cumulative_stats,
     province_top3,
 )
 from .corpus import curate_doc_stream, parse_doc_stream
@@ -16,7 +15,6 @@ __all__ = [
     "parse_ad_click_log",
     "AdAnalyticsPipeline",
     "sliding_window_counts",
-    "cumulative_stats",
     "province_top3",
     "curate_doc_stream",
     "parse_doc_stream",

@@ -15,9 +15,14 @@ Differences from the reference, by design:
   1000-executor deployment.
 - Watermarks bound state and define late-data semantics explicitly (ST7;
   the DStream version silently miscounts late records).
-- Exactly-once sink semantics via foreachBatch + atomically-committed
-  ``_applied_batch`` markers per state partition: a crash-replayed batch id
-  is detected and skipped per partition, instead of at-least-once upserts.
+- Exactly-once sink semantics via foreachBatch: each micro-batch is one
+  transaction over the parquet state tables. It freezes its input against
+  the blacklist as read before the batch, commits the two count tables
+  date partition by date partition with an atomically-committed
+  ``_applied_batch`` marker, then the top-3, and the blacklist last. A
+  crash-replayed batch id therefore recomputes the same input and skips
+  what was already committed, instead of at-least-once upserts. Recovery
+  from a commit cut short runs once, at the start of the next batch.
 
 Kafka is the production source (S4); tests drive the same DAG from a file
 source — the transformations are source-agnostic DataFrame functions.
@@ -32,6 +37,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.partials import attach_foreach_batch
 from ..sinks import overwrite_keyed_parquet
 
 BLACKLIST_THRESHOLD = 2  # reference `> 1` is off-by-one vs its narrative (:330)
@@ -70,10 +76,7 @@ def build_kafka_stream(
 def build_file_stream(spark: SparkSession, path: str) -> DataFrame:
     """Test/replay source: text files of the same space-delimited records the
     reference's mock producer emits (MockRealTimeData.java:39-41)."""
-    raw = spark.readStream.format("text").load(path).withColumnRenamed(
-        "value", "value"
-    )
-    return parse_ad_click_log(raw)
+    return parse_ad_click_log(spark.readStream.format("text").load(path))
 
 
 def parse_ad_click_log(raw: DataFrame) -> DataFrame:
@@ -90,30 +93,16 @@ def parse_ad_click_log(raw: DataFrame) -> DataFrame:
     ).withColumn("date_key", F.date_format("ts", "yyyy-MM-dd"))
 
 
-def daily_user_ad_counts(parsed: DataFrame) -> DataFrame:
-    """A10 shape: per-batch counts keyed (date, user, ad)."""
-    return parsed.groupBy("date_key", "user_id", "ad_id").agg(
-        F.count(F.lit(1)).alias("click_count")
-    )
-
-
-def cumulative_stats(parsed: DataFrame) -> DataFrame:
-    """ST4/A11: unbounded running totals per (date, province, city, ad).
-    As a streaming aggregation in update mode the engine maintains the state
-    the reference kept in updateStateByKey + checkpoint; day-keyed state is
-    bounded by watermarking on the event date downstream."""
-    return parsed.groupBy("date_key", "province", "city", "ad_id").agg(
-        F.count(F.lit(1)).alias("click_count")
-    )
-
-
 def province_top3(cum_state: DataFrame) -> DataFrame:
     """ST5/W2: province rollup of the cumulative state + top-3 per
     (date, province). Implements the documented intent rank<=3 — the
     reference ships `WHERE rank>=3` (AdClickRealTimeSpark.java:658), recorded
-    divergence."""
-    rolled = cum_state.groupBy("date_key", "province", "ad_id").agg(
-        F.sum("click_count").alias("click_count")
+    divergence. One exchange on (date, province) serves both the rollup and
+    the window."""
+    rolled = (
+        cum_state.repartition("date_key", "province")
+        .groupBy("date_key", "province", "ad_id")
+        .agg(F.sum("click_count").alias("click_count"))
     )
     w = Window.partitionBy("date_key", "province").orderBy(
         F.desc("click_count"), F.asc("ad_id")
@@ -141,34 +130,38 @@ class AdAnalyticsPipeline:
     """ST3 blacklist feedback loop + ST4/ST5 state, on parquet state tables.
 
     One ``foreachBatch`` per micro-batch (reference: one DStream graph per
-    batch), executing:
+    batch) runs one transaction:
 
-      1. anti-join the batch against the current blacklist (J8);
-      2. fold the surviving clicks into the cumulative (date,user,ad) counts
-         (S10 upsert semantics), touching ONLY the batch's date partitions;
-      3. users whose cumulative count crossed the threshold join the
-         blacklist (the feedback edge: visible to step 1 of the NEXT batch —
-         exactly the reference's MySQL round-trip topology, :96-99,232-403);
-      4. maintain cumulative (date,province,city,ad) stats and the derived
-         province top-3 (ST4/ST5), again only for the batch's dates.
+      0. recovery: heal a commit a crashed batch cut short, once, before
+         any state is read (``_recover``);
+      1. freeze the input: read the blacklist once, anti-join the batch
+         against it (J8) and materialize the surviving clicks, ``clean``;
+      2. A10/A11/ST4 upserts, the (date,user,ad) counts then the
+         (date,province,city,ad) stats: per table, one read of the batch's
+         date partitions, one aggregate with the batch's clicks, one
+         partitioned write, then each date directory swapped in;
+      3. ST5: the province top-3 of the batch's dates, recomputed from their
+         committed stats (keyed overwrite);
+      4. last, and only when the batch mints an offender: users over the
+         threshold on a batch date join the blacklist (the feedback edge,
+         seen by step 1 of the NEXT batch — the reference's MySQL round
+         trip, :96-99,232-403).
 
     Scale + exactly-once design: state tables are hive-layout parquet
-    directories (``date_key=D/``), the test double for a lakehouse MERGE.
-    Per-batch work is O(batch dates' partitions), never O(all state): each
-    touched date partition is re-merged beside the live one and committed by
-    a single atomic ``os.rename`` whose directory already contains an
-    ``_applied_batch`` marker (underscore files are invisible to Spark
-    readers). A ``foreachBatch`` re-execution after a crash between commit
-    and checkpoint therefore finds ``marker >= batch_id`` and skips the
-    partition — replays cannot double-count, partition by partition, even
-    mid-crash. The blacklist is a set union (naturally idempotent) and the
-    top-3 a deterministic recompute of touched dates, so neither needs a
-    marker to replay safely.
+    directories (``date_key=D/``), the test double for a lakehouse MERGE;
+    per-batch work is O(batch dates' partitions), never O(all state). Each
+    date directory is committed by a two-rename swap from a staging dir
+    beside the table root, with an ``_applied_batch`` marker inside
+    (underscore files are invisible to Spark readers). Steps 1-3 use only
+    the blacklist as it stood before the batch, so a re-execution of the
+    batch id after a crash at any point computes the same ``clean``; dates
+    whose marker already reaches it are not merged again, the top-3 is a
+    deterministic recompute and the blacklist a set union.
     """
 
-    _USER_FILE_SCHEMA = "user_id long, ad_id long, click_count long"
-    _STAT_FILE_SCHEMA = (
-        "province string, city string, ad_id long, click_count long"
+    _USER_SCHEMA = "date_key string, user_id long, ad_id long, click_count long"
+    _STAT_SCHEMA = (
+        "date_key string, province string, city string, ad_id long, click_count long"
     )
 
     def __init__(self, state_dir: str):
@@ -180,12 +173,6 @@ class AdAnalyticsPipeline:
 
     # -- state I/O -----------------------------------------------------------
     @staticmethod
-    def _has_parquet(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
-    @staticmethod
     def _applied_batch(part_dir: str) -> int:
         """Batch id committed into ``part_dir`` by the atomic swap, or -1."""
         marker = os.path.join(part_dir, "_applied_batch")
@@ -194,174 +181,145 @@ class AdAnalyticsPipeline:
                 return int(fh.read().strip())
         return -1
 
-    @staticmethod
-    def _recover(target: str) -> None:
-        """Heal a crash inside ``_swap_in``'s two-rename commit. If the old
-        partition was renamed aside but the new one never landed, restore
-        the aside (state = pre-batch; the marker makes the replay re-merge).
-        If the new one landed and only the aside cleanup was lost, finish
-        the cleanup. Either way, exactly one committed directory remains —
-        the committed history and its marker can never both vanish."""
-        aside = f"{target}.prev"
-        if os.path.isdir(aside):
-            if os.path.isdir(target):
-                shutil.rmtree(aside)
-            else:
-                os.rename(aside, target)
+    def _recover(self) -> None:
+        """Heal a crash inside ``_swap_in``. If a live directory was renamed
+        aside but the new one never landed, restore the aside (state =
+        pre-batch; its marker makes the replay re-merge). If the new one
+        landed and only the aside cleanup was lost, finish the cleanup. A
+        ``.tmp-`` staging dir was never committed: remove it. Either way
+        exactly one committed directory remains — the committed history and
+        its marker can never both vanish."""
+        for parent in (self.state_dir, self.user_counts_path, self.stat_path):
+            for name in os.listdir(parent) if os.path.isdir(parent) else ():
+                path = os.path.join(parent, name)
+                if ".tmp-" in name:
+                    shutil.rmtree(path, ignore_errors=True)
+                elif name.endswith(".prev"):
+                    target = path[: -len(".prev")]
+                    if os.path.isdir(target):
+                        shutil.rmtree(path)
+                    else:
+                        os.rename(path, target)
 
-    def _swap_in(self, df: DataFrame, target: str, batch_id: int) -> None:
-        """Materialize ``df`` beside ``target`` with the batch marker inside,
-        then commit rename-into-place: the live directory is renamed ASIDE
-        (never deleted pre-commit), the new one renamed in, and only then is
-        the aside removed — so a crash at any point leaves either the old or
-        the new committed state on disk for ``_recover``. Never overwrites a
-        path the producing plan may still be reading."""
-        tmp = f"{target}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_applied_batch"), "w") as fh:
-            fh.write(str(batch_id))
-        aside = f"{target}.prev"
-        if os.path.isdir(target):
-            os.rename(target, aside)
-        os.rename(tmp, target)
-        if os.path.isdir(aside):
-            shutil.rmtree(aside)
-
-    def _merge_date_partition(
-        self,
-        delta: DataFrame,
-        root: str,
-        date_key: str,
-        key_cols: list[str],
-        file_schema: str,
-        batch_id: int,
+    def _swap_in(
+        self, df: DataFrame, target: str, batch_id: int, partition_col: str | None = None
     ) -> None:
-        """Fold ``delta`` (this batch's counts for one date, WITHOUT the
-        date_key column) into ``root/date_key=.../``. No-op when the
-        partition's committed marker says this batch was already applied
-        (crash-replay window)."""
-        part_dir = os.path.join(root, f"date_key={date_key}")
-        self._recover(part_dir)
-        if self._applied_batch(part_dir) >= batch_id:
-            return
-        spark = delta.sparkSession
-        if self._has_parquet(part_dir):
-            old = spark.read.schema(file_schema).parquet(part_dir)
-            merged = (
-                old.unionByName(delta)
-                .groupBy(*key_cols)
-                .agg(F.sum("click_count").alias("click_count"))
-            )
+        """Write ``df`` to a staging dir beside ``target`` and commit it with
+        the batch marker inside — with ``partition_col``, each ``<col>=V``
+        directory of the write into ``target`` on its own, the others left
+        as they are. A commit renames the live directory ASIDE (never
+        deleted pre-commit), renames the new one in, and only then removes
+        the aside — so a crash at any point leaves the old or the new
+        committed state on disk for ``_recover``."""
+        tmp = f"{target}.tmp-{uuid.uuid4().hex[:8]}"
+        if partition_col is None:
+            df.write.parquet(tmp)
+            moves = [(tmp, target)]
         else:
-            merged = delta
-        os.makedirs(root, exist_ok=True)
-        self._swap_in(merged, part_dir, batch_id)
+            df.write.partitionBy(partition_col).parquet(tmp)
+            os.makedirs(target, exist_ok=True)
+            moves = [
+                (os.path.join(tmp, d), os.path.join(target, d))
+                for d in sorted(os.listdir(tmp))
+                if d.startswith(f"{partition_col}=")
+            ]
+        for src, dst in moves:
+            with open(os.path.join(src, "_applied_batch"), "w") as fh:
+                fh.write(str(batch_id))
+            aside = f"{dst}.prev"
+            if os.path.isdir(dst):
+                os.rename(dst, aside)
+            os.rename(src, dst)
+            if os.path.isdir(aside):
+                shutil.rmtree(aside)
+        shutil.rmtree(tmp, ignore_errors=True)
 
-    def _read_state(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
-        # Heal any partition whose two-rename commit was interrupted before
-        # Spark lists the directory tree.
-        if os.path.isdir(path):
-            for d in os.listdir(path):
-                if d.endswith(".prev"):
-                    self._recover(os.path.join(path, d[: -len(".prev")]))
-                elif ".tmp-" in d:  # uncommitted write from a crashed batch
-                    shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        self._recover(path)
-        if self._has_parquet(path):
-            return spark.read.schema(schema).parquet(path)
-        return spark.createDataFrame([], schema)
+    @staticmethod
+    def _read(
+        spark: SparkSession, path: str, schema: str, dates: list[str] | None = None
+    ) -> DataFrame:
+        """The committed rows under ``path``; with ``dates``, only those date
+        partitions (no other date directory is listed)."""
+        dirs = [path] if dates is None else [f"{path}/date_key={d}" for d in dates]
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        if not dirs:  # no rows, and no Python worker to produce them
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+        return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
 
     def blacklist(self, spark: SparkSession) -> DataFrame:
-        return self._read_state(spark, self.blacklist_path, "user_id long")
+        return self._read(spark, self.blacklist_path, "user_id long")
 
     def user_counts(self, spark: SparkSession) -> DataFrame:
-        return self._read_state(
-            spark,
-            self.user_counts_path,
-            "date_key string, user_id long, ad_id long, click_count long",
-        )
+        return self._read(spark, self.user_counts_path, self._USER_SCHEMA)
 
     def stats(self, spark: SparkSession) -> DataFrame:
-        return self._read_state(
-            spark,
-            self.stat_path,
-            "date_key string, province string, city string, ad_id long, "
-            "click_count long",
-        )
+        return self._read(spark, self.stat_path, self._STAT_SCHEMA)
 
     # -- the per-batch transaction ------------------------------------------
+    def _upsert(
+        self, clean: DataFrame, root: str, schema: str, dates: list[str], batch_id: int
+    ) -> DataFrame:
+        """Add the batch's clicks, counted by ``schema``'s key columns, to
+        the dates of ``root`` whose marker is below ``batch_id`` (a date at
+        or past it was committed by a crashed run of this batch). Returns
+        the committed rows of every batch date."""
+        spark = clean.sparkSession
+        pending = [
+            d for d in dates
+            if self._applied_batch(f"{root}/date_key={d}") < batch_id
+        ]
+        if pending:
+            old = self._read(spark, root, schema, pending)
+            keys = [c for c in old.columns if c != "click_count"]
+            clicks = clean.where(F.col("date_key").isin(pending)).select(
+                *keys, F.lit(1).alias("click_count")
+            )
+            merged = (
+                old.unionByName(clicks)
+                .groupBy(*keys)
+                .agg(F.sum("click_count").alias("click_count"))
+            )
+            self._swap_in(merged, root, batch_id, "date_key")
+        return self._read(spark, root, schema, dates)
+
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df = batch_df.cache()
-        dates = sorted(
-            r["date_key"]
-            for r in batch_df.select("date_key").distinct().collect()
-        )
-        if not dates:
-            batch_df.unpersist()
-            return
-
-        # 1) J8: drop already-blacklisted users (stream-static anti-join;
-        #    static side re-read per batch = reference's per-batch reload).
-        clean = batch_df.join(
-            F.broadcast(self.blacklist(spark)), "user_id", "left_anti"
-        ).cache()
-
-        # 2) fold batch counts into the batch's (date,user,ad) partitions.
-        batch_counts = daily_user_ad_counts(clean).cache()
-        for d in dates:
-            self._merge_date_partition(
-                batch_counts.where(F.col("date_key") == d).drop("date_key"),
-                self.user_counts_path,
-                d,
-                ["user_id", "ad_id"],
-                self._USER_FILE_SCHEMA,
-                batch_id,
+        self._recover()  # 0)
+        # 1) the blacklist as it stood before this batch; ``clean`` is
+        #    materialized by the dates collect, before any state is written.
+        blacklist = self.blacklist(spark)
+        clean = batch_df.join(F.broadcast(blacklist), "user_id", "left_anti").cache()
+        try:
+            dates = sorted(
+                r["date_key"] for r in clean.select("date_key").distinct().collect()
             )
-
-        # 3) feedback edge: newly-over-threshold users join the blacklist.
-        #    Only touched dates can mint offenders; the union is a set, so
-        #    replaying it is idempotent without a marker check.
-        offenders = (
-            self.user_counts(spark)
-            .where(F.col("date_key").isin(dates))
-            .where(F.col("click_count") > BLACKLIST_THRESHOLD)
-            .select("user_id")
-            .distinct()
-        )
-        self._swap_in(
-            self.blacklist(spark).unionByName(offenders).distinct(),
-            self.blacklist_path,
-            batch_id,
-        )
-
-        # 4) ST4 cumulative province/city stats + ST5 derived top-3, for the
-        #    batch's dates only (partition-pruned read, keyed overwrite).
-        batch_stat = cumulative_stats(clean).cache()
-        for d in dates:
-            self._merge_date_partition(
-                batch_stat.where(F.col("date_key") == d).drop("date_key"),
-                self.stat_path,
-                d,
-                ["province", "city", "ad_id"],
-                self._STAT_FILE_SCHEMA,
-                batch_id,
+            if not dates:
+                return
+            # 2) the count tables; 3) the top-3 from the committed stats
+            counts = self._upsert(
+                clean, self.user_counts_path, self._USER_SCHEMA, dates, batch_id
             )
-        overwrite_keyed_parquet(
-            province_top3(self.stats(spark).where(F.col("date_key").isin(dates))),
-            self.top3_path,
-            ["date_key"],
-        )
-        batch_stat.unpersist()
-        batch_counts.unpersist()
-        clean.unpersist()
-        batch_df.unpersist()
+            stats = self._upsert(clean, self.stat_path, self._STAT_SCHEMA, dates, batch_id)
+            overwrite_keyed_parquet(province_top3(stats), self.top3_path, ["date_key"])
+            # 4) committed last
+            minted = sorted({
+                r["user_id"]
+                for r in counts.where(F.col("click_count") > BLACKLIST_THRESHOLD)
+                .select("user_id")
+                .join(F.broadcast(blacklist), "user_id", "left_anti")
+                .collect()
+            })
+            if minted:  # built in the JVM: a list-made frame runs Python workers
+                new = spark.range(1).select(
+                    F.explode(F.array([F.lit(u).cast("long") for u in minted]))
+                    .alias("user_id")
+                )
+                self._swap_in(
+                    blacklist.unionByName(new).coalesce(1), self.blacklist_path, batch_id
+                )
+        finally:
+            clean.unpersist()
 
     def start(self, parsed_stream: DataFrame, checkpoint: str):
         """Attach the per-batch transaction to a parsed stream."""
-        return (
-            parsed_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
+        return attach_foreach_batch(parsed_stream, self.process_batch, checkpoint)

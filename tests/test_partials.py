@@ -116,7 +116,6 @@ def test_serve_plans_have_one_scan_for_many_batches(spark, tmp_path):
 # ---------------------------------------------------------------- one path
 
 _LISTERS = {"listdir", "scandir", "walk", "iterdir", "glob"}
-_ALLOWED_FOREACH = {("ad_analytics.py", "AdAnalyticsPipeline.start")}
 
 
 def _scopes(tree):
@@ -138,7 +137,6 @@ def _scopes(tree):
 
 
 def _store_layout_violations(path: str) -> list[str]:
-    base = os.path.basename(path)
     with open(path) as f:
         tree = ast.parse(f.read(), path)
     found = []
@@ -146,7 +144,7 @@ def _store_layout_violations(path: str) -> list[str]:
         nodes = list(ast.walk(fn))
         calls = [n.func for n in nodes if isinstance(n, ast.Call)]
         names = {c.attr if isinstance(c, ast.Attribute) else getattr(c, "id", None) for c in calls}
-        if "foreachBatch" in names and (base, qual) not in _ALLOWED_FOREACH:
+        if "foreachBatch" in names:
             found.append(f"{path}: {qual} calls foreachBatch")
         mentions_batch = any(
             isinstance(n, ast.Constant) and isinstance(n.value, str) and "batch=" in n.value
@@ -159,8 +157,7 @@ def _store_layout_violations(path: str) -> list[str]:
 
 def test_only_partials_module_knows_the_store_layout():
     """Listing ``batch=`` dirs and attaching ``foreachBatch`` happen in
-    operators/partials.py only (AdAnalyticsPipeline keeps its own
-    merge-in-place state)."""
+    operators/partials.py only."""
     lib = os.path.dirname(os.path.dirname(partials.__file__))
     violations = []
     for dirpath, _, files in os.walk(lib):

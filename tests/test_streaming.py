@@ -336,10 +336,12 @@ def test_batch_touches_only_its_date_partitions(spark, stream_env):
 
 def test_swap_in_crash_windows_recoverable(spark, stream_env):
     """The two-rename commit must leave a recoverable directory whatever the
-    crash point: aside-renamed-but-new-never-landed restores the OLD state
-    (and the replay re-merges); landed-but-aside-cleanup-lost finishes the
-    cleanup; a stray uncommitted .tmp- dir is swept. The old rmtree-then-
-    rename commit failed the first window by deleting history pre-commit."""
+    crash point, healed by the recovery every batch runs before it reads
+    state: aside-renamed-but-new-never-landed restores the OLD state (and
+    the replay re-merges); landed-but-aside-cleanup-lost finishes the
+    cleanup; a stray uncommitted .tmp- staging dir is swept. The old
+    rmtree-then-rename commit failed the first window by deleting history
+    pre-commit."""
     import os
     import shutil
 
@@ -357,22 +359,138 @@ def test_swap_in_crash_windows_recoverable(spark, stream_env):
 
     # window 1: old renamed aside, new never landed
     os.rename(part, part + ".prev")
-    counts = pipe.user_counts(spark)  # read path must heal first
+    pipe._recover()  # what process_batch runs first
     assert os.path.isdir(part) and not os.path.isdir(part + ".prev")
-    assert counts.count() == 1
+    assert pipe.user_counts(spark).count() == 1
     assert AdAnalyticsPipeline._applied_batch(part) == 0
 
     # window 2: new landed, aside cleanup lost
     shutil.copytree(part, part + ".prev")
-    pipe.process_batch(batch, 1)  # merge path heals, then applies batch 1
+    pipe.process_batch(batch, 1)  # heals, then applies batch 1
     assert not os.path.isdir(part + ".prev")
     row = pipe.user_counts(spark).collect()[0]
     assert row["click_count"] == 2  # batch 0 + batch 1, no double-apply
 
-    # window 3: uncommitted tmp dir from a crashed write is swept on read
-    shutil.copytree(part, part + ".tmp-deadbeef")
-    pipe.user_counts(spark)
-    assert not os.path.isdir(part + ".tmp-deadbeef")
+    # window 3: the staging dir of a crashed write, beside the table root
+    staging = root + ".tmp-deadbeef"
+    shutil.copytree(part, os.path.join(staging, os.path.basename(part)))
+    pipe._recover()
+    assert not os.path.isdir(staging)
+
+
+def _frame(spark, lines):
+    return parse_ad_click_log(
+        spark.createDataFrame([(line,) for line in lines], "value string")
+    )
+
+
+def test_blacklist_rewritten_only_when_a_user_is_minted(spark, stream_env):
+    """A batch that blacklists nobody new leaves the blacklist files alone."""
+    import glob
+
+    pipe = AdAnalyticsPipeline(stream_env["state"])
+    pipe.process_batch(
+        _frame(spark, [_record(i, "Jiangsu", "Nanjing", 1, 9) for i in range(3)]), 0
+    )
+    files = glob.glob(os.path.join(pipe.blacklist_path, "*"))
+    before = {f: os.stat(f).st_mtime_ns for f in files}
+    assert any(f.endswith(".parquet") for f in before)
+
+    # user 1 is already blacklisted; user 2 stays under the threshold
+    pipe.process_batch(
+        _frame(
+            spark,
+            [_record(20, "Jiangsu", "Nanjing", 1, 9),
+             _record(21, "Zhejiang", "Hangzhou", 2, 5)],
+        ),
+        1,
+    )
+    after = {
+        f: os.stat(f).st_mtime_ns
+        for f in glob.glob(os.path.join(pipe.blacklist_path, "*"))
+    }
+    assert after == before, "blacklist rewritten by a batch that minted no offender"
+    assert {r["user_id"] for r in pipe.user_counts(spark).collect()} == {1, 2}
+
+
+# Where a batch can die: at each state commit (the user-count, stat, top-3
+# and blacklist commits), and inside the stat commit between renaming the
+# second date's live dir aside and renaming its new dir in.
+_CRASH_POINTS = [
+    "ad_user_click_count",
+    "ad_stat",
+    "ad_province_top3",
+    "ad_blacklist",
+    "ad_stat/date_key=2024-01-02",
+]
+
+
+@pytest.mark.parametrize("point", _CRASH_POINTS)
+def test_crash_at_a_state_commit_then_replay_matches_the_stream(
+    spark, stream_env, monkeypatch, point
+):
+    """A batch that dies at ``point`` (every earlier commit landed) and is
+    replayed with the same batch id must leave exactly the state of a run
+    without the crash — perfbench's independent replay of the stream. The
+    crashing batch spans two dates and mints an offender, so every commit
+    runs; a later batch checks that the offender is filtered."""
+    from perfbench.checks import ad_state_matches, replay_ad_state
+
+    from log_analysis_system_spark.streaming import ad_analytics
+
+    day = 86_400
+    batches = [
+        [_record(0, "Jiangsu", "Nanjing", 1, 9),
+         _record(1, "Jiangsu", "Nanjing", 1, 9),
+         _record(2, "Zhejiang", "Hangzhou", 2, 5),
+         _record(day, "Zhejiang", "Hangzhou", 3, 5)],
+        [_record(10, "Jiangsu", "Nanjing", 1, 9),
+         _record(11, "Jiangsu", "Suzhou", 2, 9),
+         _record(day + 10, "Zhejiang", "Ningbo", 3, 4),
+         _record(day + 11, "Zhejiang", "Hangzhou", 4, 5)],
+        [_record(20, "Jiangsu", "Nanjing", 1, 9),
+         _record(day + 20, "Jiangsu", "Nanjing", 1, 7),
+         _record(day + 21, "Zhejiang", "Hangzhou", 3, 5)],
+    ]
+    files = []
+    for k, lines in enumerate(batches):
+        _write_chunk(stream_env["input"], f"b{k}.txt", lines)
+        files.append([os.path.join(stream_env["input"], f"b{k}.txt")])
+    frames = [parse_ad_click_log(spark.read.text(f)) for f in files]
+
+    pipe = AdAnalyticsPipeline(stream_env["state"])
+    pipe.process_batch(frames[0], 0)
+
+    target = os.path.join(stream_env["state"], point)
+    crashed = []
+
+    def crash_once(commit):
+        def call(*args, **kwargs):
+            path = args[1]
+            if not crashed and (path == target or path.startswith(target + os.sep)):
+                crashed.append(path)
+                raise RuntimeError(f"injected crash at {path}")
+            return commit(*args, **kwargs)
+
+        return call
+
+    monkeypatch.setattr(pipe, "_swap_in", crash_once(pipe._swap_in))
+    monkeypatch.setattr(
+        ad_analytics, "overwrite_keyed_parquet",
+        crash_once(ad_analytics.overwrite_keyed_parquet),
+    )
+    monkeypatch.setattr(os, "rename", crash_once(os.rename))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipe.process_batch(frames[1], 1)
+    spark.catalog.clearCache()  # a restarted driver has no cached plans
+    pipe.process_batch(frames[1], 1)  # the replay after the restart
+    pipe.process_batch(frames[2], 2)
+
+    expected = replay_ad_state(files)
+    assert (1,) in expected["ad_blacklist"]
+    assert ad_state_matches(stream_env["state"], expected) == {
+        table: True for table in expected
+    }
 
 
 def test_available_now_drains_and_terminates(spark, tmp_path):

@@ -44,6 +44,25 @@ def test_session_task_writes_all_result_tables(spark, tables, tmp_path):
     assert len(stat) == 1 and stat[0]["session_count"] > 0
 
 
+def test_session_task_releases_its_caches(spark, tables, tmp_path):
+    """Job 1 caches its scan, the filtered sessions and the session detail
+    for its four branches; once the sink has written every table, all three
+    are released and the returned tables read uncached."""
+    from pyspark import StorageLevel
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    results = run_session_task(
+        tables["user_visit_action"], tables["user_info"], TASK_JSON,
+        parquet_sink(str(tmp_path / "out")),
+    )
+    for name in ("filtered_sessions", "session_detail"):
+        assert results[name].is_cached is False
+        assert results[name].storageLevel == StorageLevel.NONE
+    assert persistent().size() <= before
+    assert results["filtered_sessions"].count() > 0
+
+
 def test_page_task_round_trips_params(spark, tables, tmp_path):
     out = str(tmp_path / "out2")
     df = run_page_task(tables["user_visit_action"], TASK_JSON, parquet_sink(out))
