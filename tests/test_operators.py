@@ -18,7 +18,7 @@ from log_analysis_system_spark.operators import (
     session_aggregate,
     sessionize,
 )
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, canon_hash
 
 
 def ts(minute: int, second: int = 0):
@@ -637,7 +637,12 @@ def test_training_aggregate_reduction_matches_driver_merge(
     trainers takes the JVM hash-aggregate reduction instead of the
     driver-merged mapInPandas partials. Both must give the same integer
     centroids and codebooks, and both registry queries must still match
-    their oracles."""
+    their oracles.
+
+    With BAKE_MAX_CELLS at 0 the IVF trainer runs its distributed Lloyd
+    rounds and both assignments (`_ivf_assign_top1`, `_kmeans_assigned`)
+    their broadcast crossJoin + window forms: same centroids, same
+    results."""
     from log_analysis_system_spark.queries import (
         ORACLES,
         QUERIES,
@@ -649,21 +654,35 @@ def test_training_aggregate_reduction_matches_driver_merge(
     load_all()
     vecs = similarity._quantized(spark, SF_DIR)
 
-    def models():
+    def centroids():
         cents = similarity.train_ivf_centroids(vecs).collect()
+        return sorted((r["cell_id"], list(r["ce"]), r["cn"]) for r in cents)
+
+    def models():
         book = similarity_pq.train_pq_codebooks(vecs).collect()
         return (
-            sorted((r["cell_id"], list(r["ce"]), r["cn"]) for r in cents),
+            centroids(),
             sorted((r["sub"], r["code"], list(r["cv"])) for r in book),
         )
 
+    def hashes():
+        return {
+            name: canon_hash(QUERIES[name](spark, SF_DIR))
+            for name in ("ann_ivf_trained_topk", "semantic_clusters")
+        }
+
     merged = models()
+    baked = hashes()
     # similarity_pq binds the bound by name at import: patch both modules.
     monkeypatch.setattr(similarity, "TRAIN_MERGE_MAX_ROWS", 0)
     monkeypatch.setattr(similarity_pq, "TRAIN_MERGE_MAX_ROWS", 0)
     assert models() == merged
     for name in ("ann_ivf_trained_topk", "ann_pq_topk"):
         assert_matches_oracle(spark, duck, QUERIES[name], ORACLES[name], SF_DIR)
+
+    monkeypatch.setattr(similarity, "BAKE_MAX_CELLS", 0)
+    assert centroids() == merged[0]
+    assert hashes() == baked
 
 
 def test_pq_empty_corpus_returns_empty_verdict(spark, tmp_path):
