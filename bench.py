@@ -11,8 +11,9 @@ writes or collects inside its own call (an index build, a recall audit) runs
 whole as its ``spark.execute``. The spans and the session's Spark event log
 give one layer record per row, through perfbench/harness.py and
 perfbench/run.py: wall, build, plan, Spark-busy and driver-gap seconds,
-jobs/stages/tasks, executor run/CPU/GC, shuffle, spill and result bytes,
-Python-worker CPU, and ``reconciled``: build + plan + busy + gap is within
+the Spark-busy seconds and jobs inside the build, jobs/stages/tasks,
+executor run/CPU/GC, shuffle, spill and result bytes, Python-worker CPU,
+and ``reconciled``: build + plan + busy + gap is within
 ``RECONCILE_TOLERANCE`` of the wall time.
 
 Outputs:
@@ -77,12 +78,19 @@ def layer_record(spans: list, log: harness.EventLog, pyworker_s: float) -> dict:
         "catalyst.plan_s": st.get("catalyst.plan", 0.0),
         "spark.busy_s": 0.0,
         "driver.gap_s": 0.0,
+        "build.busy_s": 0.0,
+        "build.jobs": 0,
     }
     for s in spans:
         if s.name == "spark.execute":
             busy, gap = perfbench_run.split_jobs(s, log)
             rec["spark.busy_s"] += busy
             rec["driver.gap_s"] += gap
+        elif s.name == "queries.build":
+            # Jobs a query runs while it is built (checkpoints, probes):
+            # part of the build's self time, attributed but not a layer.
+            rec["build.busy_s"] += perfbench_run.split_jobs(s, log)[0]
+            rec["build.jobs"] += len(log.submitted(s.start - 0.005, s.end))
     layers = sum(rec[k] for k in LAYERS)
     rec.update(log.totals(log.submitted(op.start - 0.005, op.end)))
     rec["pyworker.cpu_s"] = pyworker_s
@@ -177,7 +185,8 @@ def row_line(name: str, rec: dict, pin: float) -> str:
     """One compact stdout line per row, with its wall time over its pin."""
     return (
         f"{name} {rec['wall_s']:.3f}s x{rec['wall_s'] / pin:.2f}"
-        f" build {rec['queries.build_s']:.2f} plan {rec['catalyst.plan_s']:.2f}"
+        f" build {rec['queries.build_s']:.2f} (busy {rec['build.busy_s']:.2f},"
+        f" jobs {rec['build.jobs']}) plan {rec['catalyst.plan_s']:.2f}"
         f" busy {rec['spark.busy_s']:.2f} gap {rec['driver.gap_s']:.2f}"
         f" jobs {rec['spark.jobs']}" + ("" if rec["reconciled"] else " UNRECONCILED")
     )

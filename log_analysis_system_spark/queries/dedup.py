@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
+from ..operators.iterate import iterate
 from ..sources.catalog import per_snapshot, read_table, widen_scan
 
 N_MINHASH = 8  # 4 bands x 2 rows
@@ -605,9 +606,9 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
     Spark has no component operator (GraphX is RDD/Scala-only from PySpark);
     this loop is the standard DataFrame formulation. Rounds = component
     diameter (near-dup clusters are tiny, so a handful). Each round is one
-    shuffle join + one aggregate; ``localCheckpoint`` truncates lineage so
-    the plan does not grow with iterations — mandatory for iterative
-    DataFrame algorithms at scale.
+    shuffle join + one aggregate on the `iterate` loop, whose per-round
+    ``localCheckpoint`` keeps the plan from growing with iterations —
+    mandatory for iterative DataFrame algorithms at scale.
 
     ``edges`` must have columns (src, dst); both directions are derived.
     Raises ``RuntimeError`` if the loop exhausts ``max_iters`` while labels
@@ -625,34 +626,28 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
         .withColumn("component_id", F.col("doc_id"))
         .localCheckpoint()
     )
-    prev_sum = labels.agg(F.sum("component_id")).collect()[0][0]
-    converged = False
-    for _ in range(max_iters):
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             bidir.join(labels, bidir.src == labels.doc_id)
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("component_id").alias("nmin"))
         )
-        # Lazy checkpoint + one action: the label-sum convergence probe IS
-        # the job that materializes the round's checkpoint, halving the
-        # per-round job count vs the former eager-checkpoint-then-sum pair
-        # (round-10; results bit-identical — the checkpoint still truncates
-        # lineage at the same plan node).
-        labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "component_id", F.coalesce("nmin", "component_id")
-                ).alias("component_id"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(neighbor_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                "component_id", F.coalesce("nmin", "component_id")
+            ).alias("component_id"),
         )
-        cur_sum = labels.agg(F.sum("component_id")).collect()[0][0]
-        if cur_sum == prev_sum:  # labels only ever decrease; equal sum = fixpoint
-            converged = True
-            break
-        prev_sum = cur_sum
+
+    # Labels only ever decrease, so an equal label sum is the fixpoint; the
+    # probe is also the job that materializes the round's checkpoint.
+    labels, converged = iterate(
+        labels,
+        step,
+        max_iters,
+        probe=lambda df: df.agg(F.sum("component_id")).collect()[0][0],
+    )
     # Every round's labels are checkpointed, so the result no longer reads
     # the edge cache; keeping it would pin the edges for the session's life.
     bidir.unpersist()

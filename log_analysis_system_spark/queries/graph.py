@@ -1,7 +1,10 @@
-"""Graph analytics: PageRank as iterative DataFrame joins with an exactly-
-matching unrolled-SQL oracle. Together with `connected_components`
-(dedup.py) this is the engine's iterative-algorithm surface — Spark has no
-PySpark-usable GraphX, so the DataFrame formulation IS the production one.
+"""Graph analytics: PageRank (seeded or global), label propagation,
+k-core, HITS, betweenness, TextRank and friends as iterative DataFrame
+joins, each with an exactly-matching unrolled-SQL oracle. Together with
+`connected_components` (dedup.py) this is the engine's iterative-algorithm
+surface — Spark has no PySpark-usable GraphX, so the DataFrame formulation
+IS the production one. Every round loop except betweenness (which walks
+its BFS levels backwards) runs on `operators.iterate`.
 
 Determinism: ranks live in integer micro-units and every per-edge
 contribution is a floor division, so a fixed iteration count produces
@@ -14,12 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate
 from ..sources.catalog import read_table
 from . import query
 from .behavior import COOC_MIN_DOCS, term_pair_edges
 
 PR_ITERS = 3
 PR_START = 1_000_000  # micro-units
+PPR_TELEPORT = (15 * PR_START) // 100  # per-round seed teleport, micro-units
 SUPP_OFFSET = 10_000_000  # supplier node ids live above customer keys
 
 _EDGES_SQL = f"""
@@ -55,46 +60,59 @@ def _pagerank_oracle(iters: int = PR_ITERS) -> str:
     )
 
 
-def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
-    """Integer PageRank over a directed edge list (src, dst) where every
-    node has at least one outgoing edge (build undirected graphs by
-    doubling edges — no dangling-mass term needed then).
+def pagerank(
+    edges: DataFrame, seeds: DataFrame | None = None, iters: int = PR_ITERS
+) -> DataFrame:
+    """Integer personalized PageRank (random walk with restart) over a
+    directed edge list (src, dst) where every node has at least one
+    outgoing edge (build undirected graphs by doubling edges — no
+    dangling-mass term needed then). Start mass PR_START and teleport
+    mass PPR_TELEPORT land only on ``seeds`` (node), so ranks measure
+    relevance TO the seed set. Without ``seeds`` every node is a seed,
+    which is plain PageRank: PPR_TELEPORT is PageRank's 150000 constant.
 
     Each round is one join (ranks onto edges) + one aggregate (sum of
-    floored per-edge contributions) — two shuffles, the same shape GraphX's
-    Pregel emits. ``localCheckpoint`` truncates lineage per round so the
-    plan stays flat over any iteration count. The degree join is
-    loop-INVARIANT, so it is attached to the edge list once and
-    checkpointed (round-10; the former in-loop form re-joined deg every
-    round — guide §2.4), and checkpoints are lazy so each round is a
-    single job materialized by the next round's action. The edge input
-    itself is pinned first (round-11): `ed` and `pr0` both consume it,
-    and when a caller passes an unmaterialized subtree (textrank's
-    corpus-scan pair pipeline) the whole subtree re-executed once per
-    consumer — measured 2.1 s of textrank's 3.6 s warm wall-clock."""
+    floored per-edge contributions) — two shuffles, the same shape
+    GraphX's Pregel emits — on the `iterate` loop. The degree and
+    teleport joins are loop-INVARIANT, so they are attached to the edge
+    list once and checkpointed; the aggregate groups by (dst, tp), the
+    oracle's ``GROUP BY e.dst, s.node``. The edge input itself is pinned
+    first: `ed` and the rank seed both consume it, and when a caller
+    passes an unmaterialized subtree (textrank's corpus-scan pair
+    pipeline) the whole subtree re-executed once per consumer — measured
+    2.1 s of textrank's 3.6 s warm wall-clock."""
     edges = edges.localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = edges.join(deg, "src").localCheckpoint(eager=False)
-    pr = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("pr", F.lit(PR_START).cast("long"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(iters):
-        contrib = ed.join(pr, ed.src == pr.node).select(
-            "dst", F.expr("pr div outdeg").alias("c")
+    ed = edges.join(deg, "src")
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    if seeds is None:
+        ed = ed.withColumn("tp", F.lit(PPR_TELEPORT).cast("long"))
+        pr = nodes.withColumn("pr", F.lit(PR_START).cast("long"))
+    else:
+        s = seeds.select("node", F.lit(True).alias("seed"))
+        tp = s.select(
+            F.col("node").alias("dst"),
+            F.lit(PPR_TELEPORT).cast("long").alias("tp"),
         )
-        pr = (
-            contrib.groupBy(F.col("dst").alias("node"))
+        ed = ed.join(tp, "dst", "left").fillna(0, ["tp"])
+        pr = nodes.join(s, "node", "left").select(
+            "node",
+            F.when(F.col("seed"), PR_START).otherwise(0).cast("long").alias("pr"),
+        )
+    ed = ed.localCheckpoint(eager=False)
+
+    def step(pr: DataFrame) -> DataFrame:
+        return (
+            ed.join(pr, ed.src == pr.node)
+            .groupBy(F.col("dst").alias("node"), "tp")
             .agg(
-                F.expr("cast(150000 + (85 * sum(c)) div 100 as bigint)").alias(
-                    "pr"
-                )
+                F.expr("cast(tp + (85 * sum(pr div outdeg)) div 100 as bigint)")
+                .alias("pr")
             )
-            .localCheckpoint(eager=False)
+            .select("node", "pr")
         )
-    return pr
+
+    return iterate(pr.localCheckpoint(eager=False), step, iters)[0]
 
 
 _TRI_ORACLE = """
@@ -184,8 +202,9 @@ def q_triangle_count_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("pagerank_trade_graph", oracle=_pagerank_oracle())
 def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer<->supplier trade graph (edges = distinct
-    trading pairs via lineitem x orders, doubled to undirected). {ITERS}
-    synchronous rounds in exact integer micro-units; the oracle unrolls the
+    trading pairs via lineitem x orders, doubled to undirected): `pagerank`
+    with every node seeded, {ITERS} synchronous rounds in exact integer
+    micro-units; the oracle unrolls the
     identical recurrence as chained CTEs. Ranks surface hub suppliers and
     broadly-sourcing customers — the graph-centrality view of the same
     tables the TPC-H battery scans relationally."""
@@ -264,7 +283,6 @@ def q_trade_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ personalized PageRank
 
 PPR_SEED_NATION = "GERMANY"
-PPR_TELEPORT = (15 * PR_START) // 100  # per-round seed teleport, micro-units
 
 _PPR_SEEDS_SQL = f"""
     SELECT DISTINCT e.src AS node
@@ -302,52 +320,6 @@ def _ppr_oracle(iters: int = PR_ITERS) -> str:
     return "WITH " + ",\n".join(ctes) + f"\nSELECT node, pr FROM pr{iters}"
 
 
-def personalized_pagerank(
-    edges: DataFrame, seeds: DataFrame, iters: int = PR_ITERS
-) -> DataFrame:
-    """Integer personalized PageRank: identical recurrence to `pagerank`
-    except the teleport term lands only on ``seeds`` (node), so ranks
-    measure relevance TO the seed set (random walk with restart). Same
-    two-shuffle round shape + localCheckpoint lineage truncation; the
-    doubled-undirected-edges requirement guarantees every node receives
-    flow, so the teleport join is a plain inner join on the round's agg.
-    The degree join is hoisted out of the loop and checkpoints are lazy,
-    mirroring `pagerank`'s round-10 shape."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = edges.join(deg, "src").localCheckpoint(eager=False)
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    seeded = nodes.join(
-        seeds.select("node").withColumn("is_seed", F.lit(1)), "node", "left"
-    )
-    pr = seeded.select(
-        "node",
-        F.when(F.col("is_seed") == 1, PR_START)
-        .otherwise(0)
-        .cast("long")
-        .alias("pr"),
-    ).localCheckpoint(eager=False)
-    tp = seeded.select(
-        "node",
-        F.when(F.col("is_seed") == 1, PPR_TELEPORT)
-        .otherwise(0)
-        .cast("long")
-        .alias("tp"),
-    ).localCheckpoint(eager=False)
-    for _ in range(iters):
-        contrib = ed.join(pr, ed.src == pr.node).select(
-            "dst", F.expr("pr div outdeg").alias("c")
-        )
-        flow = contrib.groupBy(F.col("dst").alias("node")).agg(
-            F.expr("cast((85 * sum(c)) div 100 as bigint)").alias("flow")
-        )
-        pr = (
-            flow.join(tp, "node")
-            .select("node", (F.col("tp") + F.col("flow")).alias("pr"))
-            .localCheckpoint(eager=False)
-        )
-    return pr
-
-
 def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doubled-undirected customer<->supplier edge list (src, dst): distinct
     trading pairs via lineitem x orders, supplier ids offset above customer
@@ -380,10 +352,11 @@ def q_personalized_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame
     trade graph, personalized to {PPR_SEED_NATION}'s customers: teleport
     mass lands only on the seed set, so high-rank suppliers are the ones
     structurally closest to that market — the 'suppliers similar to what
-    GERMANY buys from' recommendation view, where global `pagerank` would
-    just surface overall hubs. Integer micro-unit recurrence (floor-div
-    per-edge contributions), fixed {PR_ITERS} rounds, unrolled-CTE oracle
-    — the established exact-iterative contract."""
+    GERMANY buys from' recommendation view, where unseeded `pagerank`
+    would just surface overall hubs. The same `pagerank` recurrence with
+    ``seeds`` (integer micro-units, floor-div per-edge contributions),
+    fixed {PR_ITERS} rounds, unrolled-CTE oracle — the established
+    exact-iterative contract."""
     c = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
@@ -404,7 +377,7 @@ def q_personalized_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame
             "node",
         )
     )
-    return personalized_pagerank(edges, seeds)
+    return pagerank(edges, seeds)
 
 
 # ------------------------------------------ label propagation communities
@@ -548,8 +521,8 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     exist, a shared engine/oracle bug (both query texts used the same
     encoding) that the pure-Python modularity model pin caught in
     round 10.
-    ``localCheckpoint`` truncates lineage per round. Returns (node, label)
-    after ``iters`` rounds."""
+    The rounds run on the `iterate` loop. Returns (node, label) after
+    ``iters`` rounds."""
     lab = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -567,7 +540,8 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
             f"{LPA_ENC}; raise LPA_ENC (keep count*LPA_ENC inside int64) "
             "so the integer argmax encoding stays decodable"
         )
-    for _ in range(iters):
+
+    def step(lab: DataFrame) -> DataFrame:
         votes = (
             edges.join(lab, edges.src == lab.node)
             .groupBy("dst", "label")
@@ -577,19 +551,14 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
                 (F.col("c") * LPA_ENC - F.col("label") - 1).alias("p"),
             )
         )
-        lab = (
-            votes.groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.expr(
-                    f"cast((max(p) div {LPA_ENC} + 1) * {LPA_ENC}"
-                    f" - max(p) - 1 as bigint)"
-                ).alias("label")
-            )
-            # lazy: each round materializes inside the next action's job
-            # instead of paying an eager job barrier per round (round-10)
-            .localCheckpoint(eager=False)
+        return votes.groupBy(F.col("dst").alias("node")).agg(
+            F.expr(
+                f"cast((max(p) div {LPA_ENC} + 1) * {LPA_ENC}"
+                f" - max(p) - 1 as bigint)"
+            ).alias("label")
         )
-    return lab
+
+    return iterate(lab, step, iters)[0]
 
 
 @query("label_propagation_communities", oracle=_lpa_oracle())
@@ -692,27 +661,23 @@ def kcore_peel(
     the oracle's full fixed-round unroll computes — the count also
     eagerly materializes each round's checkpoint, which the next round
     reuses anyway."""
-    edges = edges.localCheckpoint(eager=False)
-    n_edges = edges.count()
-    for _ in range(rounds):
+
+    def peel(edges: DataFrame) -> DataFrame:
         keep = (
             edges.groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= k)
             .select("src")
         )
-        edges = (
+        return (
             edges.join(keep, "src", "leftsemi")
-            .join(
-                keep.withColumnRenamed("src", "dst"), "dst", "leftsemi"
-            )
+            .join(keep.withColumnRenamed("src", "dst"), "dst", "leftsemi")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
-        n2 = edges.count()
-        if n2 == n_edges:
-            break
-        n_edges = n2
+
+    edges, _ = iterate(
+        edges.localCheckpoint(eager=False), peel, rounds, probe=DataFrame.count
+    )
     return edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -777,11 +742,14 @@ def q_hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers; an important supplier is one big customers buy from).
 
     Exact integer recurrence, fixed {HITS_ROUNDS} rounds (the
-    PageRank/LPA contract): each half-step is one edges-to-scores hash
-    join + one key-grouped sum, then an L-inf normalization by integer
-    floor-div against the round's scalar max — the max is the only
-    driver-side value (a 1-row bounded collect, the fixpoint-scalar
-    precedent), so scores stay in [0, {HITS_SCALE}] and never overflow
+    PageRank/LPA contract) on the `iterate` loop. The state is the output
+    rows (node, role, score_ppm): a round turns the hub rows into
+    authority rows and those into the next hub rows. Each half-step is
+    one edges-to-scores hash join + one key-grouped sum, then an L-inf
+    normalization by integer floor-div against the half-step's max. The
+    max is a 1-row aggregate broadcast-cross-joined into the same plan
+    (the `degree_assortativity` in-plan scalar), so no round collects to
+    the driver; scores stay in [0, {HITS_SCALE}] and never overflow
     however many rounds run. The score table is node-bounded and tiny
     next to the edge list, but its checkpoint-backed plan hides size
     statistics, so the planner sort-merge-joined BOTH sides every
@@ -798,56 +766,37 @@ def q_hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("src").alias("cust"), F.col("dst").alias("supp"))
         .localCheckpoint(eager=False)
     )
-    h = (
-        edges.select("cust")
-        .distinct()
-        .withColumn("v", F.lit(HITS_SCALE).cast("long"))
-    )
-    empty = h.sparkSession.createDataFrame(
-        [], "node long, role string, score_ppm long"
-    )
-    a = None
-    for _ in range(HITS_ROUNDS):
-        ar = (
-            edges.join(F.broadcast(h.withColumnRenamed("v", "hv")), "cust")
-            .groupBy("supp")
-            .agg(F.sum("hv").cast("long").alias("v"))
-            .localCheckpoint(eager=False)
+
+    role = {"cust": "hub", "supp": "authority"}
+
+    def half(s: DataFrame, src: str, dst: str) -> DataFrame:
+        """One half-step: sum the ``src`` side's scores over the edges into
+        ``dst``, then rescale by the 1-row max."""
+        x = s.where(F.col("role") == role[src]).select(
+            F.col("node").alias(src), F.col("score_ppm").alias("x")
         )
-        am_row = ar.agg(F.max("v")).first()[0]
-        if am_row is None:  # empty graph: nothing to rank
-            return empty
-        am = int(am_row)
-        a = ar.select(
-            "supp",
-            F.expr(f"CAST(v * {HITS_SCALE} div {am}L AS BIGINT)").alias(
-                "v"
-            ),
+        sums = (
+            edges.join(F.broadcast(x), src)
+            .groupBy(dst)
+            .agg(F.sum("x").cast("long").alias("v"))
         )
-        hr = (
-            edges.join(F.broadcast(a.withColumnRenamed("v", "av")), "supp")
-            .groupBy("cust")
-            .agg(F.sum("av").cast("long").alias("v"))
-            .localCheckpoint(eager=False)
+        m = sums.agg(F.max("v").alias("m"))
+        return sums.crossJoin(F.broadcast(m)).select(
+            F.col(dst).alias("node"),
+            F.lit(role[dst]).alias("role"),
+            F.expr(f"CAST(v * {HITS_SCALE} div m AS BIGINT)").alias("score_ppm"),
         )
-        hm = int(hr.agg(F.max("v")).first()[0])
-        h = hr.select(
-            "cust",
-            F.expr(f"CAST(v * {HITS_SCALE} div {hm}L AS BIGINT)").alias(
-                "v"
-            ),
-        )
-    hubs = h.select(
+
+    def step(s: DataFrame) -> DataFrame:
+        a = half(s, "cust", "supp")
+        return half(a, "supp", "cust").unionByName(a)
+
+    hubs = edges.select(
         F.col("cust").alias("node"),
         F.lit("hub").alias("role"),
-        F.col("v").alias("score_ppm"),
-    )
-    auths = a.select(
-        F.col("supp").alias("node"),
-        F.lit("authority").alias("role"),
-        F.col("v").alias("score_ppm"),
-    )
-    return hubs.unionByName(auths)
+        F.lit(HITS_SCALE).cast("long").alias("score_ppm"),
+    ).distinct()
+    return iterate(hubs, step, HITS_ROUNDS)[0]
 
 
 # ---------------------------------------------------------- link prediction
@@ -1308,21 +1257,11 @@ def q_rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     {K} x {K} rows at most."""
     from pyspark.sql import Window
 
-    e = term_pair_edges(spark, sf_dir).select("term_a", "term_b")
-    edges = e.select(
-        F.col("term_a").alias("src"), F.col("term_b").alias("dst")
-    ).unionByName(
-        e.select(F.col("term_b").alias("src"), F.col("term_a").alias("dst"))
+    wa = Window.partitionBy(F.lit(1)).orderBy(
+        F.desc("pr_micro"), F.asc("term")
     )
-    wa = Window.partitionBy(F.lit(1)).orderBy(F.desc("pr"), F.asc("node"))
-    ra = (
-        pagerank(edges)
-        .orderBy(F.desc("pr"), F.asc("node"))
-        .limit(RBO_K)
-        .select(
-            F.col("node").alias("term"),
-            F.row_number().over(wa).cast("long").alias("ra"),
-        )
+    ra = q_textrank_keywords(spark, sf_dir).select(
+        "term", F.row_number().over(wa).cast("long").alias("ra")
     )
     docs = read_table(spark, sf_dir, "documents")
     freq = (

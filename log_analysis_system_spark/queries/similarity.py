@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate
 from ..operators.topn import grouped_topn
 from ..sources.catalog import read_table
 from . import query
@@ -292,8 +293,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical round-then-filter — values are bit-identical to the exact
     all-pairs form for every emitted pair.
 
-    Scale shape: signature computation is one narrow codegen map stage
-    (plane matrix baked as a literal); the band join is an equi-join on
+    Scale shape: signature computation is one narrow map stage
+    (`_band_signatures`' Arrow matmul kernel against the md5-derived plane
+    matrix); the band join is an equi-join on
     (band, sig) whose shuffle carries 12-byte rows, never embedding arrays;
     the rescore joins fetch arrays for CANDIDATE pairs only. No driver
     collect, no crossJoin, no O(n^2) stage. `embedding_near_dup_exact`
@@ -1069,35 +1071,16 @@ def _train_ivf_centroids_joins(
     vecs: DataFrame, iters: int = KMEANS_ITERS
 ) -> DataFrame:
     """Distributed Lloyd rounds — the beyond-BAKE_MAX_CELLS form of
-    `train_ivf_centroids` (broadcast crossJoin + per-vector argmax window,
-    per-(cell,dim) floored-mean aggregate, localCheckpoint lineage
-    truncation). Bit-identical output to the baked fast path."""
-    from pyspark.sql import Window
-
+    `train_ivf_centroids` (`_assign_window`, then a per-(cell,dim)
+    floored-mean aggregate, on the `iterate` loop). Bit-identical output
+    to the baked fast path."""
     cents = vecs.where(F.col("vec_id") % CENT_MOD == 0).select(
         F.col("vec_id").alias("cell_id"), F.col("e").alias("ce"),
         F.col("nrm").alias("cn"),
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("aff"), F.asc("cell_id"))
-    for _ in range(iters):
-        aff = vecs.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            "cell_id",
-            F.round(
-                _dot("e", "ce").cast("double")
-                / (
-                    F.sqrt(F.col("nrm").cast("double"))
-                    * F.sqrt(F.col("cn").cast("double"))
-                ),
-                6,
-            ).alias("aff"),
-        )
-        top1 = (
-            aff.withColumn("crnk", F.row_number().over(w))
-            .where(F.col("crnk") == 1)
-            .select("vec_id", "cell_id")
-        )
-        memb = vecs.join(top1, "vec_id").selectExpr(
+
+    def lloyd(cents: DataFrame) -> DataFrame:
+        memb = vecs.join(_assign_window(vecs, cents), "vec_id").selectExpr(
             "cell_id", "posexplode(e) AS (d, val)"
         )
         means = memb.groupBy("cell_id", "d").agg(
@@ -1111,7 +1094,7 @@ def _train_ivf_centroids_joins(
                 lambda s: s["m"],
             ).alias("ce")
         ).withColumn("cn", _norm("ce"))
-        cents = (
+        return (
             cents.select(
                 "cell_id",
                 F.col("ce").alias("old_ce"),
@@ -1123,9 +1106,9 @@ def _train_ivf_centroids_joins(
                 F.coalesce("ce", "old_ce").alias("ce"),
                 F.coalesce("cn", "old_cn").alias("cn"),
             )
-            .localCheckpoint()
         )
-    return cents
+
+    return iterate(cents, lloyd, iters)[0]
 
 
 @query(
@@ -1211,6 +1194,13 @@ def _ivf_assign_top1(vecs: DataFrame, cents: DataFrame) -> DataFrame:
                 ).alias("cell_id"),
             )
         )
+    return _assign_window(vecs, cents)
+
+
+def _assign_window(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cell_id): the distributed max-cosine assignment beyond
+    BAKE_MAX_CELLS — broadcast crossJoin against the centroid table, then
+    a per-vector (aff DESC, cell_id ASC) row_number."""
     from pyspark.sql import Window
 
     aff = vecs.crossJoin(F.broadcast(cents)).select(

@@ -62,6 +62,8 @@ RECORD_KEYS = {
     "catalyst.plan_s",
     "spark.busy_s",
     "driver.gap_s",
+    "build.busy_s",
+    "build.jobs",
     "spark.jobs",
     "spark.stages",
     "spark.tasks",
@@ -99,9 +101,10 @@ def _row(t0: float, wall: float) -> tuple[list[Span], EventLog]:
 
 def test_layer_record_schema_and_reconciled_rule():
     """Synthetic spans and event log, no Spark: the record holds every layer
-    figure, the write span splits into Spark-busy time and driver gap, and
-    a row reconciles when build + plan + busy + gap is within 10% of its
-    wall time."""
+    figure, the write span splits into Spark-busy time and driver gap, a
+    job run while the query is built is attributed to the build, and a row
+    reconciles when build + plan + busy + gap is within 10% of its wall
+    time."""
     spans, log = _row(1000.0, 1.0)
     rec = layer_record(spans, log, 0.25)
     assert set(rec) == RECORD_KEYS
@@ -116,7 +119,15 @@ def test_layer_record_schema_and_reconciled_rule():
     assert rec["exec.spill_bytes"] == 64
     assert rec["exec.result_bytes"] == 170
     assert rec["pyworker.cpu_s"] == 0.25
+    assert (rec["build.busy_s"], rec["build.jobs"]) == (0.0, 0)
     assert rec["reconciled"] is True
+    # A job 0.05-0.15 s into the build: build time, not a fifth layer.
+    spans, log = _row(1000.0, 1.0)
+    log.jobs[8] = Job(1000.05, 1000.15)
+    built = layer_record(spans, log, 0.0)
+    assert (built["build.busy_s"], built["build.jobs"]) == (0.1, 1)
+    assert built["queries.build_s"] == 0.2 and built["spark.jobs"] == 2
+    assert built["reconciled"] is True
     # 1.05 s of wall against 1.0 s of layers: inside 10%.
     assert layer_record(*_row(1000.0, 1.05), 0.0)["reconciled"] is True
     # 1.2 s: 0.2 s outside every layer.

@@ -2854,6 +2854,45 @@ def test_kcore_peel_cascade(spark):
     assert got == {1: 2, 2: 2, 3: 2}
 
 
+def test_iterate_cuts_lineage_and_stops_on_repeating_probe(spark):
+    """The round loop: the state's plan is one checkpoint leaf however many
+    rounds ran; a probe that repeats stops the loop at that round,
+    converged; a probe that never repeats runs every round, not
+    converged."""
+    from log_analysis_system_spark.operators.iterate import iterate
+
+    seed = spark.createDataFrame([(0,)], "x long")
+
+    def plan_lines(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("\n")
+
+    def inc(df):
+        return df.select((F.col("x") + 1).alias("x"))
+
+    two, _ = iterate(seed, inc, 2)
+    six, converged = iterate(seed, inc, 6)
+    assert six.first()["x"] == 6 and not converged
+    assert plan_lines(six) == plan_lines(two)
+
+    seen = []
+
+    def probe(df):
+        seen.append(df.first()["x"])
+        return seen[-1]
+
+    capped, converged = iterate(
+        seed, lambda df: inc(df).select(F.least("x", F.lit(3)).alias("x")),
+        10, probe,
+    )
+    assert converged and seen == [0, 1, 2, 3, 3]
+    assert capped.first()["x"] == 3
+
+    seen.clear()
+    out, converged = iterate(seed, inc, 3, probe)
+    assert not converged and seen == [0, 1, 2, 3]
+    assert out.first()["x"] == 3
+
+
 def _planted_discriminator_corpus(spark, tmp_path):
     """The separable fixture of test_quality_discriminator_planted_
     separation: 10 long/stopword/alpha-rich target docs (src2/src3) vs
@@ -3130,3 +3169,20 @@ def test_label_propagation_label_zero_decodes(spark):
     )
     got = {r["node"]: r["label"] for r in label_propagation(edges).collect()}
     assert got == {0: 0, 1: 0, 2: 0}
+
+
+def test_label_propagation_rejects_node_ids_past_lpa_enc(spark):
+    """The argmax encoding decodes only node ids below LPA_ENC: a larger
+    id must raise, not propagate corrupted labels."""
+    import pytest
+
+    from log_analysis_system_spark.queries.graph import (
+        LPA_ENC,
+        label_propagation,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, LPA_ENC), (LPA_ENC, 1)], "src long, dst long"
+    )
+    with pytest.raises(ValueError, match="LPA_ENC"):
+        label_propagation(edges)
