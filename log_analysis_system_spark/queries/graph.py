@@ -89,15 +89,17 @@ def pagerank(
         ed = ed.withColumn("tp", F.lit(PPR_TELEPORT).cast("long"))
         pr = nodes.withColumn("pr", F.lit(PR_START).cast("long"))
     else:
-        s = seeds.select("node", F.lit(True).alias("seed"))
-        tp = s.select(
-            F.col("node").alias("dst"),
-            F.lit(PPR_TELEPORT).cast("long").alias("tp"),
-        )
-        ed = ed.join(tp, "dst", "left").fillna(0, ["tp"])
+        s = seeds.select("node", F.lit(1).cast("long").alias("seed"))
+        ed = ed.join(
+            s.select(
+                F.col("node").alias("dst"),
+                (F.col("seed") * PPR_TELEPORT).alias("tp"),
+            ),
+            "dst",
+            "left",
+        ).fillna(0, ["tp"])
         pr = nodes.join(s, "node", "left").select(
-            "node",
-            F.when(F.col("seed"), PR_START).otherwise(0).cast("long").alias("pr"),
+            "node", (F.coalesce("seed", F.lit(0)) * PR_START).alias("pr")
         )
     ed = ed.localCheckpoint(eager=False)
 
@@ -204,10 +206,10 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer<->supplier trade graph (edges = distinct
     trading pairs via lineitem x orders, doubled to undirected): `pagerank`
     with every node seeded, {ITERS} synchronous rounds in exact integer
-    micro-units; the oracle unrolls the
-    identical recurrence as chained CTEs. Ranks surface hub suppliers and
-    broadly-sourcing customers — the graph-centrality view of the same
-    tables the TPC-H battery scans relationally."""
+    micro-units; the oracle unrolls the identical recurrence as chained
+    CTEs. Ranks surface hub suppliers and broadly-sourcing customers — the
+    graph-centrality view of the same tables the TPC-H battery scans
+    relationally."""
     return pagerank(trade_edges(spark, sf_dir))
 
 
