@@ -1,7 +1,7 @@
 """Bulk iteration as one operator (Ewen et al., "Spinning Fast Iterative
-Data Flows", VLDB 2012): the round loop every iterative query in the
-package runs — PageRank, label propagation, k-core peeling, HITS,
-connected components and distributed Lloyd training.
+Data Flows", VLDB 2012): the shared round loop of PageRank, label
+propagation, k-core peeling, connected components and distributed Lloyd
+training.
 
 Each round applies a step to ONE state frame and cuts the result's
 lineage with a lazy ``localCheckpoint``, so the plan a round builds on is

@@ -3,8 +3,10 @@ k-core, HITS, betweenness, TextRank and friends as iterative DataFrame
 joins, each with an exactly-matching unrolled-SQL oracle. Together with
 `connected_components` (dedup.py) this is the engine's iterative-algorithm
 surface — Spark has no PySpark-usable GraphX, so the DataFrame formulation
-IS the production one. Every round loop except betweenness (which walks
-its BFS levels backwards) runs on `operators.iterate`.
+IS the production one. Every round loop runs on `operators.iterate`
+except betweenness, which walks its BFS levels backwards, and HITS, whose
+checkpointed half-steps with a driver-side max measured faster than the
+in-plan max on the shared loop.
 
 Determinism: ranks live in integer micro-units and every per-edge
 contribution is a floor division, so a fixed iteration count produces
@@ -744,14 +746,11 @@ def q_hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers; an important supplier is one big customers buy from).
 
     Exact integer recurrence, fixed {HITS_ROUNDS} rounds (the
-    PageRank/LPA contract) on the `iterate` loop. The state is the output
-    rows (node, role, score_ppm): a round turns the hub rows into
-    authority rows and those into the next hub rows. Each half-step is
-    one edges-to-scores hash join + one key-grouped sum, then an L-inf
-    normalization by integer floor-div against the half-step's max. The
-    max is a 1-row aggregate broadcast-cross-joined into the same plan
-    (the `degree_assortativity` in-plan scalar), so no round collects to
-    the driver; scores stay in [0, {HITS_SCALE}] and never overflow
+    PageRank/LPA contract): each half-step is one edges-to-scores hash
+    join + one key-grouped sum, then an L-inf normalization by integer
+    floor-div against the round's scalar max — the max is the only
+    driver-side value (a 1-row bounded collect, the fixpoint-scalar
+    precedent), so scores stay in [0, {HITS_SCALE}] and never overflow
     however many rounds run. The score table is node-bounded and tiny
     next to the edge list, but its checkpoint-backed plan hides size
     statistics, so the planner sort-merge-joined BOTH sides every
@@ -768,37 +767,56 @@ def q_hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("src").alias("cust"), F.col("dst").alias("supp"))
         .localCheckpoint(eager=False)
     )
-
-    role = {"cust": "hub", "supp": "authority"}
-
-    def half(s: DataFrame, src: str, dst: str) -> DataFrame:
-        """One half-step: sum the ``src`` side's scores over the edges into
-        ``dst``, then rescale by the 1-row max."""
-        x = s.where(F.col("role") == role[src]).select(
-            F.col("node").alias(src), F.col("score_ppm").alias("x")
+    h = (
+        edges.select("cust")
+        .distinct()
+        .withColumn("v", F.lit(HITS_SCALE).cast("long"))
+    )
+    empty = h.sparkSession.createDataFrame(
+        [], "node long, role string, score_ppm long"
+    )
+    a = None
+    for _ in range(HITS_ROUNDS):
+        ar = (
+            edges.join(F.broadcast(h.withColumnRenamed("v", "hv")), "cust")
+            .groupBy("supp")
+            .agg(F.sum("hv").cast("long").alias("v"))
+            .localCheckpoint(eager=False)
         )
-        sums = (
-            edges.join(F.broadcast(x), src)
-            .groupBy(dst)
-            .agg(F.sum("x").cast("long").alias("v"))
+        am_row = ar.agg(F.max("v")).first()[0]
+        if am_row is None:  # empty graph: nothing to rank
+            return empty
+        am = int(am_row)
+        a = ar.select(
+            "supp",
+            F.expr(f"CAST(v * {HITS_SCALE} div {am}L AS BIGINT)").alias(
+                "v"
+            ),
         )
-        m = sums.agg(F.max("v").alias("m"))
-        return sums.crossJoin(F.broadcast(m)).select(
-            F.col(dst).alias("node"),
-            F.lit(role[dst]).alias("role"),
-            F.expr(f"CAST(v * {HITS_SCALE} div m AS BIGINT)").alias("score_ppm"),
+        hr = (
+            edges.join(F.broadcast(a.withColumnRenamed("v", "av")), "supp")
+            .groupBy("cust")
+            .agg(F.sum("av").cast("long").alias("v"))
+            .localCheckpoint(eager=False)
         )
-
-    def step(s: DataFrame) -> DataFrame:
-        a = half(s, "cust", "supp")
-        return half(a, "supp", "cust").unionByName(a)
-
-    hubs = edges.select(
+        hm = int(hr.agg(F.max("v")).first()[0])
+        h = hr.select(
+            "cust",
+            F.expr(f"CAST(v * {HITS_SCALE} div {hm}L AS BIGINT)").alias(
+                "v"
+            ),
+        )
+    hubs = h.select(
         F.col("cust").alias("node"),
         F.lit("hub").alias("role"),
-        F.lit(HITS_SCALE).cast("long").alias("score_ppm"),
-    ).distinct()
-    return iterate(hubs, step, HITS_ROUNDS)[0]
+        F.col("v").alias("score_ppm"),
+    )
+    auths = a.select(
+        F.col("supp").alias("node"),
+        F.lit("authority").alias("role"),
+        F.col("v").alias("score_ppm"),
+    )
+    return hubs.unionByName(auths)
 
 
 # ---------------------------------------------------------- link prediction

@@ -295,9 +295,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: signature computation is one narrow map stage
     (`_band_signatures`' Arrow matmul kernel against the md5-derived plane
-    matrix); the band join is an equi-join on
-    (band, sig) whose shuffle carries 12-byte rows, never embedding arrays;
-    the rescore joins fetch arrays for CANDIDATE pairs only. No driver
+    matrix); the band join is an equi-join on (band, sig) whose shuffle
+    carries 12-byte rows, never embedding arrays; the rescore joins fetch
+    arrays for CANDIDATE pairs only. No driver
     collect, no crossJoin, no O(n^2) stage. `embedding_near_dup_exact`
     keeps the all-pairs blocked-matmul as the verification kernel."""
     vecs = _quantized(spark, sf_dir)
