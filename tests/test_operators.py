@@ -2864,7 +2864,7 @@ def test_iterate_cuts_lineage_and_stops_on_repeating_probe(spark):
     seed = spark.createDataFrame([(0,)], "x long")
 
     def plan_lines(df):
-        return df._jdf.queryExecution().optimizedPlan().toString().count("\n")
+        return df._jdf.queryExecution().analyzed().toString().count("\n")
 
     def inc(df):
         return df.select((F.col("x") + 1).alias("x"))
