@@ -8,15 +8,22 @@ rates on the driver (:270-308).
 Spark-first shape: a ``lag`` window over (session, time) produces the adjacent
 pairs declaratively — the per-group sort the reference does in Java is the
 window's ORDER BY, executed as one shuffle + in-partition sort, no
-driver involvement. The rate chain stays in the plan too: the per-split
-counts are pivoted into one row beside the start count, and each step's
+driver involvement. The rate chain stays in the plan too: one aggregate
+counts the start page and every target split into one row, and each step's
 rate is computed in that row, so nothing is collected to the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def split_of(prev: Column, page: Column) -> Column:
+    """The "prev_curr" pair of a step, NULL when it has no predecessor."""
+    return F.when(
+        prev.isNotNull(), F.concat_ws("_", prev.cast("string"), page.cast("string"))
+    )
 
 
 def page_splits(
@@ -41,40 +48,20 @@ def page_splits(
     parts = ([copartition_col] if copartition_col else []) + [session_col]
     order = [F.col(ts_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
     w = Window.partitionBy(*parts).orderBy(*order)
-    prev = F.lag(page_col).over(w)
-    return df.withColumn(
-        "split",
-        F.when(
-            prev.isNotNull(),
-            F.concat_ws("_", prev.cast("string"), F.col(page_col).cast("string")),
-        ),
-    )
-
-
-def funnel_counts(
-    splits_df: DataFrame, target_flow: list[str]
-) -> DataFrame:
-    """Count occurrences of each target split (X1). ``target_flow`` is page ids
-    in order, e.g. ['view','click','purchase'] or ['3','5','2','4','6']."""
-    targets = [f"{a}_{b}" for a, b in zip(target_flow, target_flow[1:])]
-    return (
-        splits_df.where(F.col("split").isin(targets))
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("split_pv"))
-    )
+    return df.withColumn("split", split_of(F.lag(page_col).over(w), F.col(page_col)))
 
 
 def conversion_rates(
     splits_df: DataFrame,
-    start_rows: DataFrame,
     target_flow: list[str],
     scale: int,
+    page_col: str = "page_id",
 ) -> DataFrame:
     """Chained rates (X2): rate(split_1) = pv_1 / start_pv, rate(split_i) =
     pv_i / pv_{i-1}, rounded HALF_UP to ``scale`` dp (util/NumberUtils.java:
-    17-20). ``start_rows`` are the rows on the flow's first page; their
-    count is start_pv. Output: one row per target split (split, split_pv,
-    convert_rate); a split with no traffic has split_pv 0.
+    17-20). start_pv counts the rows of ``splits_df`` whose ``page_col`` is
+    the flow's first page. Output: one row per target split (split,
+    split_pv, convert_rate); a split with no traffic has split_pv 0.
 
     A zero denominator (no start-page rows, or a zero-count split followed
     by another) gives a NULL rate — ``try_divide``, because ANSI mode makes
@@ -84,19 +71,15 @@ def conversion_rates(
         return splits_df.sparkSession.createDataFrame(
             [], "split string, split_pv long, convert_rate double"
         )
-    # The counts are read once: pivoted into one row (0 for a split with no
-    # traffic) beside start_pv, then unfolded into one row per step. A
-    # self-join on the step number would plan the splits branch twice, and
-    # AQE reuses neither copy's stages when that branch scans a cached
-    # table.
-    counts = funnel_counts(splits_df, target_flow).agg(
+    # One global aggregate counts the start rows and every split, so the
+    # splits frame is read once and the chain needs no join.
+    counts = splits_df.agg(
+        F.count(F.when(F.col(page_col).cast("string") == target_flow[0], 1)).alias("start_pv"),
         *[
-            F.coalesce(F.max(F.when(F.col("split") == t, F.col("split_pv"))), F.lit(0))
-            .alias(f"pv{i}")
+            F.count(F.when(F.col("split") == t, 1)).alias(f"pv{i}")
             for i, t in enumerate(targets)
-        ]
+        ],
     )
-    start_pv = start_rows.agg(F.count(F.lit(1)).alias("start_pv"))
     prev = ["start_pv"] + [f"pv{i}" for i in range(len(targets) - 1)]
     steps = [
         F.struct(
@@ -108,4 +91,4 @@ def conversion_rates(
         )
         for i, (t, p) in enumerate(zip(targets, prev))
     ]
-    return counts.crossJoin(start_pv).select(F.inline(F.array(*steps)))
+    return counts.select(F.inline(F.array(*steps)))

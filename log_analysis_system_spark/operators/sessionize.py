@@ -30,26 +30,33 @@ def sessionize(
     gap_minutes: int = 30,
     session_col: str = "session_id",
     tiebreak_col: str | None = None,
+    prev_col: str | None = None,
 ) -> DataFrame:
     """Assign gap-based session ids: a new session starts when the user's
     inter-event gap exceeds ``gap_minutes``. session_id = "<user>_<seq>".
 
     ``tiebreak_col`` (e.g. the event id) makes the ordering total when
     timestamps collide — mandatory for deterministic results at scale.
+
+    ``prev_col`` also emits ``prev_<prev_col>``: that column of the
+    in-session predecessor, NULL at a session start. It is a lag over the
+    same window, so it costs no further sort or shuffle.
     """
     order = [F.col(ts_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
     w = Window.partitionBy(user_col).orderBy(*order)
     prev_us = F.lag(epoch_us(ts_col)).over(w)
     gap_us = gap_minutes * 60 * 1_000_000
-    is_new = F.when(
-        prev_us.isNull() | (epoch_us(ts_col) - prev_us > gap_us),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    seq = F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return df.withColumn(
-        session_col,
-        F.concat_ws("_", F.col(user_col).cast("string"), seq.cast("string")),
+    # The start flag is one column, so both windows above it read it and
+    # the exchange below ships one copy of the epoch key.
+    flagged = df.withColumn(
+        "__starts", prev_us.isNull() | (epoch_us(ts_col) - prev_us > gap_us)
     )
+    is_new = F.when(F.col("__starts"), F.lit(1)).otherwise(F.lit(0))
+    seq = F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    cols = {session_col: F.concat_ws("_", F.col(user_col).cast("string"), seq.cast("string"))}
+    if prev_col:
+        cols[f"prev_{prev_col}"] = F.when(~F.col("__starts"), F.lag(prev_col).over(w))
+    return flagged.withColumns(cols).drop("__starts")
 
 
 def session_aggregate(

@@ -2,12 +2,13 @@
 PageOneStepConvertRateSpark.java:32-335) over sessionized events.
 
 Target flow: view → click → purchase. The reference sorts each session's
-actions inside a flatMap and emits adjacent page pairs; here a ``lag`` window
-produces the pairs declaratively (one shuffle, in-partition sort) and the rate
-chain — rate(split_1) = pv_1 / start_pv, rate(split_i) = pv_i / pv_{i-1} — is
-``operators.funnel.conversion_rates``, computed fully in-plan over the (tiny)
-per-split counts, so the whole query stays one DataFrame expression with a
-SQL oracle.
+actions inside a flatMap and emits adjacent page pairs; here the pairs come
+from the session base's ``prev_event_type`` (a lag in the sessionize window,
+computed once per snapshot), and the rate chain — rate(split_1) = pv_1 /
+start_pv, rate(split_i) = pv_i / pv_{i-1} — is
+``operators.funnel.conversion_rates``: one aggregate over the base counts
+start_pv and every split, so the whole query stays one DataFrame expression
+with a SQL oracle.
 """
 
 from __future__ import annotations
@@ -15,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.funnel import conversion_rates, page_splits
-from ..sources.catalog import read_events
+from ..operators.funnel import conversion_rates, split_of
 from . import query
 from .session_analysis import SESS_CTE, _sessionized
 
@@ -53,19 +53,13 @@ FROM chained ch CROSS JOIN start_pv s
 """,
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 + X2: adjacent-pair generation via lag, target-split counts, chained
-    conversion rates. Reference pair-gen: PageOneStepConvertRateSpark.java:
-    122-217; rate chain :270-308 (driver loop → here in-plan, over the
-    count table pivoted into one row)."""
+    """X1 + X2: adjacent pairs from the in-session predecessor, target-split
+    counts, chained conversion rates. Reference pair-gen:
+    PageOneStepConvertRateSpark.java:122-217; rate chain :270-308 (driver
+    loop → here in-plan, in one aggregate)."""
     sess = _sessionized(spark, sf_dir)
-    splits = page_splits(
-        sess, session_col="session_id", ts_col="ts", page_col="event_type",
-        tiebreak_col="event_id", copartition_col="user_id",
+    splits = sess.select(
+        "event_type",
+        split_of(F.col("prev_event_type"), F.col("event_type")).alias("split"),
     )
-    # start_pv needs no session column — count from the RAW scan so this
-    # branch is a pushed-filter count that plans no second copy of the
-    # base's sessionize exchange (same count either way).
-    start_rows = read_events(spark, sf_dir).where(
-        F.col("event_type") == TARGET_FLOW[0]
-    )
-    return conversion_rates(splits, start_rows, TARGET_FLOW, 4)
+    return conversion_rates(splits, TARGET_FLOW, 4, page_col="event_type")

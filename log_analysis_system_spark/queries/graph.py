@@ -1503,7 +1503,7 @@ def q_modularity_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("src"), F.col("src").alias("dst")
         )
     ).localCheckpoint(eager=False)
-    lab = label_propagation(vedges).localCheckpoint()
+    lab = label_propagation(vedges)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )

@@ -232,9 +232,7 @@ def page_convert_rate(
         page_col="page_id",
         tiebreak_col="page_id",
     )
-    return conversion_rates(
-        splits, actions.where(F.col("page_id") == int(flow[0])), flow, scale
-    )
+    return conversion_rates(splits, flow, scale)
 
 
 # --------------------------------------------------------------- job 3 ------

@@ -69,14 +69,26 @@ def _sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         gap_minutes=GAP_MINUTES,
         tiebreak_col="event_id",
+        prev_col="event_type",
+    ).withColumns(
+        {
+            "date_key": F.date_format("ts", "yyyy-MM-dd"),
+            "hour_key": F.hour("ts").cast("long"),
+            "category_id": F.get_json_object(F.col("props"), "$.k").cast("long"),
+        }
     )
 
 
 def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-level session base, cached once per snapshot of
-    ``events.parquet`` and shared by the session family and ``funnel``. The
-    cache keeps the window's ``user_id`` hash partitioning, so the rollup
-    and funnel's per-session window add no shuffle on top of it."""
+    ``events.parquet`` and shared by the session family, ``funnel``,
+    ``stratified_sample`` and the top-10 queries. Besides the events'
+    columns and ``session_id`` it carries the per-row columns those
+    queries derive, computed once here: ``prev_event_type`` (the
+    in-session predecessor's type), ``date_key``, ``hour_key`` and
+    ``category_id`` (``props`` ``$.k``). The cache keeps the window's
+    ``user_id`` hash partitioning, so the rollup and any aggregate keyed
+    by user add no shuffle on top of it."""
     return per_snapshot(
         spark,
         "sessionized",
@@ -267,16 +279,12 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic + distributed: rows ranked inside each (day,hour) stratum by
     md5(event_id) (engine-portable pseudo-randomness; the reference draws
     unseeded random indices on the driver and broadcasts them, :818-860)."""
-    keyed = _events(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd").alias("date_key"),
-        F.hour("ts").cast("long").alias("hour_key"),
+    keyed = _sessionized(spark, sf_dir).select(
+        "event_id", "user_id", "event_type", "date_key", "hour_key"
     )
     return stratified_sample_exact(
         keyed, ["date_key"], ["hour_key"], "event_id", per_parent=100
-    ).select("event_id", "user_id", "event_type", "date_key", "hour_key")
+    )
 
 
 @query(

@@ -1194,18 +1194,20 @@ def _ivf_assign_top1(vecs: DataFrame, cents: DataFrame) -> DataFrame:
                 ).alias("cell_id"),
             )
         )
-    return _assign_window(vecs, cents)
+    return _assign_window(vecs, cents).drop("dot")
 
 
 def _assign_window(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell_id): the distributed max-cosine assignment beyond
+    """(vec_id, cell_id, dot): the distributed max-cosine assignment beyond
     BAKE_MAX_CELLS — broadcast crossJoin against the centroid table, then
-    a per-vector (aff DESC, cell_id ASC) row_number."""
+    a per-vector (aff DESC, cell_id ASC) row_number — with the exact
+    integer dot of each vector and its centroid."""
     from pyspark.sql import Window
 
     aff = vecs.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cell_id",
+        _dot("e", "ce").alias("dot"),
         F.round(
             _dot("e", "ce").cast("double")
             / (
@@ -1219,7 +1221,7 @@ def _assign_window(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     return (
         aff.withColumn("crnk", F.row_number().over(w))
         .where(F.col("crnk") == 1)
-        .select("vec_id", "cell_id")
+        .select("vec_id", "cell_id", "dot")
     )
 
 
@@ -1462,7 +1464,7 @@ def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact integer dot with its centroid — the shared assignment step of
     `semantic_clusters` and `semantic_dedup_keep` (mirrors the oracle's
     ``assigned`` CTE). Projection-only vectorized argmax with the same
-    crossJoin+window fallback as `_ivf_assign_top1`."""
+    crossJoin+window fallback (`_assign_window`) as `_ivf_assign_top1`."""
     vecs = _quantized(spark, sf_dir)
     cents = train_ivf_centroids(vecs)
     rows = _cent_rows(cents)
@@ -1478,27 +1480,7 @@ def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"element_at(__dots, {pos})").alias("dot"),
             )
         )
-    from pyspark.sql import Window
-
-    aff = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cell_id",
-        _dot("e", "ce").alias("dot"),
-        F.round(
-            _dot("e", "ce").cast("double")
-            / (
-                F.sqrt(F.col("nrm").cast("double"))
-                * F.sqrt(F.col("cn").cast("double"))
-            ),
-            6,
-        ).alias("aff"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("aff"), F.asc("cell_id"))
-    return (
-        aff.withColumn("crnk", F.row_number().over(w))
-        .where(F.col("crnk") == 1)
-        .select("vec_id", "cell_id", "dot")
-    )
+    return _assign_window(vecs, cents)
 
 
 SEMDEDUP_THRESHOLD = NEARDUP_THRESHOLD  # cosine above which two docs are dups

@@ -3,8 +3,9 @@
 - ``top10_category``: the reference's top-10 categories by (click, order, pay)
   counts with a custom secondary-sort key class (CategorySortKey.java:21-137) —
   here a single conditional aggregate + multi-column TakeOrderedAndProject.
-  Category = the JSON ``k`` attribute of events.props (exercises F6
-  get_json_object); click/order/pay ≈ click/purchase/view event counts.
+  Category = the JSON ``k`` attribute of events.props (F6 get_json_object,
+  parsed once per snapshot into the session base's ``category_id``);
+  click/order/pay ≈ click/purchase/view event counts.
 - ``top10_session_per_category``: grouped top-N (T3's insertion sort → window).
 - ``area_top3``: the Area Top-3 Products job (AreaTop3ProductSpark.java:38-125)
   over region/nation/customer/orders/lineitem/part: scan → snowflake join →
@@ -16,21 +17,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import read_events, read_table
+from ..sources.catalog import read_table
 
 from ..functions.compat import group_concat_distinct
 from ..operators.topn import grouped_topn, top10_categories_by_counts
 from . import query
+from .session_analysis import _sessionized
 
 
 def _cat_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-category click/order/pay counts in ONE pass (the reference chains
     three leftOuterJoins of separate count RDDs, UserVisitSessionAnalyzeSpark.
     java:1520-1610 — J4 collapses to conditional aggregation)."""
-    ev = read_events(spark, sf_dir)
-    cat = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
-        ev.select(cat.alias("category_id"), "event_type")
+        _sessionized(spark, sf_dir)
         .groupBy("category_id")
         .agg(
             F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias(
@@ -100,15 +100,12 @@ def q_top10_session_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 + J5 + T3: for each top-10 category, the top-10 users by click count.
     The 10-row category list is broadcast (reference parallelizes it from the
     driver, :1637-1638); the per-group top-10 is a window, not an insertion
-    sort (:1713-1787)."""
-    ev = read_events(spark, sf_dir)
+    sort (:1713-1787). The per-user counts group the session base by a
+    user-prefixed key, so they ride its user partitioning: no shuffle."""
     top10 = q_top10_category(spark, sf_dir).select("category_id")
     per_user = (
-        ev.where(F.col("event_type") == "click")
-        .select(
-            F.get_json_object(F.col("props"), "$.k").cast("long").alias("category_id"),
-            "user_id",
-        )
+        _sessionized(spark, sf_dir)
+        .where(F.col("event_type") == "click")
         .groupBy("category_id", "user_id")
         .agg(F.count(F.lit(1)).alias("click_count"))
     )

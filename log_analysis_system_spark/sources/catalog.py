@@ -15,6 +15,7 @@ groups from the WHERE clause — S1's hand-interpolated
 
 from __future__ import annotations
 
+import itertools
 import os
 import threading
 from typing import Callable
@@ -81,8 +82,11 @@ def snapshot(path: str) -> tuple:
     return tuple(out)
 
 
-_slots: dict[tuple, tuple[tuple, DataFrame]] = {}
-_slots_lock = threading.RLock()
+_slots: dict[tuple, tuple[tuple, DataFrame, int]] = {}
+_builds = itertools.count()
+#: Guards the per-snapshot slots, the schema map and the planner sessions;
+#: reentrant, so a build under it may read its own bases.
+slots_lock = threading.RLock()
 _planners: dict[SparkSession, SparkSession] = {}
 
 #: Session confs that change the schema parquet inference gives a file.
@@ -110,7 +114,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not os.path.exists(path):
         return spark.read.parquet(path)
     key = (snapshot(path), *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
-    with _slots_lock:
+    with slots_lock:
         entry = _schemas.get(path)
         if entry is None or entry[0] != key:
             entry = (key, spark.read.parquet(path).schema)
@@ -132,17 +136,31 @@ def per_snapshot(
     build per snapshot) and lets a build call ``per_snapshot`` for its own
     base."""
     key = (spark, name)
-    with _slots_lock:
+    with slots_lock:
         snap = snapshot(path)
         entry = _slots.get(key)
         if entry is not None:
-            level = entry[1].storageLevel
-            if entry[0] == snap and (level.useMemory or level.useDisk):
+            if entry[0] == snap and _is_cached(entry[1]):
                 return entry[1]
             entry[1].unpersist()
         df = build()
-        _slots[key] = (snap, df)
+        _slots[key] = (snap, df, next(_builds))
         return df
+
+
+def live_bases(spark: SparkSession) -> tuple[int, ...]:
+    """Build numbers of ``spark``'s ``per_snapshot`` entries whose data is
+    still cached. The tuple changes when an entry is rebuilt or leaves the
+    cache, so a plan over those entries can be keyed on it."""
+    with slots_lock:
+        return tuple(
+            sorted(n for (s, _), (_, df, n) in _slots.items() if s is spark and _is_cached(df))
+        )
+
+
+def _is_cached(df: DataFrame) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
 
 
 def cache_partitioned(
@@ -157,7 +175,7 @@ def cache_partitioned(
     The entry is therefore planned in a sibling session with AQE off; the
     cache is shared between sessions and matches plans, so ``frame(spark)``
     scans the same entry, and its operators keep adaptive execution."""
-    with _slots_lock:
+    with slots_lock:
         planner = _planners.get(spark)
         if planner is None:
             planner = spark.newSession()

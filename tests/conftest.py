@@ -49,6 +49,53 @@ def gate_query_names():
     return [n for n in sorted(QUERIES) if n in set(PRIORITY)]
 
 
+def _node_col(line: str) -> int:
+    """Column where a plan-tree line's operator starts, past the tree drawing."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _cached_subtree(lines: list[str], i: int) -> tuple[int, str]:
+    """End (exclusive) of the subtree under the ``InMemoryRelation`` at line
+    ``i``, and that subtree's text relative to the relation's column. A
+    relation prints the same text wherever its cache entry is scanned."""
+    col = _node_col(lines[i])
+    j = i + 1
+    while j < len(lines) and _node_col(lines[j]) > col:
+        j += 1
+    return j, "\n".join(line[col:] for line in lines[i + 1 : j])
+
+
+def above_cache(plan: str, cached: set[str] | None = None) -> str:
+    """The executed-plan string ``plan`` without the subtrees of the cache
+    entries it scans: the query's own operators. With ``cached``, only the
+    subtrees whose text (``cached_plans``) is in it are dropped."""
+    lines = plan.splitlines()
+    out, i = [], 0
+    while i < len(lines):
+        out.append(lines[i])
+        if "InMemoryRelation" in lines[i]:
+            end, text = _cached_subtree(lines, i)
+            if cached is None or text in cached:
+                i = end
+                continue
+        i += 1
+    return "\n".join(out)
+
+
+def cached_plans(spark) -> dict[str, str]:
+    """Name -> cached-subtree text of each ``per_snapshot`` base of ``spark``
+    still in the cache: the frames built once per input snapshot."""
+    from log_analysis_system_spark.sources import catalog
+
+    out = {}
+    for (session, name), (_, df, _) in list(catalog._slots.items()):
+        if session is spark and catalog._is_cached(df):
+            lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+            i = next(k for k, line in enumerate(lines) if "InMemoryRelation" in line)
+            out[name] = _cached_subtree(lines, i)[1]
+    return out
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

@@ -11,7 +11,6 @@ from log_analysis_system_spark.operators import (
     bin_ratio_aggregate,
     conversion_rates,
     explode_count,
-    funnel_counts,
     global_topn,
     grouped_topn,
     page_splits,
@@ -104,16 +103,9 @@ def test_page_splits_and_funnel(spark):
         rows, "event_id long, session_id string, ts timestamp, page_id string"
     )
     splits = page_splits(df, page_col="page_id", tiebreak_col="event_id")
-    counts = {
-        r["split"]: r["split_pv"]
-        for r in funnel_counts(splits, ["view", "click", "purchase"]).collect()
-    }
-    assert counts == {"view_click": 1, "click_purchase": 1}
-    rates = conversion_rates(
-        splits, df.where(F.col("page_id") == "view"), ["view", "click", "purchase"], 2
-    )
-    got = {r["split"]: r["convert_rate"] for r in rates.collect()}
-    assert got == {"view_click": 0.5, "click_purchase": 1.0}
+    rates = conversion_rates(splits, ["view", "click", "purchase"], 2)
+    got = {r["split"]: (r["split_pv"], r["convert_rate"]) for r in rates.collect()}
+    assert got == {"view_click": (1, 0.5), "click_purchase": (1, 1.0)}
 
 
 def test_funnel_rate_zero_start(spark):
@@ -123,8 +115,29 @@ def test_funnel_rate_zero_start(spark):
         [], "event_id long, session_id string, ts timestamp, page_id string"
     )
     splits = page_splits(df, page_col="page_id", tiebreak_col="event_id")
-    rates = conversion_rates(splits, df.where(F.col("page_id") == "a"), ["a", "b"], 2)
+    rates = conversion_rates(splits, ["a", "b"], 2)
     assert [tuple(r) for r in rates.collect()] == [("a_b", 0, None)]
+
+
+def test_funnel_rate_zero_count_split_mid_chain(spark):
+    """A split with no traffic rates 0 against the start page, and the split
+    after it divides by that zero: NULL. The start page is matched as the
+    string the splits are built from, so an integer page column counts."""
+    rows = [
+        (1, "s1", ts(0), 1),
+        (2, "s1", ts(1), 1),
+        (3, "s2", ts(0), 2),
+        (4, "s2", ts(1), 3),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, session_id string, ts timestamp, page_id int"
+    )
+    splits = page_splits(df, page_col="page_id", tiebreak_col="event_id")
+    rates = conversion_rates(splits, ["1", "2", "3"], 2)
+    assert sorted(tuple(r) for r in rates.collect()) == [
+        ("1_2", 0, 0.0),
+        ("2_3", 1, None),
+    ]
 
 
 def test_funnel_rate_one_page_flow_has_no_steps(spark):
@@ -133,7 +146,7 @@ def test_funnel_rate_one_page_flow_has_no_steps(spark):
         "event_id long, session_id string, ts timestamp, page_id string",
     )
     splits = page_splits(df, page_col="page_id", tiebreak_col="event_id")
-    rates = conversion_rates(splits, df, ["a"], 2)
+    rates = conversion_rates(splits, ["a"], 2)
     assert rates.collect() == []
     assert rates.columns == ["split", "split_pv", "convert_rate"]
 

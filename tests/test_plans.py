@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from log_analysis_system_spark.queries import QUERIES, load_all
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, above_cache
 
 load_all()
 
@@ -40,10 +40,14 @@ def test_area_top3_all_dims_broadcast(spark):
 
 
 def test_top10_category_is_take_ordered(spark):
-    plan = plan_of(spark, "top10_category")
-    # global top-k must compile to TakeOrderedAndProject (heap), not a full sort
+    # Above the cached session base, whose window sort runs once per snapshot:
+    # the global top-k must compile to TakeOrderedAndProject (heap), not a
+    # full sort, and the category is read from the base, not parsed per call.
+    plan = above_cache(plan_of(spark, "top10_category"))
     assert "TakeOrderedAndProject" in plan
     assert "Sort " not in plan
+    assert "get_json_object" not in plan
+    assert "get_json_object" not in above_cache(plan_of(spark, "top10_session_per_category"))
 
 
 def test_session_filter_broadcasts_user_dim(spark):
@@ -65,10 +69,10 @@ def test_order_priority_semi_join(spark):
 
 def test_no_cartesian_products_anywhere(spark):
     """Cross joins are only legitimate where a tiny broadcast side is crossed
-    deliberately (funnel start_pv single row, ANN query set)."""
+    deliberately (the ANN query set)."""
     from tests.conftest import gate_query_names
 
-    allowed_cross = {"funnel", "ann_brute_topk"}
+    allowed_cross = {"ann_brute_topk"}
     for name in gate_query_names():
         if name in allowed_cross:
             continue
@@ -515,7 +519,7 @@ def _stratified_plans(spark):
         dfs["user_visit_action"], dfs["user_info"], TaskParams()
     )["session_random_extract"]
     plans = {
-        "stratified_sample": (plan_of(spark, "stratified_sample"), "[date_key, hour_key]"),
+        "stratified_sample": (above_cache(plan_of(spark, "stratified_sample")), "[date_key, hour_key]"),
         "session_random_extract": (
             extract._jdf.queryExecution().executedPlan().toString(),
             "[date, hour_key]",
@@ -530,7 +534,8 @@ def test_stratified_rank_ships_a_partial_top_k(spark):
     on the bare (day, hour) stratum is fed by an exchange whose map side is
     a ``WindowGroupLimit … Partial``, so each map task ships at most
     ``per_parent`` rows per stratum. Any other window (the day total of the
-    quotas) reads the stratum-count aggregate, never data rows."""
+    quotas) reads the stratum-count aggregate, never data rows. The registry
+    path is read above the session base it scans."""
     import re
 
     for name, (plan, stratum) in _stratified_plans(spark).items():
